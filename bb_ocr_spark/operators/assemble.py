@@ -32,9 +32,6 @@ from pyspark.sql import functions as F
 
 from .. import config
 
-EXPLODED_COLS = ("doc_id", "kind", "text", "media_ref", "offset")
-
-
 def explode_spans(documents_interleaved: DataFrame) -> DataFrame:
     """(doc_id, spans[]) → one row per span + n_spans (for salting).
 
@@ -115,15 +112,10 @@ def with_span_counts(exploded: DataFrame) -> DataFrame:
 
 
 def filter_spans(exploded: DataFrame) -> DataFrame:
-    """Row-level analog of the inline keep-predicate (P1-P4 + classifier):
-    apply BEFORE assembly so dropped spans never shuffle."""
-    from .extract import is_boilerplate_text_col, normalize_text_col
+    """Row-level form of the inline keep rule (the same `keep_span_pred`
+    and `kept_text_col`): apply BEFORE assembly so dropped spans never
+    shuffle."""
+    from .extract import keep_span_pred, kept_text_col
 
-    nonblank = F.col("text").isNotNull() & (F.trim("text") != "")
-    keep = (F.col("kind") == "media") | (
-        (F.col("kind") == "text") & nonblank & ~is_boilerplate_text_col(F.col("text"))
-    )
-    return exploded.filter(keep).withColumn(
-        "text",
-        F.when(F.col("kind") == "text", normalize_text_col(F.col("text"))),
-    )
+    span = F.struct("kind", "text")
+    return exploded.filter(keep_span_pred(span)).withColumn("text", kept_text_col(span))

@@ -67,12 +67,17 @@ def normalize_text_col(text: Column) -> Column:
 
 
 def keep_span_pred(s: Column) -> Column:
-    """True for spans that survive main-content extraction."""
+    """True for spans (structs with `kind` and `text`) that survive."""
     # contains-a-non-ws-char == trim(text) != '', without the trim allocation
     nonblank = s["text"].isNotNull() & s["text"].rlike(r"[^ \t\n\r]")
     return (s["kind"] == "media") | (
         (s["kind"] == "text") & nonblank & ~is_boilerplate_text_col(s["text"])
     )
+
+
+def kept_text_col(s: Column) -> Column:
+    """A kept span's text: normalized for text, NULL for media (oracle)."""
+    return F.when(s["kind"] == "text", normalize_text_col(s["text"]))
 
 
 def extracted_spans_col(spans: Column) -> Column:
@@ -87,7 +92,7 @@ def extracted_spans_col(spans: Column) -> Column:
         lambda s: F.struct(
             s["offset"].alias("offset"),
             s["kind"].alias("kind"),
-            normalize_text_col(s["text"]).alias("text"),
+            kept_text_col(s).alias("text"),
             s["media_ref"].alias("media_ref"),
         ),
     )

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from ..functions.sampling import split_col
 from ..functions.scrub import pii_scrub_col
 from ..functions.text import fingerprint_md5_col, quality_cols, token_count_col
-from .snapshots import commit_snapshot, current_snapshot
+from .snapshots import commit_snapshot, current_snapshot, run_dir
 
 FP_DIR = "fingerprints"
 
@@ -298,7 +298,7 @@ def run_incremental_curation(
         token_count_col(F.col("text")).cast("bigint").alias("n_tokens"),
         split_col(F.col("id")).alias("split"),
     )
-    run_results = os.path.join(state_dir, "results", f"run_id={run_id}")
+    run_results = run_dir(state_dir, run_id)
     _rewrite(curated, run_results)
     committed = spark.read.parquet(run_results)  # lineage from durable data
     _rewrite(

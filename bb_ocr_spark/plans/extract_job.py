@@ -12,24 +12,26 @@ Layout (plain parquet standing in for Iceberg — jars not in this image;
 
     <output_dir>/results/run_id=<run>/   doc_id, spans, checksum, part_id
     <output_dir>/metrics/run_id=<run>/   per-partition lineage rows
+    <output_dir>/snapshots/snap-<n>.json manifests of committed runs
 
-Commit protocol: results are written first (Spark's file-commit makes the
-run directory appear atomically on rename); metrics are then derived from a
-COLUMN-PRUNED re-scan of the committed results (doc_id/checksum/part_id
-only — a tiny fraction of the bytes), so lineage always reflects durable
-data — a crash between the two writes leaves committed results that the
-next run's metrics pass will simply re-derive. Resume reads doc_id across
-all committed run dirs; the anti-join is a plain equi-join Catalyst
-executes as sort-merge (or broadcast when the completed set is small).
+Commit protocol: results write, metrics write, then the snapshot manifest
+(plans/snapshots.py), the ONLY commit point. Resume, read_results and
+read_metrics see exactly the runs the current manifest lists, so a run that
+crashed before its manifest landed is invisible and the next run
+re-extracts its docs. The anti-join is a plain equi-join Catalyst executes
+as sort-merge (or broadcast when the completed set is small).
 
-Per-task wall time comes from a SparkListener scoped to the commit job's
-job group (plans/task_metrics.py) — the scheduler's own TaskEnd durations,
-joined onto the lineage rows by partition id; the run-level wall clock is
-kept alongside (and is the fallback when the listener cannot attach).
+Lineage is ONE aggregation over the committed run, re-read with its known
+schema (no inference job): its per-partition rows are the metrics rows,
+their sum the run's n_docs, their xor the manifest's run checksum. Per-task
+wall time comes from a SparkListener scoped to the commit job's job group
+(plans/task_metrics.py), merged onto the rows by partition id; the
+run-level wall clock is kept alongside.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
 import time
 import uuid
@@ -37,37 +39,39 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import checksum_spans_col, extract_inline
-from .snapshots import commit_snapshot
+from ..operators.extract import OUT_SCHEMA_DDL, checksum_spans_col, extract_inline
+from .snapshots import RESULTS_DIR, commit_snapshot, current_snapshot, run_dir
 from .task_metrics import per_task_durations
 
-RESULTS = "results"
 METRICS = "metrics"
+# a results run dir's files (batch and streaming runs); no inference job
+RESULTS_SCHEMA = f"{OUT_SCHEMA_DDL}, checksum bigint, part_id int"
+METRICS_SCHEMA = (
+    "part_id int, doc_id_min string, doc_id_max string, n_docs bigint, n_spans bigint, "
+    "checksum bigint, wall_time_ms int, committed_at timestamp, task_wall_ms bigint"
+)
 
 
-def _results_root(output_dir: str) -> str:
-    return os.path.join(output_dir, RESULTS)
+def _committed_runs(output_dir: str) -> list[str]:
+    snap = current_snapshot(output_dir)
+    return snap["run_ids"] if snap else []
+
+
+def _read_runs(spark: SparkSession, output_dir: str, run_ids: list[str]) -> DataFrame:
+    """Result rows of the given runs, with their run_id partition column."""
+    return (
+        spark.read.schema(f"{RESULTS_SCHEMA}, run_id string")
+        .option("basePath", os.path.join(output_dir, RESULTS_DIR))
+        .parquet(*(run_dir(output_dir, r) for r in run_ids))
+    )
 
 
 def completed_doc_ids(spark: SparkSession, output_dir: str) -> DataFrame | None:
-    """doc_ids already extracted across all COMMITTED runs (None if none).
-
-    Only run dirs carrying the job-commit marker (_SUCCESS) count: a run
-    that crashed between task and job commit must look incomplete so its
-    docs are re-extracted, never silently skipped. (With Iceberg this is
-    the snapshot boundary; on plain files the marker plays that role.)"""
-    root = _results_root(output_dir)
-    if not os.path.isdir(root):  # first run (local FS; catalog check on Iceberg)
-        return None
-    committed = [
-        os.path.join(root, d)
-        for d in os.listdir(root)
-        if d.startswith("run_id=")
-        and os.path.exists(os.path.join(root, d, "_SUCCESS"))
-    ]
-    if not committed:
-        return None
-    return spark.read.parquet(*committed).select("doc_id")
+    """doc_ids of the runs the current snapshot lists (None before the
+    first commit). A run that crashed before its manifest was published is
+    not listed, so its docs are re-extracted, never silently skipped."""
+    run_ids = _committed_runs(output_dir)
+    return _read_runs(spark, output_dir, run_ids).select("doc_id") if run_ids else None
 
 
 def run_extract_job(
@@ -78,14 +82,15 @@ def run_extract_job(
 ) -> dict:
     """Extract all not-yet-completed docs; commit results + lineage.
 
-    Returns run stats {run_id, n_docs, wall_ms, resumed_skipped}.
+    Returns run stats {run_id, n_docs, wall_ms, resumed_skipped,
+    snapshot_id}.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.monotonic()
 
+    parent = current_snapshot(output_dir)
     done = completed_doc_ids(spark, output_dir)
     remaining = documents_interleaved
-    skipped = 0
     if done is not None:
         # resume: left-anti on completed ids (J6 / north_rule)
         remaining = documents_interleaved.join(done, "doc_id", "left_anti")
@@ -96,66 +101,57 @@ def run_extract_job(
         .withColumn("part_id", F.spark_partition_id())
     )
 
-    run_results = os.path.join(_results_root(output_dir), f"run_id={run_id}")
+    run_results = run_dir(output_dir, run_id)
     with per_task_durations(spark, f"extract-commit-{run_id}") as task_ms:
         extracted.write.mode("errorifexists").parquet(run_results)
-
-    # lineage from the COMMITTED files, light columns only (column pruning
-    # keeps this scan tiny relative to the span payload)
-    committed = spark.read.parquet(run_results).select(
-        "doc_id", "checksum", "part_id", F.size("spans").alias("n_spans")
-    )
     wall_ms = int((time.monotonic() - t0) * 1000)
-    metrics = (
-        committed.groupBy("part_id")
+
+    # lineage from the COMMITTED files, column-pruned to light columns
+    parts = (
+        spark.read.schema(RESULTS_SCHEMA)
+        .parquet(run_results)
+        .groupBy("part_id")
         .agg(
             F.min("doc_id").alias("doc_id_min"),
             F.max("doc_id").alias("doc_id_max"),
             F.count("*").alias("n_docs"),
-            F.sum("n_spans").alias("n_spans"),
+            F.sum(F.size("spans")).alias("n_spans"),
             # order-insensitive partition checksum (xor: no ANSI overflow)
             F.expr("bit_xor(checksum)").alias("checksum"),
         )
-        .withColumn("wall_time_ms", F.lit(wall_ms))
-        .withColumn("committed_at", F.current_timestamp())
+        .collect()
     )
-    if task_ms:
-        # scheduler-reported per-task duration for the commit job, joined
-        # by partition index (narrow plan: write-task index == part_id);
-        # the tiny map is broadcast
-        tm = spark.createDataFrame(
-            [(int(k), int(v)) for k, v in task_ms.items()],
-            "part_id int, task_wall_ms bigint",
-        )
-        metrics = metrics.join(F.broadcast(tm), "part_id", "left")
-    else:  # listener unavailable: keep schema stable
-        metrics = metrics.withColumn("task_wall_ms", F.lit(None).cast("bigint"))
-    # run_id comes from the partition directory on read-back (a literal
-    # column here would collide with the inferred partition column)
+    # task_ms is keyed by write-task index == part_id (narrow plan)
+    now = datetime.datetime.now(datetime.timezone.utc)
+    rows = [(*p, wall_ms, now, task_ms.get(p.part_id)) for p in parts]
+    # no run_id column: the partition directory supplies it on read-back
     run_metrics = os.path.join(output_dir, METRICS, f"run_id={run_id}")
+    metrics = spark.createDataFrame(rows, METRICS_SCHEMA)
     metrics.write.mode("errorifexists").parquet(run_metrics)
 
-    n_docs = committed.count()
-    if done is not None:
-        skipped = done.count()
-    # snapshot commit (Iceberg-analog): manifest chains to the parent and
-    # manifests publish via an os.link CAS; readers resolve the max
-    # on-disk manifest (CURRENT is a debug hint only) — time-travel readers see
-    # exactly the runs committed at a snapshot (plans/snapshots.py)
-    run_ck = committed.selectExpr("bit_xor(checksum)").collect()[0][0]
-    snap = commit_snapshot(output_dir, run_id, n_docs, run_ck or 0)
+    n_docs, run_ck = 0, 0
+    for p in parts:
+        n_docs, run_ck = n_docs + p.n_docs, run_ck ^ p.checksum
+    snap = commit_snapshot(output_dir, run_id, n_docs, run_ck)
     return {
         "run_id": run_id,
         "n_docs": n_docs,
         "wall_ms": int((time.monotonic() - t0) * 1000),
-        "resumed_skipped": skipped,
+        "resumed_skipped": parent["n_docs_total"] if parent else 0,
         "snapshot_id": snap["snapshot_id"],
     }
 
 
 def read_results(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.parquet(_results_root(output_dir))
+    """Result rows of the runs the current snapshot lists."""
+    return _read_runs(spark, output_dir, _committed_runs(output_dir))
 
 
 def read_metrics(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(output_dir, METRICS))
+    """Lineage rows of the runs the current snapshot lists (streaming runs
+    write none)."""
+    return (
+        spark.read.schema(f"{METRICS_SCHEMA}, run_id string")
+        .parquet(os.path.join(output_dir, METRICS))
+        .filter(F.col("run_id").isin(_committed_runs(output_dir)))
+    )

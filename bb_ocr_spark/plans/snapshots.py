@@ -15,9 +15,9 @@ image lacks — `sources.tables.have_iceberg` gates the real binding):
     <output_dir>/snapshots/CURRENT         human-readable hint; readers
                                            resolve the max manifest
 
-Time travel = read exactly the run dirs a manifest lists. A run directory
-that crashed before its snapshot commit is invisible to snapshot readers
-(and the resume anti-join already ignores it via the _SUCCESS marker).
+Time travel = read exactly the run dirs a manifest lists; the extraction
+job's resume and readers use the current manifest the same way. A run
+directory that crashed before its snapshot commit is invisible to them all.
 """
 
 from __future__ import annotations
@@ -29,6 +29,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 SNAP_DIR = "snapshots"
+RESULTS_DIR = "results"
 
 # how long an unparsable snap file may stay unparsable before the probe
 # treats its reserver as crashed and mints past it (reserve -> replace is
@@ -38,6 +39,11 @@ RESERVATION_GRACE_S = 2.0
 
 def _snap_dir(output_dir: str) -> str:
     return os.path.join(output_dir, SNAP_DIR)
+
+
+def run_dir(output_dir: str, run_id: str) -> str:
+    """A run's results directory, as its manifest entry names it."""
+    return os.path.join(output_dir, RESULTS_DIR, f"run_id={run_id}")
 
 
 def current_snapshot(output_dir: str) -> dict | None:
@@ -287,8 +293,4 @@ def read_results_as_of(
     path = os.path.join(_snap_dir(output_dir), f"snap-{snapshot_id:06d}.json")
     with open(path) as f:
         manifest = json.load(f)
-    dirs = [
-        os.path.join(output_dir, "results", f"run_id={r}")
-        for r in manifest["run_ids"]
-    ]
-    return spark.read.parquet(*dirs)
+    return spark.read.parquet(*(run_dir(output_dir, r) for r in manifest["run_ids"]))

@@ -12,13 +12,14 @@ callback server. Spark's listener bus calls ~30 event methods; a
 __getattr__ catch-all no-ops everything except onJobStart (captures the
 stage ids of jobs in our group) and onTaskEnd (records per-partition task
 duration). Events are posted asynchronously, so collection waits for the
-bus to drain before reading. Everything is wrapped in a fallback: if the
-callback server cannot start (restricted envs), the context yields an
-empty mapping and callers keep the run-level clock.
+bus to drain before reading. If the callback server cannot start
+(restricted envs), the context logs a warning and yields an empty mapping;
+callers keep the run-level clock.
 """
 
 from __future__ import annotations
 
+import logging
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -87,8 +88,8 @@ def per_task_durations(spark: SparkSession, group: str):
     filled into the yielded dict AFTER the block exits (the dict is empty
     during the block — the listener bus is drained at exit). With several
     actions inside, only the LAST job's result stage is kept — wrap each
-    action in its own context instead. Yields an empty dict and degrades
-    silently if the py4j callback server is unavailable."""
+    action in its own context instead. Yields an empty dict and logs a
+    warning if the py4j callback server is unavailable."""
     sc = spark.sparkContext
     listener = _TaskTimeListener(group)
     attached = False
@@ -98,8 +99,8 @@ def per_task_durations(spark: SparkSession, group: str):
         ensure_callback_server_started(sc._gateway)
         sc._jsc.sc().addSparkListener(listener)
         attached = True
-    except Exception:
-        pass
+    except Exception as e:  # noqa: BLE001
+        logging.getLogger(__name__).warning("task-time listener not attached: %s", e)
     sc.setJobGroup(group, f"task-timed job group {group}")
     out: dict[int, int] = {}
     try:
@@ -117,6 +118,7 @@ def per_task_durations(spark: SparkSession, group: str):
             out.update(listener.final_durations())
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
         if attached:
             try:
                 sc._jsc.sc().removeSparkListener(listener)

@@ -51,17 +51,15 @@ def commit_batch(
       - run_id already in the snapshot chain: commit_snapshot returns the
         existing manifest instead of appending a duplicate entry.
     """
-    import os  # noqa: PLC0415
-
     from pyspark.sql import functions as F  # noqa: PLC0415
 
-    from ..plans.snapshots import commit_snapshot, write_run_once  # noqa: PLC0415
+    from ..plans.snapshots import commit_snapshot, run_dir, write_run_once  # noqa: PLC0415
 
-    run_dir = os.path.join(output_dir, "results", f"run_id={run_id}")
+    out_dir = run_dir(output_dir, run_id)
     write_run_once(
-        batch_df.withColumn("part_id", F.spark_partition_id()), run_dir
+        batch_df.withColumn("part_id", F.spark_partition_id()), out_dir
     )
-    committed = spark.read.parquet(run_dir)  # lineage from durable data
+    committed = spark.read.parquet(out_dir)  # lineage from durable data
     row = committed.selectExpr(
         "count(*) AS n", "bit_xor(checksum) AS ck"
     ).collect()[0]

@@ -11,24 +11,47 @@ from bb_ocr_spark.operators.assemble import (
     filter_spans,
     with_span_counts,
 )
+from bb_ocr_spark.operators.extract import extract_inline
 
 N_DOCS = 60  # includes mega-doc i=7
 
+# a text span of ASCII whitespace other than 0x20 (blank, so dropped before
+# the classifier divides by its token count) and a media span carrying a
+# caption (kept, emitted with NULL text)
+KEEP_RULE_DOC = (
+    "doc_keep_rule",
+    [
+        {"kind": "text", "text": "\t\n", "media_ref": None, "offset": 0},
+        {"kind": "media", "text": "a caption", "media_ref": "media://k/1", "offset": 1},
+        {"kind": "text", "text": "Plain body text follows.", "media_ref": None, "offset": 2},
+    ],
+)
+
+
+def _seq(spans):
+    return [(s["kind"], s["text"], s["media_ref"]) for s in spans]
+
 
 def test_salted_assembly_matches_oracle(spark):
-    df = datagen.generate_df(spark, N_DOCS, partitions=6)
+    docs = dict(datagen.gen_doc(i) for i in range(N_DOCS))
+    docs[KEEP_RULE_DOC[0]] = KEEP_RULE_DOC[1]
+    extra = spark.createDataFrame(
+        [(KEEP_RULE_DOC[0], [tuple(s.values()) for s in KEEP_RULE_DOC[1]])],
+        datagen.SPANS_SCHEMA_DDL,
+    )
+    df = datagen.generate_df(spark, N_DOCS, partitions=6).unionByName(extra)
     exploded = filter_spans(explode_spans(df))
     # tiny threshold/buckets so salting engages on many docs, not just mega
     out = assemble_spans(exploded, salt_threshold=8, salt_buckets=4)
     got = {r["doc_id"]: r["spans"] for r in out.collect()}
-    for i in range(N_DOCS):
-        did = datagen.doc_id_of(i)
-        want = oracle.extract_doc(datagen.gen_doc(i)[1])
+    inline = {r["doc_id"]: r["spans"] for r in extract_inline(df).collect()}
+    for did, spans in docs.items():
+        want = oracle.extract_doc(spans)
+        assert _seq(inline[did]) == want, f"inline extraction mismatch for {did}"
         if not want:  # groupBy drops docs with zero kept spans
             assert did not in got or got[did] == []
             continue
-        seq = [(s["kind"], s["text"], s["media_ref"]) for s in got[did]]
-        assert seq == want, f"salted assembly mismatch for {did}"
+        assert _seq(got[did]) == want, f"salted assembly mismatch for {did}"
 
 
 def test_mega_doc_salting_engaged(spark):
@@ -40,7 +63,7 @@ def test_mega_doc_salting_engaged(spark):
     out = assemble_spans(filter_spans(exploded))  # default threshold 512
     row = out.filter(out.doc_id == datagen.doc_id_of(7)).collect()[0]
     want = oracle.extract_doc(datagen.gen_doc(7)[1])
-    assert [(s["kind"], s["text"], s["media_ref"]) for s in row["spans"]] == want
+    assert _seq(row["spans"]) == want
 
 
 def test_with_span_counts(spark):
