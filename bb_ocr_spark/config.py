@@ -77,8 +77,9 @@ ANY_TAG_RE = r"<[^>]*>"
 LINK_DENSITY_HTML_MAX = 0.34
 
 # --- skew handling --------------------------------------------------------
-# docs with more spans than this use salted two-phase assembly when the
-# input arrives as exploded span rows (operators/assemble.py)
+# when the input arrives as exploded span rows (operators/assemble.py),
+# rows of docs with more spans than this spread over ASSEMBLY_SALT_BUCKETS
+# phase-1 buckets; every other doc's rows share one bucket
 BIG_DOC_SPAN_THRESHOLD = 512
 ASSEMBLY_SALT_BUCKETS = 16
 

@@ -594,12 +594,14 @@ def paragraph_dedup(
 
     Scale shape: explode → aggregate winners on the 8-byte paragraph HASH
     (text never shuffles for the winner pass) → hash-join back → rebuild
-    per doc. The rebuild is the same salted two-phase as
+    per doc. The rebuild is the same single salted two-phase as
     assemble.assemble_spans: a mega-doc with 10^6 paragraphs would make
     one collect_list reducer the straggler/OOM, so docs over
-    salt_threshold paragraphs aggregate per (id, pos % salt_buckets)
-    first and flatten per id second — the second shuffle moves ~#docs ×
-    salt_buckets pre-assembled sub-arrays, not #paragraph rows. The salt
+    salt_threshold paragraphs aggregate per (id, pos % salt_buckets),
+    every other doc per (id, 0), and phase 2 flattens and sorts per id.
+    One aggregation instead of a small/big union means the split,
+    explode, normalize and winners join run once, not once per branch;
+    small docs' sub-arrays cross the second shuffle in exchange. The salt
     decision is row-local: n_paras is folded into each row at explode
     time from the materialized split array (a separate size() projection
     would be collapsed past the Generate and every exploded row would
@@ -634,32 +636,21 @@ def paragraph_dedup(
         "keep", (F.col("id") == F.col("w.id")) & (F.col("pos") == F.col("w.pos"))
     )
     kept_struct = F.when(F.col("keep"), F.struct("pos", "para"))
-    small = (
-        kept.filter(F.col("n_paras") <= salt_threshold)
-        .groupBy("id")
-        .agg(
-            F.array_sort(F.collect_list(kept_struct)).alias("ps"),
-            F.sum(F.col("keep").cast("long")).alias("n_kept"),
-            F.sum((~F.col("keep")).cast("long")).alias("n_dropped"),
-        )
+    salt = F.when(
+        F.col("n_paras") > salt_threshold, F.pmod("pos", F.lit(salt_buckets))
+    ).otherwise(0)
+    phase1 = kept.groupBy("id", salt.alias("salt")).agg(
+        F.collect_list(kept_struct).alias("part"),
+        F.sum(F.col("keep").cast("long")).alias("k1"),
+        F.sum((~F.col("keep")).cast("long")).alias("d1"),
     )
-    phase1 = (
-        kept.filter(F.col("n_paras") > salt_threshold)
-        .withColumn("salt", F.pmod(F.col("pos"), F.lit(salt_buckets)))
-        .groupBy("id", "salt")
-        .agg(
-            F.collect_list(kept_struct).alias("part"),
-            F.sum(F.col("keep").cast("long")).alias("k1"),
-            F.sum((~F.col("keep")).cast("long")).alias("d1"),
-        )
-    )
-    big = phase1.groupBy("id").agg(
+    rebuilt = phase1.groupBy("id").agg(
         # ONE global per-doc sort — order correctness under salting
         F.array_sort(F.flatten(F.collect_list("part"))).alias("ps"),
         F.sum("k1").alias("n_kept"),
         F.sum("d1").alias("n_dropped"),
     )
-    return small.unionByName(big).select(
+    return rebuilt.select(
         "id",
         F.array_join(F.transform("ps", lambda p: p["para"]), sep).alias(
             "text_dedup"

@@ -4,6 +4,8 @@ preserves GLOBAL per-doc offset order (SURVEY §7 hard part)."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from bb_ocr_spark import datagen, oracle
 from bb_ocr_spark.operators.assemble import (
     assemble_spans,
@@ -64,6 +66,32 @@ def test_mega_doc_salting_engaged(spark):
     row = out.filter(out.doc_id == datagen.doc_id_of(7)).collect()[0]
     want = oracle.extract_doc(datagen.gen_doc(7)[1])
     assert _seq(row["spans"]) == want
+
+
+def test_null_span_counts_are_assembled(spark):
+    # a producer that lost n_spans on some rows (every third offset, and
+    # every row of doc 1) must still get those spans assembled: NULL
+    # fails both `<= threshold` and `> threshold`, so it must not decide
+    # whether a row is kept
+    df = datagen.generate_df(spark, 8, partitions=2)
+    lossy = explode_spans(df).withColumn(
+        "n_spans",
+        F.when(
+            (F.col("offset") % 3 != 0) & (F.col("doc_id") != datagen.doc_id_of(1)),
+            F.col("n_spans"),
+        ),
+    )
+    assert lossy.filter(F.col("n_spans").isNull()).count() > 0
+    kept = filter_spans(lossy)
+    got = {r["doc_id"]: r["spans"] for r in assemble_spans(kept).collect()}
+    for i in range(8):
+        did, spans = datagen.gen_doc(i)
+        want = oracle.extract_doc(spans)
+        if want:
+            assert _seq(got[did]) == want, f"NULL n_spans rows lost for {did}"
+    # every doc salted: NULL rows share salt 0 with nothing else changed
+    salted = assemble_spans(kept, salt_threshold=0)
+    assert {r["doc_id"]: r["spans"] for r in salted.collect()} == got
 
 
 def test_with_span_counts(spark):

@@ -73,7 +73,7 @@ def test_mega_doc_both_paths(spark):
 def test_mega_doc_paragraph_dedup_salted(spark):
     # a 10^5-paragraph doc must rebuild through the salted two-phase path
     # (its rows exceed salt_threshold) with exact first-occurrence
-    # semantics; a small doc sharing paragraphs rides the plain path
+    # semantics; a small doc sharing paragraphs takes the single salt-0 bucket
     n = 100_000
     mega_paras = [f"para {i} tok{i % 977}" for i in range(n)]
     # plant within-doc repeats: every 1000th paragraph duplicates para 0

@@ -55,6 +55,22 @@ def test_dim_join_is_broadcast(spark, sf_dir):
     assert "BroadcastHashJoin" in p, "small dims should broadcast"
 
 
+def test_exploded_assembly_scans_once(spark):
+    """Every doc takes one salted two-phase aggregation: the input is
+    exploded (and run through the keep kernel) once, with no small/big
+    branch union re-scanning it."""
+    from bb_ocr_spark.operators.assemble import (
+        assemble_spans,
+        explode_spans,
+        filter_spans,
+    )
+
+    df = datagen.generate_df(spark, 8, partitions=2)
+    p = plan_of(assemble_spans(filter_spans(explode_spans(df))))
+    assert p.count("Generate") == 1, p
+    assert "Union" not in p, p
+
+
 def test_anti_join_resume_shape(spark, tmp_path):
     from bb_ocr_spark.plans.extract_job import run_extract_job, completed_doc_ids
 
