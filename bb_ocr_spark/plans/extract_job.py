@@ -22,11 +22,11 @@ re-extracts its docs. The anti-join is a plain equi-join Catalyst executes
 as sort-merge (or broadcast when the completed set is small).
 
 Lineage is ONE aggregation over the committed run, re-read with its known
-schema (no inference job): its per-partition rows are the metrics rows,
-their sum the run's n_docs, their xor the manifest's run checksum. Per-task
-wall time comes from a SparkListener scoped to the commit job's job group
-(plans/task_metrics.py), merged onto the rows by partition id; the
-run-level wall clock is kept alongside.
+schema (no inference job) and written as the metrics rows without leaving
+Spark; observe() on that write sums and xors the rows into the run's n_docs
+and the manifest's run checksum. Per-task wall time from a SparkListener
+scoped to the commit job group (plans/task_metrics.py) is looked up by
+partition id in a literal map, NULL without the listener.
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import OUT_SCHEMA_DDL, checksum_spans_col, extract_inline
@@ -106,8 +106,11 @@ def run_extract_job(
         extracted.write.mode("errorifexists").parquet(run_results)
     wall_ms = int((time.monotonic() - t0) * 1000)
 
-    # lineage from the COMMITTED files, column-pruned to light columns
-    parts = (
+    # lineage from the COMMITTED files; its rows never leave Spark
+    totals = Observation()
+    # task_ms is keyed by write-task index == part_id (narrow plan)
+    task_map = F.create_map(*(F.lit(v) for kv in task_ms.items() for v in kv))
+    metrics = (
         spark.read.schema(RESULTS_SCHEMA)
         .parquet(run_results)
         .groupBy("part_id")
@@ -117,21 +120,22 @@ def run_extract_job(
             F.count("*").alias("n_docs"),
             F.sum(F.size("spans")).alias("n_spans"),
             # order-insensitive partition checksum (xor: no ANSI overflow)
-            F.expr("bit_xor(checksum)").alias("checksum"),
+            F.bit_xor("checksum").alias("checksum"),
         )
-        .collect()
+        .select(
+            "*",
+            F.lit(wall_ms).cast("int").alias("wall_time_ms"),
+            F.lit(datetime.datetime.now(datetime.timezone.utc)).alias("committed_at"),
+            F.element_at(task_map, F.col("part_id")).cast("bigint").alias("task_wall_ms"),
+        )
+        # result stage (no Exchange above): retried tasks' totals count once
+        .observe(totals, F.sum("n_docs").alias("n_docs"), F.bit_xor("checksum").alias("ck"))
     )
-    # task_ms is keyed by write-task index == part_id (narrow plan)
-    now = datetime.datetime.now(datetime.timezone.utc)
-    rows = [(*p, wall_ms, now, task_ms.get(p.part_id)) for p in parts]
     # no run_id column: the partition directory supplies it on read-back
     run_metrics = os.path.join(output_dir, METRICS, f"run_id={run_id}")
-    metrics = spark.createDataFrame(rows, METRICS_SCHEMA)
     metrics.write.mode("errorifexists").parquet(run_metrics)
 
-    n_docs, run_ck = 0, 0
-    for p in parts:
-        n_docs, run_ck = n_docs + p.n_docs, run_ck ^ p.checksum
+    n_docs, run_ck = (totals.get[k] or 0 for k in ("n_docs", "ck"))  # NULL if empty
     snap = commit_snapshot(output_dir, run_id, n_docs, run_ck)
     return {
         "run_id": run_id,

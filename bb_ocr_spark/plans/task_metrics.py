@@ -14,15 +14,21 @@ stage ids of jobs in our group) and onTaskEnd (records per-partition task
 duration). Events are posted asynchronously, so collection waits for the
 bus to drain before reading. If the callback server cannot start
 (restricted envs), the context logs a warning and yields an empty mapping;
-callers keep the run-level clock.
+callers keep the run-level clock. An undrained bus is warned about too.
 """
 
 from __future__ import annotations
 
 import logging
+import time
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+
+def _drain_listener_bus(sc) -> None:
+    """Wait up to 10 s for queued listener events; raises on a timeout."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
 
 
 class _TaskTimeListener:
@@ -108,10 +114,10 @@ def per_task_durations(spark: SparkSession, group: str):
         if attached:
             # listener bus is async; drain before reading durations
             try:
-                sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-            except Exception:
-                import time  # noqa: PLC0415
-
+                _drain_listener_bus(sc)
+            except Exception as e:  # noqa: BLE001
+                msg = "listener bus not drained for job group %s: %s"
+                logging.getLogger(__name__).warning(msg, group, e)
                 time.sleep(0.5)
             # resolve AFTER the drain: the last job's result stage is the
             # write stage of the action run inside the context

@@ -5,8 +5,13 @@ happened is invisible to resume and readers."""
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from bb_ocr_spark import datagen
 from bb_ocr_spark.plans import extract_job
@@ -61,6 +66,11 @@ def test_resume_and_lineage(spark, tmp_path):
     tk = m.select("task_wall_ms", "wall_time_ms").collect()
     assert all(r["task_wall_ms"] is not None for r in tk)
     assert all(0 < r["task_wall_ms"] <= r["wall_time_ms"] for r in tk)
+    for run_id in ("r1", "r2"):
+        _assert_lineage_matches_manifest(spark, out, run_id)
+    # the files carry METRICS_SCHEMA's types in its column order
+    written = spark.read.parquet(str(tmp_path / "job" / "metrics" / "run_id=r2")).schema
+    assert written.simpleString() == StructType.fromDDL(extract_job.METRICS_SCHEMA).simpleString()
 
 
 def test_crash_before_snapshot_commit(spark, tmp_path, monkeypatch):
@@ -92,19 +102,73 @@ def test_crash_before_snapshot_commit(spark, tmp_path, monkeypatch):
     m = read_metrics(spark, out)
     assert tuple(m.agg(F.sum("n_docs"), F.expr("bit_xor(checksum)")).first()) == (N, res_ck)
     assert {r["run_id"] for r in m.select("run_id").distinct().collect()} == {"r2"}
+    _assert_lineage_matches_manifest(spark, out, "r2")
 
 
 def test_resumed_run_job_count(spark, tmp_path):
     # outside its commit job group, a resumed run starts only the lineage
-    # aggregation (map and result stage) and the metrics write: the resume
-    # listing and the post-write re-read pass a schema, so neither infers one
+    # aggregation's map stage and the metrics write, which runs its result
+    # stage and observes the run totals: the resume listing and the
+    # post-write re-read pass a schema, so neither infers one
     sc = spark.sparkContext
     out = str(tmp_path / "job")
     full = datagen.generate_df(spark, N, partitions=4)
     run_extract_job(spark, full.filter(f"doc_id < '{datagen.doc_id_of(N // 2)}'"), out)
     before = set(sc.statusTracker().getJobIdsForGroup(None))
     run_extract_job(spark, full, out)
-    assert len(set(sc.statusTracker().getJobIdsForGroup(None)) - before) <= 3
+    assert len(set(sc.statusTracker().getJobIdsForGroup(None)) - before) <= 2
+
+
+def _assert_lineage_matches_manifest(spark, out, run_id):
+    """The run's metrics rows sum and xor to what its manifest adds."""
+    snaps = {}
+    for path in glob.glob(os.path.join(out, "snapshots", "snap-*.json")):
+        with open(path) as f:
+            snap = json.load(f)
+        snaps[snap["snapshot_id"]] = snap
+    snap = next(s for s in snaps.values() if s["run_ids"][-1] == run_id)
+    parent = snaps.get(snap["parent_id"])
+    added = snap["n_docs_total"] - (parent["n_docs_total"] if parent else 0)
+    m = read_metrics(spark, out).filter(F.col("run_id") == run_id)
+    n, ck = m.agg(F.sum("n_docs"), F.expr("bit_xor(checksum)")).first()
+    assert (n or 0, ck or 0) == (added, snap["run_checksum"])
+
+
+def test_resumed_run_ships_no_driver_rows(spark, tmp_path, monkeypatch):
+    # the lineage rows and run totals stay in Spark: a resumed run commits
+    # even when no local rows can be turned into a DataFrame
+    from pyspark.sql import SparkSession
+
+    out = str(tmp_path / "job")
+    full = datagen.generate_df(spark, N, partitions=4)
+    run_extract_job(spark, full.filter(f"doc_id < '{datagen.doc_id_of(N // 2)}'"), out, "r1")
+
+    def no_local_rows(*args, **kwargs):
+        raise AssertionError("driver-side rows shipped into Spark")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_local_rows)
+    s = run_extract_job(spark, full, out, run_id="r2")
+    assert (s["n_docs"], s["snapshot_id"]) == (N - N // 2, 2)
+    assert current_snapshot(out)["n_docs_total"] == N
+    _assert_lineage_matches_manifest(spark, out, "r2")
+
+
+def test_run_without_listener_commits(spark, tmp_path, monkeypatch):
+    # no per-task times: the run still commits, every lineage row carries
+    # a NULL task_wall_ms and the observed totals match the lineage rows
+    import pyspark.java_gateway
+
+    def unavailable(gateway):
+        raise RuntimeError("no callback server")
+
+    monkeypatch.setattr(pyspark.java_gateway, "ensure_callback_server_started", unavailable)
+    out = str(tmp_path / "job")
+    s = run_extract_job(spark, datagen.generate_df(spark, N, partitions=4), out, run_id="r1")
+    assert s["n_docs"] == N and current_snapshot(out)["run_ids"] == ["r1"]
+    tk = read_metrics(spark, out).select("task_wall_ms", "wall_time_ms").collect()
+    assert tk and all(r["task_wall_ms"] is None for r in tk)
+    assert all(r["wall_time_ms"] > 0 for r in tk)
+    _assert_lineage_matches_manifest(spark, out, "r1")
 
 
 def test_per_task_durations_clears_job_properties(spark):
@@ -133,6 +197,21 @@ def test_per_task_durations_warns_without_listener(spark, monkeypatch, caplog):
     assert "listener not attached" in caplog.text
 
 
+def test_per_task_durations_warns_when_bus_not_drained(spark, monkeypatch, caplog):
+    from bb_ocr_spark.plans import task_metrics
+
+    def timed_out(sc):
+        raise TimeoutError("listener bus still busy")
+
+    monkeypatch.setattr(task_metrics, "_drain_listener_bus", timed_out)
+    with caplog.at_level("WARNING"):
+        with task_metrics.per_task_durations(spark, "slow-bus") as task_ms:
+            spark.range(100, numPartitions=2).write.format("noop").mode("overwrite").save()
+    assert "not drained for job group slow-bus" in caplog.text
+    # whatever arrived is still read: a subset of the write's partitions
+    assert set(task_ms) <= {0, 1}
+
+
 def test_noop_rerun(spark, tmp_path):
     out = str(tmp_path / "job")
     df = datagen.generate_df(spark, 20, partitions=2)
@@ -140,11 +219,17 @@ def test_noop_rerun(spark, tmp_path):
     s = run_extract_job(spark, df, out, run_id="b")
     assert s["n_docs"] == 0, "fully-completed input must be a no-op"
     assert read_results(spark, out).count() == 20
+    # the no-op run still commits: its manifest adds 0 docs and its
+    # lineage holds no rows
+    snap = current_snapshot(out)
+    assert snap["run_ids"] == ["a", "b"] and snap["n_docs_total"] == 20
+    assert snap["run_checksum"] == 0
+    assert read_metrics(spark, out).filter("run_id = 'b'").count() == 0
+    _assert_lineage_matches_manifest(spark, out, "a")
+    _assert_lineage_matches_manifest(spark, out, "b")
 
 
 def test_snapshot_time_travel(spark, tmp_path):
-    import os
-
     from bb_ocr_spark.plans.snapshots import current_snapshot, read_results_as_of
 
     out = str(tmp_path / "job")
@@ -158,14 +243,14 @@ def test_snapshot_time_travel(spark, tmp_path):
     # time travel: snapshot 1 sees only run a's docs
     assert read_results_as_of(spark, out, 1).count() == s1["n_docs"]
     assert read_results_as_of(spark, out, 2).count() == 60
+    _assert_lineage_matches_manifest(spark, out, "a")
+    _assert_lineage_matches_manifest(spark, out, "b")
     # a crashed (uncommitted) run directory is invisible to snapshot reads
     os.makedirs(os.path.join(out, "results", "run_id=crashed"))
     assert read_results_as_of(spark, out, 2).count() == 60
 
 
 def test_jsonl_ingestion(spark, tmp_path):
-    import json
-
     from bb_ocr_spark.sources.tables import load_documents_jsonl
 
     p = tmp_path / "corpus.jsonl"

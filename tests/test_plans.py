@@ -84,6 +84,37 @@ def test_anti_join_resume_shape(spark, tmp_path):
     # completed set is small -> broadcast anti join expected
     assert "Broadcast" in p
 
+
+def test_lineage_totals_observed_in_result_stage(spark, tmp_path, monkeypatch):
+    """The manifest's run totals are counted exactly once. Their
+    CollectMetrics sits above the lineage's final aggregate with no
+    Exchange above either, so it runs in the metrics write's result stage.
+    DAGScheduler applies a result task's accumulator updates once per
+    partition (a shuffle map task's, once per successful attempt), so a
+    retried or speculative task cannot count toward the totals twice."""
+    import re
+
+    from bb_ocr_spark.plans.extract_job import run_extract_job
+
+    writer_cls = type(spark.range(1).write)  # the session's writer implementation
+    written, parquet = [], writer_cls.parquet
+
+    def keep_written(writer, path, *args, **kwargs):
+        written.append((path, writer._df))
+        return parquet(writer, path, *args, **kwargs)
+
+    monkeypatch.setattr(writer_cls, "parquet", keep_written)
+    run_extract_job(spark, datagen.generate_df(spark, 20, partitions=2), str(tmp_path / "j"))
+    (frame,) = [df for path, df in written if "/metrics/" in path]
+    p = plan_of(frame)
+    nodes = [line.lstrip(" +-:") for line in p.splitlines()]
+    metrics = next(i for i, n in enumerate(nodes) if n.startswith("CollectMetrics"))
+    # Spark plans a sort-based aggregate here (min/max over strings)
+    final_agg = next(i for i, n in enumerate(nodes) if re.match(r"\w*Aggregate\(", n))
+    exchange = next(i for i, n in enumerate(nodes) if n.startswith("Exchange"))
+    assert metrics < final_agg < exchange, p
+
+
 def test_new_query_plan_quality(spark):
     """Plan-shape guards for the round-2 driver queries: candidate
     generation must never degrade to a cartesian/nested-loop product, and
