@@ -108,8 +108,13 @@ def run_extract_job(
 
     # lineage from the COMMITTED files; its rows never leave Spark
     totals = Observation()
-    # task_ms is keyed by write-task index == part_id (narrow plan)
-    task_map = F.create_map(*(F.lit(v) for kv in task_ms.items() for v in kv))
+    now = datetime.datetime.now(datetime.timezone.utc)
+    run = [F.lit(wall_ms).cast("int").alias("wall_time_ms"), F.lit(now).alias("committed_at")]
+    row = lambda ms=None: F.struct(*run, F.lit(ms).cast("long").alias("task_wall_ms"))  # noqa: E731
+    # run values reach generated code only in map/struct literals, held by reference (an
+    # inlined literal compiles a class per run); task_ms is keyed by write-task index == part_id
+    task_map = F.create_map(*(c for p, ms in task_ms.items() for c in (F.lit(p), row(ms))))
+    vals = F.coalesce(F.element_at(task_map, F.col("part_id")), row())  # NULL task time if missed
     metrics = (
         spark.read.schema(RESULTS_SCHEMA)
         .parquet(run_results)
@@ -122,12 +127,7 @@ def run_extract_job(
             # order-insensitive partition checksum (xor: no ANSI overflow)
             F.bit_xor("checksum").alias("checksum"),
         )
-        .select(
-            "*",
-            F.lit(wall_ms).cast("int").alias("wall_time_ms"),
-            F.lit(datetime.datetime.now(datetime.timezone.utc)).alias("committed_at"),
-            F.element_at(task_map, F.col("part_id")).cast("bigint").alias("task_wall_ms"),
-        )
+        .select("*", *(vals[c].alias(c) for c in ("wall_time_ms", "committed_at", "task_wall_ms")))
         # result stage (no Exchange above): retried tasks' totals count once
         .observe(totals, F.sum("n_docs").alias("n_docs"), F.bit_xor("checksum").alias("ck"))
     )

@@ -54,6 +54,16 @@ def get_spark(
         # local mode = one JVM; heap must cover all N executor threads'
         # aggregation buffers (mega-doc collect_list spikes)
         .config("spark.driver.memory", os.environ.get("BB_OCR_DRIVER_MEM", "64g"))
+        # C2 thresholds at 10x the JVM defaults: planner code that runs a
+        # few hundred times per job stays in C1, per-row code still reaches
+        # C2 within a task. On a resumed extraction job the C2 threads spent
+        # 1-2 s of CPU per run, still falling after ten runs, compiling
+        # Catalyst code the job ran for 0.3 s
+        .config(
+            "spark.driver.extraJavaOptions",
+            "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
+            " -XX:Tier4CompileThreshold=150000",
+        )
         .config("spark.ui.enabled", "false")
         # collect_list/collect_set aggregations fall back to sort-based
         # merging (serialize per-group buffers) after this many groups per

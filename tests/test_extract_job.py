@@ -119,6 +119,26 @@ def test_resumed_run_job_count(spark, tmp_path):
     assert len(set(sc.statusTracker().getJobIdsForGroup(None)) - before) <= 2
 
 
+def test_rerun_compiles_no_new_code(spark, tmp_path):
+    # a run's own values (wall time, commit time, task times) reach the
+    # generated code by reference, not inlined: a second identical resumed
+    # run hits the codegen cache instead of compiling a new class
+    import shutil
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    seed = str(tmp_path / "seed")
+    full = datagen.generate_df(spark, N, partitions=4)
+    run_extract_job(spark, full.filter(f"doc_id < '{datagen.doc_id_of(N // 2)}'"), seed)
+    compiled = []
+    for name in ("first", "second"):
+        out = str(tmp_path / name)
+        shutil.copytree(seed, out)
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        run_extract_job(spark, full, out)
+        compiled.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiled[1] == 0, compiled
+
+
 def _assert_lineage_matches_manifest(spark, out, run_id):
     """The run's metrics rows sum and xor to what its manifest adds."""
     snaps = {}
