@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bb_ocr_spark import plan_gates  # noqa: E402
 from bb_ocr_spark.functions.metadata import extract_metadata_df  # noqa: E402
 from bb_ocr_spark.operators.extract import (  # noqa: E402
     context_text_col,
@@ -28,65 +29,14 @@ from bb_ocr_spark.plans.interleave import interleave_documents  # noqa: E402
 SF0001 = "/root/testdata/sf0.001"
 
 
-def _fanout(df: DataFrame) -> DataFrame:
-    """Scale-adaptive read parallelism. The per-doc/per-vector operators
-    are compute-heavy relative to their input bytes, and a small
-    snappy-compressed parquet (one row group) caps scan parallelism far
-    below the core count — sf1.0's 50k-doc documents.parquet is 5.9 MB =
-    ONE scan split, so every downstream narrow stage (and every stage
-    reachable from it through broadcast joins only) ran single-task
-    (measured: ngram_jaccard 214 s at sf1.0 with 31 cores idle). Parquet
-    cannot split inside a row group, so a floor on scan partitions can't
-    help; fan the rows out once instead (guide §2.5 "input skew:
-    repartition immediately after the read").
-
-    Partition COUNT cannot be the gate: Spark packs a small file into
-    `defaultParallelism` byte-range splits (maxSplitBytes shrinks to
-    totalBytes/parallelism), but a row group goes entirely to the split
-    holding its midpoint — the sf1.0 scan reported 32 partitions of
-    which 31 were EMPTY (event-log: stage with 1 task at 143 s CPU
-    writing all 114M shuffle rows, 31 tasks at 0.1 s). Gate on the
-    relation's size estimate instead: fan out only when the whole input
-    is small enough that the repartition shuffle is trivially cheap
-    (< _FANOUT_BYTES_PER_CORE per core), which is exactly the regime
-    where row-group granularity can starve the cores. Large tables
-    (anything beyond ~32 MB/core) pass through untouched, so at 100 TB
-    this is a no-op. Results are partitioning-invariant (deterministic
-    hash repartition on the leading id column — no retry-determinism
-    pre-sort needed, unlike round-robin; no query keys on partition
-    identity — the one spark_partition_id user derives it from its own
-    repartitionByRange)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # stats unavailable — leave the plan alone
-        return df
-    if size < target * _FANOUT_BYTES_PER_CORE:
-        # hash-partition on the leading (id) column rather than
-        # round-robin: no retry-determinism pre-sort on the map side
-        # (A/B 0.30 s -> 0.21 s for the fanout stage alone), and a
-        # downstream shuffle keyed the same way can reuse the layout
-        return df.repartition(target, F.col(df.columns[0]))
-    return df
-
-
-# per-core input share below which a read-side fanout repartition is
-# worth its (tiny) shuffle; override for clusters with very different
-# task-size economics
-_FANOUT_BYTES_PER_CORE = int(
-    os.environ.get("BB_OCR_FANOUT_BYTES_PER_CORE", str(32 << 20))
-)
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fanout(
+    return plan_gates.fanout(
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     )
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fanout(
+    return plan_gates.fanout(
         spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     )
 

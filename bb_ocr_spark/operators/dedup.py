@@ -7,10 +7,10 @@ Five tiers, cheapest → most semantic:
   ngram_jaccard_pairs  EXACT near-dup pairs via an inverted-index candidate
                        join on shared shingles (no crossJoin) + true
                        Jaccard filter — the verification tier
-  minhash_signatures / minhash_lsh_pairs
-                       MinHash (k independent hash slots via seeded
-                       xxhash64) banded into LSH buckets; candidates are
-                       bucket-join pairs — the sub-quadratic scale tier
+  minhash_signatures_pandas / minhash_lsh_pairs
+                       MinHash (k affine slots over crc32 n-gram hashes,
+                       Arrow/numpy) banded into LSH buckets; candidates
+                       are bucket-join pairs — the sub-quadratic scale tier
   simhash_col          64-bit SimHash (token-hash bit votes) — Hamming-
                        proximity fingerprint, pure expressions
   embedding_dup_pairs  cosine near-dup pairs over an embedding column
@@ -22,21 +22,13 @@ payloads never fan out: candidate generation explodes only (id, key) pairs.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .. import config
+from .. import config, plan_gates
 from ..functions.text import fingerprint_md5_col, tokens_col
 
 MERSENNE31_D = (1 << 31) - 1
-
-# corpus-size estimate above which minhash_lsh_pairs pins its candidate
-# dedup exchange to full width (see comment at the use site); between
-# the measured regimes: 0.6 MB (pin loses 2.5 s) and 5.9 MB (pin wins
-# ~2 s) on this host
-_MINHASH_PIN_BYTES = int(os.environ.get("BB_OCR_MINHASH_PIN_BYTES", str(2 << 20)))
 
 
 def normalized_text_col(text: Column) -> Column:
@@ -292,57 +284,6 @@ def ngram_jaccard_pairs(
 # --------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 64,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, sig array<long>[num_hashes]) — slot i = min over shingles of
-    xxhash64(i || shingle). Pure expressions, narrow.
-
-    Two no-CSE-across-HOF-lambdas mitigations (each measured):
-      1. shingles materialized as their own projection (embedding the
-         shingle expression in all slot expressions duplicated its tree
-         64x — 520 s vs 21 s at sf0.1);
-      2. each shingle is hashed ONCE (second projection), and the k slots
-         are affine permutations of that hash — min((a_i*h + b_i) mod
-         2^31-1) — instead of k string-concat+xxhash64 per shingle.
-         Operands stay bounded (h < 2^31, a_i < 2^20) so ANSI-safe."""
-    import random  # noqa: PLC0415
-
-    rng = random.Random(f"minhash:{config.SEED}")
-    params = [
-        (rng.randrange(1, 1 << 20), rng.randrange(0, MERSENNE31_D))
-        for _ in range(num_hashes)
-    ]
-    sh_df = df.select(
-        F.col(id_col).alias("id"), shingles_col(F.col(text_col), n).alias("sh")
-    )
-    h_df = sh_df.select(
-        "id",
-        F.transform(
-            "sh", lambda s: F.pmod(F.xxhash64(s), F.lit(1 << 31).cast("long"))
-        ).alias("hs"),
-    )
-
-    def slot(i: int) -> Column:
-        a, b = params[i]
-        return F.array_min(
-            F.transform(
-                F.col("hs"),
-                lambda h: F.pmod(
-                    h * F.lit(a).cast("long") + F.lit(b), F.lit(MERSENNE31_D)
-                ),
-            )
-        )
-
-    return h_df.select(
-        "id", F.array(*[slot(i) for i in range(num_hashes)]).alias("sig")
-    )
-
-
 def minhash_signatures_pandas(
     df: DataFrame,
     num_hashes: int = 64,
@@ -350,12 +291,14 @@ def minhash_signatures_pandas(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Arrow/numpy variant of minhash_signatures: per-TOKEN crc32 combined
-    into n-gram hashes by a vectorized wrapping-int64 polynomial (shingle
-    strings are never built — building + hashing ~250 trigram strings per
-    doc was the dominant cost), then all k slots as one (shingles × k)
-    affine mod. Same LSH contract (hash family differs from the expr
-    engine; both deterministic at any parallelism)."""
+    """(id, sig array<long>[num_hashes]) via mapInPandas: per-TOKEN crc32
+    combined into n-gram hashes by a vectorized wrapping-int64 polynomial
+    (shingle strings are never built — building + hashing ~250 trigram
+    strings per doc was the dominant cost), then all k slots as one
+    (shingles × k) affine mod, min((a_i*h + b_i) mod 2^31-1) per slot.
+    Measured 6x faster than the same slots as JVM expressions, where the
+    64 interpreted affine ops per shingle dominated. Deterministic at any
+    parallelism."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
     import random  # noqa: PLC0415
@@ -410,16 +353,11 @@ def minhash_lsh_pairs(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    engine: str = "pandas",
     max_bucket: int | None = 1024,
 ) -> DataFrame:
     """Candidate pairs (a < b) whose signatures collide in >= 1 LSH band,
     with the estimated Jaccard (signature agreement rate). rows = bands
     r = num_hashes/bands; collision prob = 1-(1-j^r)^b.
-
-    engine='pandas' (Arrow/numpy, default — 6x faster measured: the 64
-    interpreted affine ops per shingle dominate the expr form) or 'expr'
-    (pure JVM expressions, no Python workers).
 
     max_bucket — bucket-size cap: a degenerate bucket with k members (e.g.
     empty-text docs sharing a signature) emits k(k-1)/2 pairs from the
@@ -429,10 +367,7 @@ def minhash_lsh_pairs(
     the cap above the largest expected dup cluster. None disables."""
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    if engine == "pandas":
-        sigs = minhash_signatures_pandas(df, num_hashes, n, id_col, text_col)
-    else:
-        sigs = minhash_signatures(df, num_hashes, n, id_col, text_col)
+    sigs = minhash_signatures_pandas(df, num_hashes, n, id_col, text_col)
     # the plan references the signature stage up to 4x (bucket-size
     # pre-pass, both self-join sides) and Spark cannot CSE across
     # self-joins — persist so the (expensive) signature computation runs
@@ -504,13 +439,7 @@ def minhash_lsh_pairs(
     # run in a few tasks: +2.5 s measured at 1/10th bench scale), so pin
     # only when the corpus size estimate says the candidate volume can
     # starve cores. Results are partitioning-invariant either way.
-    try:
-        _csize = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        _csize = None
-    if _csize is None or _csize >= _MINHASH_PIN_BYTES:
+    if not plan_gates.is_small(df, plan_gates.MINHASH_PIN_BYTES, "minhash_pin"):
         cand = cand.repartition(
             df.sparkSession.sparkContext.defaultParallelism, "id_a", "id_b"
         )
@@ -525,7 +454,6 @@ def minhash_lsh_verified_pairs(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    engine: str = "pandas",
     max_bucket: int | None = 1024,
 ) -> DataFrame:
     """LSH candidates re-verified against the TRUE shingle Jaccard: pairs
@@ -540,7 +468,7 @@ def minhash_lsh_verified_pairs(
     (1-j^r)^bands — r=2, bands=32 at j=0.5 → 0.75^32 ≈ 1e-4 per pair, and
     the check is deterministic for a fixed corpus + seed."""
     cand = minhash_lsh_pairs(
-        df, num_hashes, bands, n, id_col, text_col, engine, max_bucket
+        df, num_hashes, bands, n, id_col, text_col, max_bucket
     ).select("id_a", "id_b")
     # candidate generation pins its own dedup exchange wide (see
     # minhash_lsh_pairs), so the verification joins inherit a 32-wide
@@ -552,15 +480,13 @@ def minhash_lsh_verified_pairs(
         F.transform(toks, lambda t: F.xxhash64(t)).alias("_th"),
         toks.alias("_tk"),
     ).select("id", hashed_shingles_col(F.col("_th"), F.col("_tk"), n).alias("hs"))
-    from .search import _bcast_if_small  # noqa: PLC0415
-
     j = cand.join(
-        _bcast_if_small(
+        plan_gates.broadcast_if_small(
             df, hs.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"))
         ),
         "id_a",
     ).join(
-        _bcast_if_small(
+        plan_gates.broadcast_if_small(
             df, hs.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"))
         ),
         "id_b",
@@ -844,9 +770,7 @@ def dedup_clusters(
     # big graph keeps AQE for its skew handling (a giant component's
     # root label is a hot join key).
     n_edges = edges.count()
-    aqe_off = n_edges < int(
-        os.environ.get("BB_OCR_CLUSTER_AQE_OFF_EDGES", str(50_000_000))
-    )
+    aqe_off = n_edges < plan_gates.CLUSTER_AQE_OFF_EDGES
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
     labels = ckpt(
         edges.select(F.col("u").alias("id"))

@@ -20,32 +20,11 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import plan_gates
 from ..functions.text import tokens_col
 
 BM25_K1 = 1.2
 BM25_B = 0.75
-
-# corpora whose optimizer size estimate stays under this many bytes get
-# derived small frames (vocab tables, per-doc stats) broadcast into
-# their scoring joins; bigger corpora keep shuffle joins (a derived
-# frame can approach corpus size, so the gate is on the corpus itself)
-_BCAST_CORPUS_BYTES = int(
-    os.environ.get("BB_OCR_BCAST_CORPUS_BYTES", str(1 << 30))
-)
-
-
-def _bcast_if_small(corpus: DataFrame, derived: DataFrame) -> DataFrame:
-    """broadcast-hint `derived` when `corpus`'s optimizer size estimate
-    proves it small enough; identical results either way (join strategy
-    only)."""
-    try:
-        size = int(
-            corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return derived
-    return F.broadcast(derived) if size < _BCAST_CORPUS_BYTES else derived
-
 
 class BM25Index(NamedTuple):
     """The four relations BM25 scoring needs, decoupled from the corpus:
@@ -279,7 +258,7 @@ def unigram_surprisal(
     # scoring join's shuffle of every token occurrence is pure overhead
     # (AQE keeps the sort-merge plan here — the 2x is measured). Large
     # corpora keep the shuffle join: a 100 TB vocab is not broadcastable.
-    vocab = _bcast_if_small(docs, vocab)
+    vocab = plan_gates.broadcast_if_small(docs, vocab)
     total = vocab.agg(F.sum("cnt").alias("n_corpus"))
     scored = (
         toks.join(vocab, "token")
@@ -471,9 +450,9 @@ def bigram_surprisal(
     )
     # small-corpus regime: broadcast the count tables so the three
     # scoring joins stop shuffling every (prev, cur) event (see
-    # _bcast_if_small; large corpora keep the shuffle joins)
-    cu = _bcast_if_small(docs, cu)
-    cb = _bcast_if_small(docs, cb)
+    # plan_gates.broadcast_if_small; large corpora keep the shuffle joins)
+    cu = plan_gates.broadcast_if_small(docs, cu)
+    cb = plan_gates.broadcast_if_small(docs, cb)
     one_m_lam = 1.0 - lam
     scored = (
         ev.join(cu.withColumnRenamed("cnt", "cu_cur"), ev.cur == cu.token)
@@ -585,7 +564,7 @@ def unigram_surprisal_lm(
     # join) — caching it was write-only overhead
     toks = toks.filter(F.col("token").isNotNull())
     scored = (
-        toks.join(_bcast_if_small(lm, lm), "token", "left")
+        toks.join(plan_gates.broadcast_if_small(lm, lm), "token", "left")
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "_lp_micro",

@@ -23,8 +23,7 @@ Two tiers:
                      (self-join on bucket), exact-cosine verified.
 
 Dot products use F.zip_with + F.aggregate in DOUBLE (JVM expressions,
-no Python in the scan path); the vectorized-numpy variant for wide batches
-is a pandas UDF kept for reference in pandas_cosine_topk.
+no Python in the scan path).
 """
 
 from __future__ import annotations
@@ -739,57 +738,6 @@ FROM (SELECT *, row_number() OVER (PARTITION BY query_id
       FROM scored)
 WHERE rk <= {k}
 """
-
-
-def pandas_cosine_topk(
-    corpus: DataFrame,
-    queries_pdf,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-vectorized exact variant: queries as a numpy matrix captured in
-    a mapInPandas closure; per batch one (batch × queries) matmul. The shape
-    to use when |queries| is large enough that per-row HOF dot products lose
-    to BLAS."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    qm = np.stack(queries_pdf[vec_col].to_numpy()).astype("float64")
-    qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-    qids = queries_pdf[id_col].to_numpy()
-
-    def run(batches):
-        for pdf in batches:
-            cm = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            cn = cm / np.linalg.norm(cm, axis=1, keepdims=True)
-            sims = cn @ qn.T  # (batch, nq)
-            rows = []
-            for qi in range(sims.shape[1]):
-                order = np.argsort(-sims[:, qi])[: k + 1]
-                for ci in order:
-                    if pdf[id_col].iloc[ci] != qids[qi]:
-                        rows.append(
-                            (
-                                int(qids[qi]),
-                                int(pdf[id_col].iloc[ci]),
-                                round(float(sims[ci, qi]), 6),
-                            )
-                        )
-            yield pd.DataFrame(rows, columns=["query_id", "vec_id", "cosine"])
-
-    # partial top-k per batch; final exact top-k via window
-    from pyspark.sql import Window
-
-    partial = corpus.mapInPandas(
-        run, schema="query_id long, vec_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        partial.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
 
 
 # --------------------------------------------------------------------------

@@ -11,30 +11,25 @@ unless the anchor-word link density exceeds LINK_DENSITY_HTML_MAX
 (boilerpipe-style main-content heuristic). Offsets are sequential over
 emitted spans, preserving document order.
 
-Three implementations with identical output, golden-tested against each
+Two implementations with identical output, golden-tested against each
 other (tests/test_tokenizer.py):
 
-  tokenize_html_expr    — pure JVM expressions (split/regexp/HOFs): the
-                          DEFAULT. Whole-stage-codegen, zero Python, zero
-                          shuffle — the 100 TB path.
-  tokenize_html_pandas  — mapInPandas over Arrow record batches: the shape
-                          used when a real parsing library is needed
-                          (lxml/trafilatura-class kernels plug in here).
+  tokenize_html_expr    — pure JVM expressions (split/regexp/HOFs):
+                          whole-stage-codegen, zero Python, zero shuffle —
+                          the 100 TB path.
   tokenize_html_oracle  — plain-Python frozen kernel (bb_ocr_spark.oracle
-                          style), drives goldens and the pandas kernel.
+                          style) that defines the rule and drives the
+                          goldens.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import config
-
-SPAN_STRUCT_DDL = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 
 _BLOCK = re.compile(config.BLOCK_TAG_RE)
 _IMG = re.compile(config.IMG_SRC_RE)
@@ -44,7 +39,7 @@ _WS = re.compile(config.WS_SQUEEZE_RE)
 
 
 # --------------------------------------------------------------------------
-# frozen Python kernel (oracle + pandas-stage body)
+# frozen Python kernel (oracle)
 # --------------------------------------------------------------------------
 
 
@@ -163,31 +158,4 @@ def tokenize_html_expr(df: DataFrame, html_col: str = "html") -> DataFrame:
     """(doc_id, html) → (doc_id, spans) — narrow, JVM-only, zero shuffle."""
     return df.select(
         "doc_id", tokenized_spans_col(F.col(html_col)).alias("spans")
-    )
-
-
-# --------------------------------------------------------------------------
-# Arrow / mapInPandas implementation (pluggable-kernel shape)
-# --------------------------------------------------------------------------
-
-
-def tokenize_html_pandas(df: DataFrame, html_col: str = "html") -> DataFrame:
-    """Same contract via mapInPandas: one Arrow batch of raw docs in, one
-    batch of (doc_id, spans) out. Swap `tokenize_html_oracle` for a real
-    parser (lxml etc.) without touching the plan."""
-    import pandas as pd  # noqa: PLC0415
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            spans = [
-                [
-                    (s["kind"], s["text"], s["media_ref"], s["offset"])
-                    for s in tokenize_html_oracle(h)
-                ]
-                for h in pdf[html_col]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "spans": spans})
-
-    return df.select("doc_id", html_col).mapInPandas(
-        run, schema=f"doc_id string, spans {SPAN_STRUCT_DDL}"
     )

@@ -31,7 +31,6 @@ from bb_ocr_spark.operators.similarity import (
     brute_force_topk,
     embedding_dup_pairs,
     lsh_topk,
-    pandas_cosine_topk,
 )
 
 
@@ -175,15 +174,12 @@ def test_minhash_lsh_recall(spark):
         for r in ngram_jaccard_pairs(df, threshold=0.5).collect()
     }
     assert exact, "fixture must contain true near-dup pairs"
-    for engine in ("pandas", "expr"):
-        lsh = {
-            (r["id_a"], r["id_b"])
-            for r in minhash_lsh_pairs(
-                df, num_hashes=64, bands=16, engine=engine
-            ).collect()
-        }
-        recall = len(exact & lsh) / len(exact)
-        assert recall >= 0.95, f"LSH[{engine}] recall {recall} on planted near-dups"
+    lsh = {
+        (r["id_a"], r["id_b"])
+        for r in minhash_lsh_pairs(df, num_hashes=64, bands=16).collect()
+    }
+    recall = len(exact & lsh) / len(exact)
+    assert recall >= 0.95, f"LSH recall {recall} on planted near-dups"
 
 
 def test_simhash(spark, corpus_df):
@@ -215,12 +211,6 @@ def test_ann_vs_brute_force(spark, sf_dir):
     exact = brute_force_topk(emb, queries, k=5)
     got = {(r["query_id"], r["rk"]): r["vec_id"] for r in exact.collect()}
     assert len(got) == 8 * 5
-
-    # pandas/BLAS variant must agree exactly with the HOF variant
-    pdf = queries.toPandas()
-    blas = pandas_cosine_topk(emb, pdf, k=5)
-    got2 = {(r["query_id"], r["rk"]): r["vec_id"] for r in blas.collect()}
-    assert got2 == got
 
     # LSH tier: random 64-dim gaussians have no neighbor structure (all
     # cosines ~0), so recall is measured on PLANTED neighbors: queries are
@@ -1833,8 +1823,10 @@ def test_minhash_pin_gate_scale_adaptive(spark, monkeypatch, tmp_path):
     # AQE over-coalescing can starve cores — on a small corpus it is
     # pure overhead (A/B-measured +2.5 s at sf0.1). Results must be
     # identical either way (partitioning-invariant dedup). The fixture
-    # is parquet-backed: a LocalRelation reports Long.MaxValue as its
-    # size estimate, which (correctly, conservatively) always pins.
+    # is parquet-backed: createDataFrame gives a LogicalRDD, sized by
+    # spark.sql.defaultSizeInBytes (Long.MaxValue), which (correctly,
+    # conservatively) always pins.
+    from bb_ocr_spark import plan_gates
     from bb_ocr_spark.operators import dedup as D
 
     rows = [
@@ -1846,7 +1838,7 @@ def test_minhash_pin_gate_scale_adaptive(spark, monkeypatch, tmp_path):
     df = spark.read.parquet(path)
 
     def plan_and_rows(pin_bytes):
-        monkeypatch.setattr(D, "_MINHASH_PIN_BYTES", pin_bytes)
+        monkeypatch.setattr(plan_gates, "MINHASH_PIN_BYTES", pin_bytes)
         out = D.minhash_lsh_pairs(df, num_hashes=16, bands=8)
         plan = out._jdf.queryExecution().executedPlan().toString()
         got = sorted(

@@ -1,6 +1,5 @@
-"""HTML tokenizer goldens: JVM-expression impl == mapInPandas impl ==
-frozen Python oracle, on a corpus with nav blocks, inline anchors, and
-interleaved media."""
+"""HTML tokenizer goldens: JVM-expression impl == frozen Python oracle,
+on a corpus with nav blocks, inline anchors, and interleaved media."""
 
 from __future__ import annotations
 
@@ -8,7 +7,6 @@ from bb_ocr_spark import datagen
 from bb_ocr_spark.operators.tokenizer import (
     tokenize_html_expr,
     tokenize_html_oracle,
-    tokenize_html_pandas,
 )
 
 N_DOCS = 120
@@ -39,12 +37,6 @@ def test_expr_tokenizer_matches_oracle(spark):
     got = _collect(tokenize_html_expr(df))
     want = _goldens()
     assert got == want
-
-
-def test_pandas_tokenizer_matches_oracle(spark):
-    df = datagen.generate_html_df(spark, N_DOCS, partitions=6)
-    got = _collect(tokenize_html_pandas(df))
-    assert got == _goldens()
 
 
 def test_tokenizer_semantics():
