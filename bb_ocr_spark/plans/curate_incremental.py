@@ -36,15 +36,14 @@ parquet dirs (same plan, state side re-shuffles per delivery).
 from __future__ import annotations
 
 import os
-import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.sampling import split_col
 from ..functions.scrub import pii_scrub_col
 from ..functions.text import fingerprint_md5_col, quality_cols, token_count_col
-from .snapshots import commit_snapshot, current_snapshot, run_dir
+from .snapshots import commit_snapshot, current_snapshot, run_dir, write_run
 
 FP_DIR = "fingerprints"
 
@@ -132,19 +131,6 @@ def committed_bucketed_grams(
         .filter(F.col("run_id").isin(cur["run_ids"]))
         .select("g")
     )
-
-
-def _rewrite(df: DataFrame, out_dir: str) -> None:
-    """Unconditional clear-and-write. Unlike the streaming epoch's
-    write_run_once, an UNCOMMITTED incremental run dir must never be
-    reused: its rows were computed against the fingerprint state at
-    write time, and a run committed in between may have claimed some of
-    the same fingerprints — replaying the stale dir would commit
-    duplicates. Committed replays never reach here (the run_id guard at
-    the top returns first), so rewriting is always against the CURRENT
-    accumulated state."""
-    shutil.rmtree(out_dir, ignore_errors=True)
-    df.write.mode("errorifexists").parquet(out_dir)
 
 
 def run_incremental_curation(
@@ -299,11 +285,17 @@ def run_incremental_curation(
         split_col(F.col("id")).alias("split"),
     )
     run_results = run_dir(state_dir, run_id)
-    _rewrite(curated, run_results)
-    committed = spark.read.parquet(run_results)  # lineage from durable data
-    _rewrite(
-        committed.select("fp"), os.path.join(state_dir, FP_DIR, f"run_id={run_id}")
+    write_run(curated, run_results, keep_complete=False)
+    # durable rows, read with the known schema (no inference job); the totals
+    # are observed on the fp write, a result stage with no Exchange, so
+    # retried tasks count once
+    committed = spark.read.schema(curated.schema).parquet(run_results)
+    totals = Observation()
+    fps = committed.select("fp").observe(
+        totals, F.count("*").alias("n"), F.bit_xor(F.xxhash64("fp")).alias("ck")
     )
+    fp_dir = os.path.join(state_dir, FP_DIR, f"run_id={run_id}")
+    write_run(fps, fp_dir, keep_complete=False)
     if bucketed_fp_table is not None:
         # append BEFORE the snapshot commit: the moment run_id becomes
         # committed, its fps must already be in the state table
@@ -331,11 +323,9 @@ def run_incremental_curation(
             substr_state_table,
             fp_buckets,
         )
-    row = committed.selectExpr(
-        "count(*) AS n", "bit_xor(xxhash64(fp)) AS ck"
-    ).collect()[0]
-    manifest = commit_snapshot(state_dir, run_id, row["n"], row["ck"] or 0)
-    return {"manifest": manifest, "n_new": row["n"], "replayed": False}
+    n, ck = (totals.get[k] or 0 for k in ("n", "ck"))  # xor is NULL if empty
+    manifest = commit_snapshot(state_dir, run_id, n, ck)
+    return {"manifest": manifest, "n_new": n, "replayed": False}
 
 
 def compact_bucketed_fingerprints(

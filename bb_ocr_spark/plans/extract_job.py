@@ -14,12 +14,13 @@ Layout (plain parquet standing in for Iceberg — jars not in this image;
     <output_dir>/metrics/run_id=<run>/   per-partition lineage rows
     <output_dir>/snapshots/snap-<n>.json manifests of committed runs
 
-Commit protocol: results write, metrics write, then the snapshot manifest
-(plans/snapshots.py), the ONLY commit point. Resume, read_results and
-read_metrics see exactly the runs the current manifest lists, so a run that
-crashed before its manifest landed is invisible and the next run
-re-extracts its docs. The anti-join is a plain equi-join Catalyst executes
-as sort-merge (or broadcast when the completed set is small).
+Commit protocol (commit_run, for batch runs and streaming epochs alike):
+results write, metrics write, then the snapshot manifest (plans/snapshots.py),
+the ONLY commit point. Resume, read_results and read_metrics see exactly the
+runs the current manifest lists, so a run that crashed before its manifest
+landed is invisible and the next run re-extracts its docs. The anti-join is
+a plain equi-join Catalyst executes as sort-merge (or broadcast when the
+completed set is small).
 
 Lineage is ONE aggregation over the committed run, re-read with its known
 schema (no inference job) and written as the metrics rows without leaving
@@ -40,7 +41,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import OUT_SCHEMA_DDL, checksum_spans_col, extract_inline
-from .snapshots import RESULTS_DIR, commit_snapshot, current_snapshot, run_dir
+from .snapshots import RESULTS_DIR, commit_snapshot, current_snapshot, run_dir, write_run
 from .task_metrics import per_task_durations
 
 METRICS = "metrics"
@@ -74,36 +75,22 @@ def completed_doc_ids(spark: SparkSession, output_dir: str) -> DataFrame | None:
     return _read_runs(spark, output_dir, run_ids).select("doc_id") if run_ids else None
 
 
-def run_extract_job(
-    spark: SparkSession,
-    documents_interleaved: DataFrame,
-    output_dir: str,
-    run_id: str | None = None,
-) -> dict:
-    """Extract all not-yet-completed docs; commit results + lineage.
-
-    Returns run stats {run_id, n_docs, wall_ms, resumed_skipped,
-    snapshot_id}.
-    """
-    run_id = run_id or uuid.uuid4().hex[:12]
+def commit_run(
+    spark: SparkSession, extracted: DataFrame, output_dir: str, run_id: str, *, keep_complete: bool
+) -> tuple[dict, int]:
+    """Commit `extracted` (doc_id, spans, checksum) as run `run_id`: results under
+    write_run's replay rule, lineage from the committed files, then the manifest.
+    Returns (manifest, n_docs); a run_id the manifest already lists writes nothing
+    and returns it with 0 docs, so a committed run directory is never cleared."""
     t0 = time.monotonic()
-
-    parent = current_snapshot(output_dir)
-    done = completed_doc_ids(spark, output_dir)
-    remaining = documents_interleaved
-    if done is not None:
-        # resume: left-anti on completed ids (J6 / north_rule)
-        remaining = documents_interleaved.join(done, "doc_id", "left_anti")
-
-    extracted = (
-        extract_inline(remaining)
-        .withColumn("checksum", checksum_spans_col(F.col("spans")))
-        .withColumn("part_id", F.spark_partition_id())
-    )
+    cur = current_snapshot(output_dir)
+    if cur is not None and run_id in cur["run_ids"]:
+        return cur, 0
 
     run_results = run_dir(output_dir, run_id)
     with per_task_durations(spark, f"extract-commit-{run_id}") as task_ms:
-        extracted.write.mode("errorifexists").parquet(run_results)
+        part = extracted.withColumn("part_id", F.spark_partition_id())
+        write_run(part, run_results, keep_complete=keep_complete)
     wall_ms = int((time.monotonic() - t0) * 1000)
 
     # lineage from the COMMITTED files; its rows never leave Spark
@@ -131,12 +118,40 @@ def run_extract_job(
         # result stage (no Exchange above): retried tasks' totals count once
         .observe(totals, F.sum("n_docs").alias("n_docs"), F.bit_xor("checksum").alias("ck"))
     )
-    # no run_id column: the partition directory supplies it on read-back
+    # no run_id column: the partition directory supplies it on read-back;
+    # rewritten on replay, its times are this attempt's
     run_metrics = os.path.join(output_dir, METRICS, f"run_id={run_id}")
-    metrics.write.mode("errorifexists").parquet(run_metrics)
+    write_run(metrics, run_metrics, keep_complete=False)
 
     n_docs, run_ck = (totals.get[k] or 0 for k in ("n_docs", "ck"))  # NULL if empty
-    snap = commit_snapshot(output_dir, run_id, n_docs, run_ck)
+    return commit_snapshot(output_dir, run_id, n_docs, run_ck), n_docs
+
+
+def run_extract_job(
+    spark: SparkSession,
+    documents_interleaved: DataFrame,
+    output_dir: str,
+    run_id: str | None = None,
+) -> dict:
+    """Extract all not-yet-completed docs; commit results + lineage.
+
+    Returns run stats {run_id, n_docs, wall_ms, resumed_skipped,
+    snapshot_id}. A committed run_id writes nothing and reports 0 docs; an
+    uncommitted one (crash before its manifest) is rewritten.
+    """
+    run_id = run_id or uuid.uuid4().hex[:12]
+    t0 = time.monotonic()
+
+    parent = current_snapshot(output_dir)
+    done = completed_doc_ids(spark, output_dir)
+    remaining = documents_interleaved
+    if done is not None:
+        # resume: left-anti on completed ids (J6 / north_rule)
+        remaining = documents_interleaved.join(done, "doc_id", "left_anti")
+
+    extracted = extract_inline(remaining).withColumn("checksum", checksum_spans_col(F.col("spans")))
+    # the resumed rows depend on the committed runs: an uncommitted dir is rewritten
+    snap, n_docs = commit_run(spark, extracted, output_dir, run_id, keep_complete=False)
     return {
         "run_id": run_id,
         "n_docs": n_docs,
@@ -152,8 +167,8 @@ def read_results(spark: SparkSession, output_dir: str) -> DataFrame:
 
 
 def read_metrics(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Lineage rows of the runs the current snapshot lists (streaming runs
-    write none)."""
+    """Lineage rows of the runs the current snapshot lists, batch and
+    streaming alike: every run commits through commit_run."""
     return (
         spark.read.schema(f"{METRICS_SCHEMA}, run_id string")
         .parquet(os.path.join(output_dir, METRICS))

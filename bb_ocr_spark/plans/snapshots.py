@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -270,16 +271,17 @@ def commit_snapshot(
         return manifest
 
 
-def write_run_once(df: DataFrame, out_dir: str) -> None:
-    """Replay-safe run-directory write for DETERMINISTIC outputs (same
-    input → same rows, e.g. a streaming epoch's batch): a complete dir
-    (_SUCCESS) is kept, a partial one (crash mid-write) is cleared and
-    rewritten. NOT for state-dependent outputs — if the rows depend on
-    other runs' committed state (incremental curation), an uncommitted
-    dir may be stale and must be rewritten; see curate_incremental."""
-    import shutil  # noqa: PLC0415
-
-    if os.path.exists(os.path.join(out_dir, "_SUCCESS")):
+def write_run(df: DataFrame, out_dir: str, *, keep_complete: bool) -> None:
+    """The replay rule of every run-directory write. keep_complete=True is for
+    DETERMINISTIC rows (a streaming epoch, the shards of a committed run): a
+    complete dir (_SUCCESS) is kept, a partial one is cleared and rewritten.
+    Otherwise (rows that depend on committed state: a resumed extraction,
+    incremental curation) the dir is always cleared and rewritten: a stale
+    UNCOMMITTED dir must never be reused, since a run committed after it was
+    written may have claimed some of its docs, and replaying it would commit
+    duplicates. Callers return first when the chain already lists their run,
+    so a committed dir is never cleared."""
+    if keep_complete and os.path.exists(os.path.join(out_dir, "_SUCCESS")):
         return
     shutil.rmtree(out_dir, ignore_errors=True)
     df.write.mode("errorifexists").parquet(out_dir)

@@ -135,16 +135,17 @@ def main() -> None:
 
         from bb_ocr_spark.cache import release_persisted
         from bb_ocr_spark.operators.packing import assign_shards
-        from bb_ocr_spark.plans.snapshots import write_run_once
+        from bb_ocr_spark.plans.snapshots import write_run
 
         committed = spark.read.parquet(
             os.path.join(args.state, "results", f"run_id={args.run_id}")
         )
-        # deterministic given the committed run results, so write_run_once's
-        # skip-if-_SUCCESS replay rule applies
-        write_run_once(
+        # deterministic given the committed run results, so a complete
+        # shard dir is kept on replay
+        write_run(
             assign_shards(committed, args.shard_budget, key_col="id"),
             os.path.join(args.state, "shards", f"run_id={args.run_id}"),
+            keep_complete=True,
         )
         if args.materialize:
             from bb_ocr_spark.operators.packing import (
@@ -157,13 +158,14 @@ def main() -> None:
                 args.shard_budget,
                 key_col="id",
             )
-            write_run_once(
+            write_run(
                 materialize_shards(
                     atomic, committed.select("id", "text"), key_col="id"
                 ),
                 os.path.join(
                     args.state, "shard_files", f"run_id={args.run_id}"
                 ),
+                keep_complete=True,
             )
         release_persisted()
 

@@ -151,6 +151,34 @@ def test_incremental_curation_empty_survivor_run(spark, tmp_path):
     assert r["manifest"]["n_docs_total"] == 1
 
 
+def test_incremental_curation_post_write_job_count(spark, tmp_path, monkeypatch):
+    # after its results write a delivery starts only the fingerprint state
+    # write, which observes the run totals: the results are re-read with
+    # their known schema and no separate job collects count/xor
+    from bb_ocr_spark.plans.curate_incremental import run_incremental_curation
+
+    sc = spark.sparkContext
+    writer_cls = type(spark.range(1).write)  # the session's writer implementation
+    parquet, after_results = writer_cls.parquet, []
+
+    def mark_results_write(writer, path, *args, **kwargs):
+        parquet(writer, path, *args, **kwargs)
+        if "/results/" in path:
+            after_results.append(set(sc.statusTracker().getJobIdsForGroup(None)))
+
+    monkeypatch.setattr(writer_cls, "parquet", mark_results_write)
+    state = str(tmp_path / "state")
+    for run in (1, 2):
+        docs = spark.createDataFrame(
+            [(i, " ".join(f"w{run}_{i}_{j} the of and to" for j in range(12))) for i in range(6)],
+            "doc_id long, text string",
+        )
+        assert run_incremental_curation(spark, docs, state, f"run-{run}")["n_new"] == 6
+        new_jobs = set(sc.statusTracker().getJobIdsForGroup(None)) - after_results[-1]
+        assert len(new_jobs) <= 2, (run, sorted(new_jobs))
+    assert len(after_results) == 2
+
+
 def test_incremental_curation_bucketed_state_no_exchange(spark, tmp_path):
     # the 100 TB shape: fp state accumulates as a bucketed table, so the
     # per-delivery anti-join reads the state side WITHOUT an Exchange

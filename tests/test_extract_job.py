@@ -5,7 +5,6 @@ happened is invisible to resume and readers."""
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 
@@ -21,6 +20,7 @@ from bb_ocr_spark.plans.extract_job import (
     run_extract_job,
 )
 from bb_ocr_spark.plans.snapshots import current_snapshot
+from lineage_checks import assert_lineage_matches_manifest
 
 N = 80
 
@@ -67,7 +67,7 @@ def test_resume_and_lineage(spark, tmp_path):
     assert all(r["task_wall_ms"] is not None for r in tk)
     assert all(0 < r["task_wall_ms"] <= r["wall_time_ms"] for r in tk)
     for run_id in ("r1", "r2"):
-        _assert_lineage_matches_manifest(spark, out, run_id)
+        assert_lineage_matches_manifest(spark, out, run_id)
     # the files carry METRICS_SCHEMA's types in its column order
     written = spark.read.parquet(str(tmp_path / "job" / "metrics" / "run_id=r2")).schema
     assert written.simpleString() == StructType.fromDDL(extract_job.METRICS_SCHEMA).simpleString()
@@ -102,7 +102,52 @@ def test_crash_before_snapshot_commit(spark, tmp_path, monkeypatch):
     m = read_metrics(spark, out)
     assert tuple(m.agg(F.sum("n_docs"), F.expr("bit_xor(checksum)")).first()) == (N, res_ck)
     assert {r["run_id"] for r in m.select("run_id").distinct().collect()} == {"r2"}
-    _assert_lineage_matches_manifest(spark, out, "r2")
+    assert_lineage_matches_manifest(spark, out, "r2")
+
+
+def test_rerun_same_run_id_after_crash(spark, tmp_path, monkeypatch):
+    # a retry with the SAME explicit run_id after a crash before the
+    # manifest (extract_submit.py --run-id) rewrites the uncommitted run
+    # directories instead of failing on them, and commits every doc
+    out = str(tmp_path / "job")
+    full = datagen.generate_df(spark, N, partitions=4)
+    commit = extract_job.commit_snapshot
+    crashed = []
+
+    def crash_once(*args, **kwargs):
+        if not crashed:
+            crashed.append(args)
+            raise RuntimeError("crash before the snapshot commit")
+        return commit(*args, **kwargs)
+
+    monkeypatch.setattr(extract_job, "commit_snapshot", crash_once)
+    with pytest.raises(RuntimeError):
+        run_extract_job(spark, full, out, run_id="r1")
+    s = run_extract_job(spark, full, out, run_id="r1")
+    assert (s["n_docs"], s["snapshot_id"]) == (N, 1)
+    assert current_snapshot(out)["run_ids"] == ["r1"]
+    res = read_results(spark, out)
+    assert tuple(res.agg(F.count("*"), F.countDistinct("doc_id")).first()) == (N, N)
+    assert_lineage_matches_manifest(spark, out, "r1")
+
+
+def test_rerun_committed_run_id_writes_nothing(spark, tmp_path):
+    # re-running a committed run_id leaves its result files (names and
+    # mtimes) and the manifest chain as they were
+    out = str(tmp_path / "job")
+    full = datagen.generate_df(spark, N, partitions=4)
+    run_extract_job(spark, full.filter(f"doc_id < '{datagen.doc_id_of(N // 2)}'"), out, "r1")
+
+    def state():
+        results = (tmp_path / "job" / "results" / "run_id=r1").iterdir()
+        snaps = (tmp_path / "job" / "snapshots").iterdir()
+        return {p.name: p.stat().st_mtime_ns for p in results}, {p.name: p.read_text() for p in snaps}
+
+    before = state()
+    s = run_extract_job(spark, full, out, run_id="r1")
+    assert (s["n_docs"], s["snapshot_id"]) == (0, 1)
+    assert state() == before
+    assert_lineage_matches_manifest(spark, out, "r1")
 
 
 def test_resumed_run_job_count(spark, tmp_path):
@@ -139,21 +184,6 @@ def test_rerun_compiles_no_new_code(spark, tmp_path):
     assert compiled[1] == 0, compiled
 
 
-def _assert_lineage_matches_manifest(spark, out, run_id):
-    """The run's metrics rows sum and xor to what its manifest adds."""
-    snaps = {}
-    for path in glob.glob(os.path.join(out, "snapshots", "snap-*.json")):
-        with open(path) as f:
-            snap = json.load(f)
-        snaps[snap["snapshot_id"]] = snap
-    snap = next(s for s in snaps.values() if s["run_ids"][-1] == run_id)
-    parent = snaps.get(snap["parent_id"])
-    added = snap["n_docs_total"] - (parent["n_docs_total"] if parent else 0)
-    m = read_metrics(spark, out).filter(F.col("run_id") == run_id)
-    n, ck = m.agg(F.sum("n_docs"), F.expr("bit_xor(checksum)")).first()
-    assert (n or 0, ck or 0) == (added, snap["run_checksum"])
-
-
 def test_resumed_run_ships_no_driver_rows(spark, tmp_path, monkeypatch):
     # the lineage rows and run totals stay in Spark: a resumed run commits
     # even when no local rows can be turned into a DataFrame
@@ -170,7 +200,7 @@ def test_resumed_run_ships_no_driver_rows(spark, tmp_path, monkeypatch):
     s = run_extract_job(spark, full, out, run_id="r2")
     assert (s["n_docs"], s["snapshot_id"]) == (N - N // 2, 2)
     assert current_snapshot(out)["n_docs_total"] == N
-    _assert_lineage_matches_manifest(spark, out, "r2")
+    assert_lineage_matches_manifest(spark, out, "r2")
 
 
 def test_run_without_listener_commits(spark, tmp_path, monkeypatch):
@@ -188,7 +218,7 @@ def test_run_without_listener_commits(spark, tmp_path, monkeypatch):
     tk = read_metrics(spark, out).select("task_wall_ms", "wall_time_ms").collect()
     assert tk and all(r["task_wall_ms"] is None for r in tk)
     assert all(r["wall_time_ms"] > 0 for r in tk)
-    _assert_lineage_matches_manifest(spark, out, "r1")
+    assert_lineage_matches_manifest(spark, out, "r1")
 
 
 def test_per_task_durations_clears_job_properties(spark):
@@ -245,8 +275,8 @@ def test_noop_rerun(spark, tmp_path):
     assert snap["run_ids"] == ["a", "b"] and snap["n_docs_total"] == 20
     assert snap["run_checksum"] == 0
     assert read_metrics(spark, out).filter("run_id = 'b'").count() == 0
-    _assert_lineage_matches_manifest(spark, out, "a")
-    _assert_lineage_matches_manifest(spark, out, "b")
+    assert_lineage_matches_manifest(spark, out, "a")
+    assert_lineage_matches_manifest(spark, out, "b")
 
 
 def test_snapshot_time_travel(spark, tmp_path):
@@ -263,8 +293,8 @@ def test_snapshot_time_travel(spark, tmp_path):
     # time travel: snapshot 1 sees only run a's docs
     assert read_results_as_of(spark, out, 1).count() == s1["n_docs"]
     assert read_results_as_of(spark, out, 2).count() == 60
-    _assert_lineage_matches_manifest(spark, out, "a")
-    _assert_lineage_matches_manifest(spark, out, "b")
+    assert_lineage_matches_manifest(spark, out, "a")
+    assert_lineage_matches_manifest(spark, out, "b")
     # a crashed (uncommitted) run directory is invisible to snapshot reads
     os.makedirs(os.path.join(out, "results", "run_id=crashed"))
     assert read_results_as_of(spark, out, 2).count() == 60

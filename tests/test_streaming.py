@@ -342,9 +342,13 @@ def test_commit_batch_replay_converges(spark, tmp_path):
     # must converge — no errorifexists failure, no duplicate manifest entry
     import os
 
+    from pyspark.sql import functions as F
+
     from bb_ocr_spark import datagen
+    from bb_ocr_spark.plans.extract_job import commit_run
     from bb_ocr_spark.plans.snapshots import current_snapshot
-    from bb_ocr_spark.streaming.extract_stream import commit_batch, extract_stream
+    from bb_ocr_spark.streaming.extract_stream import extract_stream
+    from lineage_checks import assert_lineage_matches_manifest
 
     out = str(tmp_path / "out")
     batch = extract_stream(datagen.generate_df(spark, 30, partitions=2))
@@ -354,15 +358,77 @@ def test_commit_batch_replay_converges(spark, tmp_path):
     os.makedirs(run_dir)
     with open(os.path.join(run_dir, "part-garbage.parquet"), "w") as f:
         f.write("not parquet")
-    commit_batch(spark, out, batch, "stream-000000")
+    commit_run(spark, batch, out, "stream-000000", keep_complete=True)
     s = current_snapshot(out)
     assert s["run_ids"] == ["stream-000000"] and s["n_docs_total"] == 30
 
     # (b) full replay after a successful commit: converges, nothing doubles
-    commit_batch(spark, out, batch, "stream-000000")
+    commit_run(spark, batch, out, "stream-000000", keep_complete=True)
     s2 = current_snapshot(out)
     assert s2["snapshot_id"] == s["snapshot_id"]
     assert s2["run_ids"] == ["stream-000000"]
+
+    # (c) complete results dir, partial lineage dir, no manifest: the
+    # results are kept, the lineage is rewritten and matches the manifest
+    out = str(tmp_path / "out_c")
+    results = os.path.join(out, "results", "run_id=stream-000000")
+    batch.withColumn("part_id", F.spark_partition_id()).write.parquet(results)
+    kept = sorted(os.listdir(results))
+    metrics_dir = os.path.join(out, "metrics", "run_id=stream-000000")
+    os.makedirs(metrics_dir)
+    with open(os.path.join(metrics_dir, "part-garbage.parquet"), "w") as f:
+        f.write("not parquet")
+    commit_run(spark, batch, out, "stream-000000", keep_complete=True)
+    s3 = current_snapshot(out)
+    assert s3["run_ids"] == ["stream-000000"] and s3["n_docs_total"] == 30
+    assert sorted(os.listdir(results)) == kept
+    assert_lineage_matches_manifest(spark, out, "stream-000000")
+
+
+def test_streaming_runs_commit_lineage(spark, tmp_path):
+    # every streaming epoch commits through the batch job's commit_run, so
+    # each stream-* run has lineage rows that reconcile with its manifest
+    from pyspark.sql import functions as F
+
+    from bb_ocr_spark import datagen
+    from bb_ocr_spark.plans.snapshots import current_snapshot
+    from bb_ocr_spark.streaming.extract_stream import run_extract_stream
+    from lineage_checks import assert_lineage_matches_manifest
+
+    docs_dir = str(tmp_path / "docs")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    full = datagen.generate_df(spark, 60, partitions=4)
+    cut = F.col("doc_id") < datagen.doc_id_of(25)
+    full.filter(cut).write.parquet(docs_dir)
+    run_extract_stream(spark, docs_dir, out, ckpt)
+    full.filter(~cut).write.mode("append").parquet(docs_dir)
+    run_extract_stream(spark, docs_dir, out, ckpt)
+
+    snap = current_snapshot(out)
+    assert snap["n_docs_total"] == 60 and len(snap["run_ids"]) == 2
+    for run_id in snap["run_ids"]:
+        assert run_id.startswith("stream-")
+        assert_lineage_matches_manifest(spark, out, run_id)
+
+
+def test_stream_commit_job_count(spark, tmp_path):
+    # outside its commit job group, a streaming epoch's commit starts only
+    # the lineage aggregation's map stage and the metrics write: the
+    # committed files are re-read with their known schema and the totals
+    # are observed on the metrics write, not collected in a job of their own
+    from bb_ocr_spark import datagen
+    from bb_ocr_spark.plans.extract_job import commit_run
+    from bb_ocr_spark.plans.snapshots import current_snapshot
+    from bb_ocr_spark.streaming.extract_stream import extract_stream
+
+    sc = spark.sparkContext
+    out = str(tmp_path / "out")
+    batch = extract_stream(datagen.generate_df(spark, 40, partitions=4))
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    commit_run(spark, batch, out, "stream-000000", keep_complete=True)
+    assert len(set(sc.statusTracker().getJobIdsForGroup(None)) - before) <= 2
+    assert current_snapshot(out)["n_docs_total"] == 40
 
 
 def test_snapshot_reader_ignores_stale_pointer_and_sorts_numerically(tmp_path):
