@@ -35,6 +35,10 @@ LINK_TOKEN_COUNT_RE = (
     r"(https?://[^ \t\n\r]*|href=[^ \t\n\r]*|\||[>»]|\[nav\])"
     r"(?=$|[ \t\n\r])"
 )
+# every alternative of LINK_TOKEN_COUNT_RE (and LINK_TOKEN_RE) contains one
+# of these substrings, so a text holding none of them has no link token and
+# the count can be skipped (operators/extract.py guards on them)
+LINK_TOKEN_MARKERS = ("http", "href=", "|", ">", "»", "[nav]")
 LINK_DENSITY_MAX = 0.30
 ALNUM_DENSITY_MIN = 0.50
 # token split regex (ASCII whitespace run)
@@ -43,6 +47,9 @@ TOKEN_SPLIT_RE = r"[ \t\n\r]+"
 # --- normalization (F2) ---------------------------------------------------
 # kept text spans are whitespace-squeezed + trimmed before emission
 WS_SQUEEZE_RE = r"[ \t\n\r]+"
+# a text holding none of these substrings, and neither starting nor ending
+# with " ", is already normal: strip and squeeze leave it unchanged
+WS_NORMALIZE_TRIGGERS = ("\t", "\n", "\r", "  ")
 
 # --- length cap (P3) — spans longer than this are still EMITTED in the
 # sequence but truncated text is never produced; the cap applies to the

@@ -62,7 +62,8 @@ def accumulated_fingerprints(spark: SparkSession, state_dir: str) -> DataFrame |
     dirs = [d for d in _fp_dirs(state_dir) if os.path.isdir(d)]
     if not dirs:
         return None
-    return spark.read.parquet(*dirs).select("fp")
+    # the state files hold one md5-hex column; a known schema skips inference
+    return spark.read.schema("fp string").parquet(*dirs)
 
 
 def append_bucketed_fingerprints(

@@ -46,19 +46,20 @@ def run_extract_stream(
     checkpoint: str,
 ) -> None:
     """Continuous extraction with the SAME commit contract as the batch
-    job: every non-empty micro-batch writes a results run directory and
-    commits its lineage and a snapshot manifest through commit_run, so time
-    travel and lineage hold across streaming and batch runs alike. The file
-    source's checkpoint gives exactly-once input progress; replayed epochs
-    (the at-least-once side of foreachBatch) converge because an epoch's
-    rows are deterministic: a committed run_id writes nothing and a complete
-    results dir is kept (keep_complete) — together that is the streaming
-    analog of the anti-join resume."""
+    job: every micro-batch writes a results run directory and commits its
+    lineage and a snapshot manifest through commit_run, so time travel and
+    lineage hold across streaming and batch runs alike. An empty epoch (a
+    zero-row file) commits a 0-doc run, as a batch no-op rerun does;
+    testing for emptiness first would cost a job that extracts the rows
+    the results write extracts again. The file source's checkpoint gives
+    exactly-once input progress; replayed epochs (the at-least-once side of
+    foreachBatch) converge because an epoch's rows are deterministic: a
+    committed run_id writes nothing and a complete results dir is kept
+    (keep_complete) — together that is the streaming analog of the
+    anti-join resume."""
     out = extract_stream(read_documents_stream(spark, input_path))
 
     def commit(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         commit_run(spark, batch_df, output_dir, f"stream-{epoch_id:06d}", keep_complete=True)
 
     (

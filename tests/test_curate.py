@@ -179,6 +179,28 @@ def test_incremental_curation_post_write_job_count(spark, tmp_path, monkeypatch)
     assert len(after_results) == 2
 
 
+def test_accumulated_fingerprints_starts_no_job(spark, tmp_path):
+    # the fp state is read with its known schema: building the frame
+    # lists the committed dirs and starts no schema-inference job
+    from bb_ocr_spark.plans.curate_incremental import (
+        accumulated_fingerprints,
+        run_incremental_curation,
+    )
+
+    state = str(tmp_path / "state")
+    for run in (1, 2, 3):
+        docs = spark.createDataFrame(
+            [(i, " ".join(f"w{run}_{i}_{j} the of and to" for j in range(12))) for i in range(4)],
+            "doc_id long, text string",
+        )
+        run_incremental_curation(spark, docs, state, f"run-{run}")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    fps = accumulated_fingerprints(spark, state)
+    assert dag.numTotalJobs() == before
+    assert fps.count() == 12
+
+
 def test_incremental_curation_bucketed_state_no_exchange(spark, tmp_path):
     # the 100 TB shape: fp state accumulates as a bucketed table, so the
     # per-delivery anti-join reads the state side WITHOUT an Exchange

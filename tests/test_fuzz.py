@@ -11,10 +11,10 @@ from __future__ import annotations
 import random
 import string
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from bb_ocr_spark import oracle
+from bb_ocr_spark import config, oracle
 from bb_ocr_spark.operators.layout import xy_cut_order
 from bb_ocr_spark.operators.tokenizer import tokenize_html_oracle
 
@@ -42,6 +42,48 @@ def test_normalize_idempotent(t):
     n = oracle.normalize_text(t)
     assert oracle.normalize_text(n) == n
     assert "  " not in n and not n.startswith(" ") and not n.endswith(" ")
+
+
+@given(st.one_of(st.from_regex(config.LINK_TOKEN_RE), st.text(max_size=12)))
+@example("http://")
+@example("https://")
+@example("href=")
+@example("|")
+@example(">")
+@example("»")
+@example("[nav]")
+@settings(max_examples=300, deadline=None)
+def test_link_tokens_hold_a_marker(t):
+    # the Spark classifier counts link tokens only in texts holding a
+    # marker; exact only if every link token holds one
+    if oracle._LINK_TOKEN.match(t):
+        assert any(m in t for m in config.LINK_TOKEN_MARKERS), t
+
+
+def _needs_normalizing(t: str) -> bool:
+    return (
+        any(x in t for x in config.WS_NORMALIZE_TRIGGERS)
+        or t.startswith(" ")
+        or t.endswith(" ")
+    )
+
+
+single_spaced = st.lists(
+    st.text(alphabet=string.ascii_letters + "\t\n\r\x0b\u00a0|»", min_size=1, max_size=8),
+    max_size=8,
+).map(" ".join)
+
+
+@given(st.one_of(texts, single_spaced))
+@example("a\tb")
+@example("a\nb")
+@example("a\rb")
+@example("a  b")
+@settings(max_examples=300, deadline=None)
+def test_normalize_is_identity_without_a_trigger(t):
+    # the Spark normaliser returns such a text unchanged without a regex
+    if not _needs_normalizing(t):
+        assert oracle.normalize_text(t) == t, repr(t)
 
 
 @given(st.text(max_size=300))
@@ -96,6 +138,10 @@ def _adversarial_corpus() -> list[str]:
         "a https://x b", "ISBN 978-1-23-45678-9", "$1.50", "...",
         "é ü ß déjà", "a" * 330, "a" * 331, " lead", "trail ", "a  b   c",
         "\r\n\t mixed \t ws \n", "»", "> >", "12345", "x|y",
+        "htt p://x", "http", "ahttp://x", "x>y", "a » b",
+        "[nav]x", "[na v]", "href",
+        "a\tb", "a\rb", "\t|\t", "|\r\n|", "a b ",
+        "\u00a0a\u00a0", "a\x0bb",
     ]
     for _ in range(250):
         n = rng.randint(1, 120)

@@ -431,6 +431,51 @@ def test_stream_commit_job_count(spark, tmp_path):
     assert current_snapshot(out)["n_docs_total"] == 40
 
 
+def _jobs_started(spark) -> int:
+    # every job counts, whatever its group (streaming sets its own)
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_stream_epoch_job_count(spark, tmp_path):
+    # a one-epoch pass starts the results write, the lineage aggregation's
+    # map stage and the metrics write; no job tests the epoch for rows
+    from bb_ocr_spark import datagen
+    from bb_ocr_spark.plans.snapshots import current_snapshot
+    from bb_ocr_spark.streaming.extract_stream import run_extract_stream
+
+    docs_dir = str(tmp_path / "docs")
+    out = str(tmp_path / "out")
+    datagen.generate_df(spark, 40, partitions=4).write.parquet(docs_dir)
+    before = _jobs_started(spark)
+    run_extract_stream(spark, docs_dir, out, str(tmp_path / "ckpt"))
+    assert _jobs_started(spark) - before <= 3
+    assert current_snapshot(out)["n_docs_total"] == 40
+
+
+def test_stream_empty_epoch_commits_zero_docs(spark, tmp_path):
+    # an epoch over a zero-row file commits a 0-doc run whose lineage
+    # reconciles with its manifest, like a batch no-op rerun
+    from bb_ocr_spark import datagen
+    from bb_ocr_spark.plans.snapshots import current_snapshot
+    from bb_ocr_spark.streaming.extract_stream import DOCS_SCHEMA_DDL, run_extract_stream
+    from lineage_checks import assert_lineage_matches_manifest
+
+    docs_dir = str(tmp_path / "docs")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    datagen.generate_df(spark, 20, partitions=2).write.parquet(docs_dir)
+    run_extract_stream(spark, docs_dir, out, ckpt)
+    s1 = current_snapshot(out)
+    spark.createDataFrame([], DOCS_SCHEMA_DDL).coalesce(1).write.mode("append").parquet(
+        docs_dir
+    )
+    run_extract_stream(spark, docs_dir, out, ckpt)
+    s2 = current_snapshot(out)
+    assert s2["snapshot_id"] == s1["snapshot_id"] + 1
+    assert s2["n_docs_total"] == s1["n_docs_total"] == 20
+    assert_lineage_matches_manifest(spark, out, s2["run_ids"][-1])
+
+
 def test_snapshot_reader_ignores_stale_pointer_and_sorts_numerically(tmp_path):
     import json
     import os
