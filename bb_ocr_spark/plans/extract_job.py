@@ -25,24 +25,27 @@ completed set is small).
 Lineage is ONE aggregation over the committed run, re-read with its known
 schema (no inference job) and written as the metrics rows without leaving
 Spark; observe() on that write sums and xors the rows into the run's n_docs
-and the manifest's run checksum. Per-task wall time from a SparkListener
-scoped to the commit job group (plans/task_metrics.py) is looked up by
-partition id in a literal map, NULL without the listener.
+and the manifest's run checksum. Per-task wall time is read from Spark's
+status store for the write's result stage, scoped by a job tag
+(per_task_durations), and looked up by partition id in a literal map: NULL
+for a partition the status store has no successful task for.
 """
 
 from __future__ import annotations
 
 import datetime
+import logging
 import os
 import time
 import uuid
+from contextlib import contextmanager
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import OUT_SCHEMA_DDL, checksum_spans_col, extract_inline
 from .snapshots import RESULTS_DIR, commit_snapshot, current_snapshot, run_dir, write_run
-from .task_metrics import per_task_durations
 
 METRICS = "metrics"
 # a results run dir's files (batch and streaming runs); no inference job
@@ -51,6 +54,58 @@ METRICS_SCHEMA = (
     "part_id int, doc_id_min string, doc_id_max string, n_docs bigint, n_spans bigint, "
     "checksum bigint, wall_time_ms int, committed_at timestamp, task_wall_ms bigint"
 )
+
+
+def _drain_listener_bus(sc) -> None:
+    """Wait up to 10 s for queued listener events, which feed the status
+    store; raises on a timeout."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+
+
+def _result_stage_tasks(sc, tag: str) -> list[tuple[int, int]]:
+    """(partition index, task ms) of each successful task of the result stage
+    (highest stage id) of the highest job id tagged `tag`, stage attempt by
+    attempt in task-id order. Reads Spark's status store; starts no job."""
+    jvm = sc._jsc.sc()
+    tracker, store = jvm.statusTracker(), jvm.statusStore()
+    jobs = tracker.getJobIdsForTag(tag)
+    if not jobs:
+        return []
+    stage = max(tracker.getJobInfo(max(jobs)).get().stageIds())
+    out = []
+    for attempt in range(tracker.getStageInfo(stage).get().currentAttemptId() + 1):
+        tasks = store.taskList(stage, attempt, 2**31 - 1)
+        for t in (tasks.apply(i) for i in range(tasks.size())):
+            if t.status() == "SUCCESS":
+                out.append((t.index(), int(t.duration().get())))
+    return out
+
+
+@contextmanager
+def per_task_durations(spark: SparkSession, group: str):
+    """Context manager: run ONE action inside; its result stage's
+    {partition index -> task ms} fills the yielded dict AFTER the block exits
+    (empty during it). With several actions inside, the last job's result
+    stage is kept. Only successful tasks count, the first per index across
+    stage attempts. The block's jobs carry a job tag unique to this entry, so
+    a replayed run (same group) never reads an earlier attempt's tasks; the
+    caller's job group, description and other tags are left as they were."""
+    sc = spark.sparkContext
+    tag = f"{group}-{uuid.uuid4().hex[:8]}"
+    out: dict[int, int] = {}
+    sc.addJobTag(tag)
+    try:
+        yield out
+    finally:
+        sc.removeJobTag(tag)
+    try:
+        _drain_listener_bus(sc)
+    except (Py4JJavaError, TimeoutError) as e:
+        # read what the store holds: a subset of the partitions, the rest NULL
+        msg = "listener bus not drained for job group %s: %s"
+        logging.getLogger(__name__).warning(msg, group, e)
+    for index, ms in _result_stage_tasks(sc, tag):
+        out.setdefault(index, ms)
 
 
 def _committed_runs(output_dir: str) -> list[str]:

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,7 +21,7 @@ from bb_ocr_spark.plans.extract_job import (
     run_extract_job,
 )
 from bb_ocr_spark.plans.snapshots import current_snapshot
-from lineage_checks import assert_lineage_matches_manifest
+from lineage_checks import assert_lineage_matches_manifest, jobs_outside_results_write
 
 N = 80
 
@@ -61,7 +62,7 @@ def test_resume_and_lineage(spark, tmp_path):
     total_ck = res.selectExpr("bit_xor(checksum)").collect()[0][0]
     m_ck = m.selectExpr("bit_xor(checksum)").collect()[0][0]
     assert total_ck == m_ck
-    # per-task wall time from the SparkListener: present on every lineage
+    # per-task wall time from the status store: present on every lineage
     # row in local mode, positive, and no larger than the run-level clock
     tk = m.select("task_wall_ms", "wall_time_ms").collect()
     assert all(r["task_wall_ms"] is not None for r in tk)
@@ -150,18 +151,18 @@ def test_rerun_committed_run_id_writes_nothing(spark, tmp_path):
     assert_lineage_matches_manifest(spark, out, "r1")
 
 
-def test_resumed_run_job_count(spark, tmp_path):
-    # outside its commit job group, a resumed run starts only the lineage
+def test_resumed_run_job_count(spark, tmp_path, monkeypatch):
+    # besides its results write, a resumed run starts only the lineage
     # aggregation's map stage and the metrics write, which runs its result
     # stage and observes the run totals: the resume listing and the
-    # post-write re-read pass a schema, so neither infers one
-    sc = spark.sparkContext
+    # post-write re-read pass a schema, so neither infers one, and the
+    # task-time read starts none
     out = str(tmp_path / "job")
     full = datagen.generate_df(spark, N, partitions=4)
     run_extract_job(spark, full.filter(f"doc_id < '{datagen.doc_id_of(N // 2)}'"), out)
-    before = set(sc.statusTracker().getJobIdsForGroup(None))
-    run_extract_job(spark, full, out)
-    assert len(set(sc.statusTracker().getJobIdsForGroup(None)) - before) <= 2
+    with jobs_outside_results_write(spark, monkeypatch) as jobs:
+        run_extract_job(spark, full, out)
+    assert len(jobs) <= 2, sorted(jobs)
 
 
 def test_rerun_compiles_no_new_code(spark, tmp_path):
@@ -203,15 +204,11 @@ def test_resumed_run_ships_no_driver_rows(spark, tmp_path, monkeypatch):
     assert_lineage_matches_manifest(spark, out, "r2")
 
 
-def test_run_without_listener_commits(spark, tmp_path, monkeypatch):
-    # no per-task times: the run still commits, every lineage row carries
-    # a NULL task_wall_ms and the observed totals match the lineage rows
-    import pyspark.java_gateway
-
-    def unavailable(gateway):
-        raise RuntimeError("no callback server")
-
-    monkeypatch.setattr(pyspark.java_gateway, "ensure_callback_server_started", unavailable)
+def test_run_without_task_times_commits(spark, tmp_path, monkeypatch):
+    # the status store holds no task of the write: the run still commits,
+    # every lineage row carries a NULL task_wall_ms and the observed totals
+    # match the lineage rows
+    monkeypatch.setattr(extract_job, "_result_stage_tasks", lambda sc, tag: [])
     out = str(tmp_path / "job")
     s = run_extract_job(spark, datagen.generate_df(spark, N, partitions=4), out, run_id="r1")
     assert s["n_docs"] == N and current_snapshot(out)["run_ids"] == ["r1"]
@@ -221,45 +218,43 @@ def test_run_without_listener_commits(spark, tmp_path, monkeypatch):
     assert_lineage_matches_manifest(spark, out, "r1")
 
 
-def test_per_task_durations_clears_job_properties(spark):
-    from bb_ocr_spark.plans.task_metrics import per_task_durations
-
+def test_per_task_durations_keeps_caller_job_group(spark):
+    # a commit inside a streaming epoch runs in its query's job group: the
+    # group and description must survive it, and the block's tag must not
     sc = spark.sparkContext
-    with per_task_durations(spark, "props-probe") as task_ms:
-        spark.range(100, numPartitions=2).write.format("noop").mode("overwrite").save()
-    assert set(task_ms) == {0, 1}
-    assert sc.getLocalProperty("spark.jobGroup.id") is None
-    assert sc.getLocalProperty("spark.job.description") is None
-
-
-def test_per_task_durations_warns_without_listener(spark, monkeypatch, caplog):
-    import pyspark.java_gateway
-
-    def unavailable(gateway):
-        raise RuntimeError("no callback server")
-
-    monkeypatch.setattr(pyspark.java_gateway, "ensure_callback_server_started", unavailable)
-    from bb_ocr_spark.plans.task_metrics import per_task_durations
-
-    with caplog.at_level("WARNING"), per_task_durations(spark, "no-listener") as task_ms:
-        spark.range(10).count()
-    assert task_ms == {}
-    assert "listener not attached" in caplog.text
+    sc.setJobGroup("outer-group", "outer description")
+    try:
+        with extract_job.per_task_durations(spark, "props-probe") as task_ms:
+            spark.range(100, numPartitions=2).write.format("noop").mode("overwrite").save()
+        assert set(task_ms) == {0, 1}
+        assert sc.getLocalProperty("spark.jobGroup.id") == "outer-group"
+        assert sc.getLocalProperty("spark.job.description") == "outer description"
+        assert not sc.getJobTags()
+    finally:
+        sc._jsc.clearJobGroup()
 
 
 def test_per_task_durations_warns_when_bus_not_drained(spark, monkeypatch, caplog):
-    from bb_ocr_spark.plans import task_metrics
-
     def timed_out(sc):
         raise TimeoutError("listener bus still busy")
 
-    monkeypatch.setattr(task_metrics, "_drain_listener_bus", timed_out)
+    monkeypatch.setattr(extract_job, "_drain_listener_bus", timed_out)
     with caplog.at_level("WARNING"):
-        with task_metrics.per_task_durations(spark, "slow-bus") as task_ms:
+        with extract_job.per_task_durations(spark, "slow-bus") as task_ms:
             spark.range(100, numPartitions=2).write.format("noop").mode("overwrite").save()
     assert "not drained for job group slow-bus" in caplog.text
     # whatever arrived is still read: a subset of the write's partitions
     assert set(task_ms) <= {0, 1}
+
+
+def test_no_listener_and_no_job_group_in_sources():
+    # per-task times come from Spark's status store under a job tag: no
+    # py4j listener, no callback server, no job group that would replace
+    # the caller's
+    repo = Path(__file__).resolve().parents[1]
+    sources = [p for d in ("bb_ocr_spark", "jobs", "tools") for p in (repo / d).rglob("*.py")]
+    for needle in ("addSparkListener", "ensure_callback_server_started", "setJobGroup"):
+        assert not [p for p in sources if needle in p.read_text()], needle
 
 
 def test_noop_rerun(spark, tmp_path):

@@ -412,22 +412,23 @@ def test_streaming_runs_commit_lineage(spark, tmp_path):
         assert_lineage_matches_manifest(spark, out, run_id)
 
 
-def test_stream_commit_job_count(spark, tmp_path):
-    # outside its commit job group, a streaming epoch's commit starts only
+def test_stream_commit_job_count(spark, tmp_path, monkeypatch):
+    # besides its results write, a streaming epoch's commit starts only
     # the lineage aggregation's map stage and the metrics write: the
     # committed files are re-read with their known schema and the totals
     # are observed on the metrics write, not collected in a job of their own
+    from lineage_checks import jobs_outside_results_write
+
     from bb_ocr_spark import datagen
     from bb_ocr_spark.plans.extract_job import commit_run
     from bb_ocr_spark.plans.snapshots import current_snapshot
     from bb_ocr_spark.streaming.extract_stream import extract_stream
 
-    sc = spark.sparkContext
     out = str(tmp_path / "out")
     batch = extract_stream(datagen.generate_df(spark, 40, partitions=4))
-    before = set(sc.statusTracker().getJobIdsForGroup(None))
-    commit_run(spark, batch, out, "stream-000000", keep_complete=True)
-    assert len(set(sc.statusTracker().getJobIdsForGroup(None)) - before) <= 2
+    with jobs_outside_results_write(spark, monkeypatch) as jobs:
+        commit_run(spark, batch, out, "stream-000000", keep_complete=True)
+    assert len(jobs) <= 2, sorted(jobs)
     assert current_snapshot(out)["n_docs_total"] == 40
 
 
