@@ -12,6 +12,7 @@ import functools
 import os
 import sys
 from collections.abc import Callable
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -651,99 +652,56 @@ FROM events GROUP BY event_type
 
 
 def _ivf_model_dir() -> str:
-    """Canonical corpus for the IVF centroid MODEL, shared by the Spark
-    query and the SQL-oracle generator. Pinning the model to ONE dir
+    """Canonical corpus of the ANN models (_ann_model), shared by the
+    Spark queries and their SQL oracles. Pinning the models to ONE dir
     (instead of the gate's sf_dir) makes the gate sf-portable with no
-    env var: both engines always train on the same bytes whatever sf the
-    gate runs at, and the gated semantics (assignment, probe pruning,
-    re-rank over the gate corpus) are fully exercised either way.
-    SPARK_GRAFT_ORACLE_SF_DIR overrides to train the model at another
+    env var: the models are the same whatever sf the gate runs at, and
+    the gated semantics (assignment, probe pruning, re-rank over the
+    gate corpus) are fully exercised either way.
+    SPARK_GRAFT_ORACLE_SF_DIR overrides to train the models at another
     scale; resolved at call time, not import time."""
     return os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
-def _model_sample(model_dir: str):
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    pdf = (
-        pd.read_parquet(
-            os.path.join(model_dir, "embeddings.parquet"),
-            columns=["vec_id", "embedding"],
-        )
-        .sort_values("vec_id")
-        .head(4096)
-    )
-    return np.stack(pdf["embedding"].to_numpy()).astype("float64")
+class _AnnModel(NamedTuple):
+    centroids: Any  # 16 IVF centroids (16 × 64)
+    codebooks: list  # 8 PQ codebooks (16 × 8 each)
+    residual_books: list  # 8 residual PQ codebooks (16 × 8 each)
 
 
 @functools.lru_cache(maxsize=8)
-def _cents_for(model_dir: str):
-    """IVF centroids for a model dir, trained ONCE per process via the
-    pyarrow read path — bit-identical to train_centroids' Spark read
-    (both sort + cap the sample; documented in train_centroids). The
-    centroid model is a deterministic artifact of the directory, so
-    caching it is the train-once production shape, not a bench cheat."""
-    from bb_ocr_spark.operators.similarity import kmeans_numpy
-
-    return kmeans_numpy(_model_sample(model_dir), 16)
-
-
-@functools.lru_cache(maxsize=8)
-def _books_for(model_dir: str):
-    """PQ codebooks for a model dir, trained once per process (the
-    pyarrow twin of train_pq_codebooks: unit-normalized sorted sample,
-    per-subspace plain-L2 k-means — the same recipe pq_oracle_sql uses)."""
-    import numpy as np  # noqa: PLC0415
-
-    from bb_ocr_spark import config as C  # noqa: PLC0415
-    from bb_ocr_spark.operators.similarity import kmeans_l2_numpy
-
-    x = _model_sample(model_dir)
-    x = x / np.linalg.norm(x, axis=1, keepdims=True)
-    dsub = 64 // 8
-    return [
-        kmeans_l2_numpy(x[:, j * dsub : (j + 1) * dsub], 16, 10, C.SEED + j)
-        for j in range(8)
-    ]
-
-
-@functools.lru_cache(maxsize=8)
-def _res_books_for(model_dir: str):
-    """Residual PQ codebooks for a model dir, trained once per process —
-    the pyarrow twin of train_residual_codebooks: sorted sample,
-    coarse-assigned via the shared coarse_assign_numpy (raw dots, 9dp,
-    ties -> highest centroid — the runtime encoder's exact rule),
-    unit-sphere residuals quantized per-subspace with plain-L2 k-means. Bit-identical to ivfpq_residual_oracle_sql's
-    training, so both engines carry the same shifted codebooks."""
-    import numpy as np  # noqa: PLC0415
-
-    from bb_ocr_spark import config as C  # noqa: PLC0415
-    from bb_ocr_spark.operators.similarity import (
-        coarse_assign_numpy,
-        kmeans_l2_numpy,
+def _ann_model(model_dir: str) -> _AnnModel:
+    """The ANN models of a model dir, trained ONCE per process from its
+    training sample with the library recipes. Each ANN query and its SQL
+    oracle take the same model objects from here, so the gate checks
+    the SQL replay of assignment, probing, ADC and ranking against the
+    model the query used. The model is a deterministic artifact of the
+    directory, so caching it is the train-once production shape, not a
+    bench cheat."""
+    from bb_ocr_spark.operators.similarity import (  # noqa: PLC0415
+        kmeans_numpy,
+        pq_codebooks_numpy,
+        residual_codebooks_numpy,
+        training_sample_parquet,
     )
 
-    x = _model_sample(model_dir)
-    u = x / np.linalg.norm(x, axis=1, keepdims=True)
-    cents = _cents_for(model_dir)
-    assign = coarse_assign_numpy(x, cents)
-    r = u - cents[assign]
-    dsub = 64 // 8
-    return [
-        kmeans_l2_numpy(r[:, j * dsub : (j + 1) * dsub], 16, 10, C.SEED + j)
-        for j in range(8)
-    ]
+    x = training_sample_parquet(os.path.join(model_dir, "embeddings.parquet"))
+    cents = kmeans_numpy(x, 16)
+    return _AnnModel(
+        cents,
+        pq_codebooks_numpy(x, m=8, ksub=16),
+        residual_codebooks_numpy(x, cents, m=8, ksub=16),
+    )
 
 
 def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # IVF over k-means-trained centroids; the oracle retrains the identical
-    # centroid model (shared numpy core, sorted sample) and replays the full
-    # IVF semantics — assignment, n_probe pruning, re-rank — in SQL
+    # IVF over k-means-trained centroids; the oracle replays the full IVF
+    # semantics — assignment, n_probe pruning, re-rank — in SQL against
+    # the same centroid model
     from bb_ocr_spark.operators.similarity import ivf_topk
 
     emb = _emb(spark, sf_dir)
-    cents = _cents_for(_ivf_model_dir())
+    cents = _ann_model(_ivf_model_dir()).centroids
     return ivf_topk(
         emb, emb.filter(F.col("vec_id") < 10), dim=64, k=5, n_probe=4,
         centroids=cents,
@@ -754,58 +712,52 @@ def _oracle_ivf() -> str:
     from bb_ocr_spark.operators.similarity import ivf_oracle_sql
 
     return ivf_oracle_sql(
-        os.path.join(_ivf_model_dir(), "embeddings.parquet"),
-        n_centroids=16, n_probe=4, k=5, max_query_id=10,
+        _ann_model(_ivf_model_dir()).centroids, n_probe=4, k=5, max_query_id=10
     )
 
 
 def _q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # product-quantization ADC top-k: corpus scanned as m-byte codes,
-    # query-side distance tables; codebooks train on the canonical model
-    # dir in BOTH engines (same sf-portability rule as ivf_topk)
+    # query-side distance tables; codebooks come from the canonical model
+    # dir (same sf-portability rule as ivf_topk)
     from bb_ocr_spark.operators.similarity import pq_topk
 
     emb = _emb(spark, sf_dir)
-    books = _books_for(_ivf_model_dir())
+    books = _ann_model(_ivf_model_dir()).codebooks
     return pq_topk(emb, emb.filter(F.col("vec_id") < 10), books, k=5)
 
 
 def _oracle_pq() -> str:
     from bb_ocr_spark.operators.similarity import pq_oracle_sql
 
-    return pq_oracle_sql(
-        os.path.join(_ivf_model_dir(), "embeddings.parquet"),
-        dim=64, m=8, ksub=16, k=5, max_query_id=10,
-    )
+    return pq_oracle_sql(_ann_model(_ivf_model_dir()).codebooks, k=5, max_query_id=10)
 
 
 def _q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two-stage FAISS-style ANN: IVF coarse pruning + PQ-ADC fine
-    # scoring; both models train on the canonical model dir in both
-    # engines (the ivf_topk/pq_topk portability rule)
+    # scoring; both models come from the canonical model dir (the
+    # ivf_topk/pq_topk portability rule)
     from bb_ocr_spark.operators.similarity import ivfpq_topk
 
     emb = _emb(spark, sf_dir)
-    cents = _cents_for(_ivf_model_dir())
-    books = _books_for(_ivf_model_dir())
+    model = _ann_model(_ivf_model_dir())
     return ivfpq_topk(
         emb,
         emb.filter(F.col("vec_id") < 10),
         dim=64,
-        codebooks=books,
+        codebooks=model.codebooks,
         k=5,
         n_probe=4,
-        centroids=cents,
+        centroids=model.centroids,
     )
 
 
 def _oracle_ivfpq() -> str:
     from bb_ocr_spark.operators.similarity import ivfpq_oracle_sql
 
+    model = _ann_model(_ivf_model_dir())
     return ivfpq_oracle_sql(
-        os.path.join(_ivf_model_dir(), "embeddings.parquet"),
-        dim=64, m=8, ksub=16, k=5, n_centroids=16, n_probe=4,
-        max_query_id=10,
+        model.centroids, model.codebooks, k=5, n_probe=4, max_query_id=10
     )
 
 
@@ -813,16 +765,17 @@ def _q_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     # classical IVFADC: PQ codebooks trained on COARSE RESIDUALS, ADC
     # against per-list shifted codebooks — strictly finer quantization
     # than ivfpq_topk's direct encoding at the same bit budget; models
-    # train on the canonical dir in both engines (the ivf_topk rule)
+    # come from the canonical dir (the ivf_topk rule)
     from bb_ocr_spark.operators.similarity import ivfpq_topk_residual
 
     emb = _emb(spark, sf_dir)
+    model = _ann_model(_ivf_model_dir())
     return ivfpq_topk_residual(
         emb,
         emb.filter(F.col("vec_id") < 10),
         dim=64,
-        centroids=_cents_for(_ivf_model_dir()),
-        residual_books=_res_books_for(_ivf_model_dir()),
+        centroids=model.centroids,
+        residual_books=model.residual_books,
         k=5,
         n_probe=4,
     )
@@ -831,10 +784,9 @@ def _q_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _oracle_ivfpq_residual() -> str:
     from bb_ocr_spark.operators.similarity import ivfpq_residual_oracle_sql
 
+    model = _ann_model(_ivf_model_dir())
     return ivfpq_residual_oracle_sql(
-        os.path.join(_ivf_model_dir(), "embeddings.parquet"),
-        dim=64, m=8, ksub=16, k=5, n_centroids=16, n_probe=4,
-        max_query_id=10,
+        model.centroids, model.residual_books, k=5, n_probe=4, max_query_id=10
     )
 
 
@@ -2424,9 +2376,9 @@ def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SemDeDup (Abbas et al. 2023) semantic near-dup pruning: spherical
     # k-means clusters (shared canonical centroid model, same as ivf_topk)
     # + within-cluster low-centroid-similarity keeper rule. The oracle
-    # retrains the identical model and replays assignment, the round-6
-    # centroid cosine, and the (ccos ASC, id ASC) earlier-item EXISTS in
-    # SQL. Near-dups planted exactly as in embedding_dup_pairs.
+    # replays assignment against the same model, the round-6 centroid
+    # cosine, and the (ccos ASC, id ASC) earlier-item EXISTS in SQL.
+    # Near-dups planted exactly as in embedding_dup_pairs.
     from bb_ocr_spark.operators.similarity import semantic_dedup
 
     emb = _emb(spark, sf_dir).select(
@@ -2438,7 +2390,7 @@ def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", lambda x: x * F.lit(1.001)).alias("embedding"),
     )
     allv = emb.unionByName(dup)
-    cents = _cents_for(_ivf_model_dir())
+    cents = _ann_model(_ivf_model_dir()).centroids
     return semantic_dedup(
         allv, dim=64, n_clusters=16, threshold=0.99, centroids=cents
     )
@@ -2448,8 +2400,7 @@ def _oracle_semantic_dedup() -> str:
     from bb_ocr_spark.operators.similarity import semantic_dedup_oracle_sql
 
     return semantic_dedup_oracle_sql(
-        os.path.join(_ivf_model_dir(), "embeddings.parquet"),
-        dim=64, n_clusters=16, threshold=0.99, n_planted=25,
+        _ann_model(_ivf_model_dir()).centroids, threshold=0.99, n_planted=25
     )
 
 

@@ -406,47 +406,65 @@ def _centroids(dim: int, n_centroids: int, seed: int = config.SEED):
     return c / np.linalg.norm(c, axis=1, keepdims=True)
 
 
+# Every ANN model trains on one sample of its corpus: the first
+# SAMPLE_CAP vectors by id. Sorting pins the sample (a Spark `limit` on a
+# multi-file read has no stable order), so the two readers below return
+# the same array for the same rows, and each recipe runs a fixed number
+# of k-means iterations from config.SEED.
+SAMPLE_CAP = 4096
+KMEANS_ITERS = 10
+
+
+def training_sample(
+    corpus: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
+):
+    """The training sample of a corpus frame, float64 (n × dim): a Spark
+    `orderBy(id).limit(SAMPLE_CAP)` collected to the driver. The models
+    are tiny and training them on a bounded sample is the standard IVF/PQ
+    recipe; at 100 TB the equivalent is a `sample(fraction).limit(cap)`
+    collect of a few thousand vectors."""
+    import numpy as np  # noqa: PLC0415
+
+    pdf = corpus.select(id_col, vec_col).orderBy(id_col).limit(SAMPLE_CAP).toPandas()
+    return np.stack(pdf[vec_col].to_numpy()).astype("float64")
+
+
+def training_sample_parquet(path: str):
+    """The same sample read with pyarrow from a parquet file or directory
+    of (vec_id, embedding) rows, for callers with no Spark session (the
+    driver contract's SQL oracles)."""
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+
+    pdf = (
+        pd.read_parquet(path, columns=["vec_id", "embedding"])
+        .sort_values("vec_id")
+        .head(SAMPLE_CAP)
+    )
+    return np.stack(pdf["embedding"].to_numpy()).astype("float64")
+
+
 def train_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    sample_cap: int = 4096,
-    iters: int = 10,
-    seed: int = config.SEED,
 ):
-    """Spherical k-means centroids from a bounded, seeded corpus sample.
-
-    The sample is capped driver-side (at 100 TB the equivalent is a
-    `sample(fraction).limit(cap)` collect of a few thousand vectors — the
-    centroid model is tiny and training it on a sample is the standard IVF
-    recipe; a fully-distributed k-means|| would only change WHO computes
-    the same few-KB model). Deterministic: fixed seed, fixed iteration
-    count, sample = first sample_cap rows by id (a Spark `limit` on a
-    multi-file read has no stable order; sorting pins the sample so any
-    reader — Spark here, pyarrow in the SQL-oracle generator — trains the
-    bit-identical model)."""
-    import numpy as np  # noqa: PLC0415
-
-    pdf = (
-        corpus.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(sample_cap)
-        .toPandas()
-    )
-    x = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-    return kmeans_numpy(x, n_centroids, iters, seed)
+    """Spherical k-means centroids (kmeans_numpy) of the corpus's training
+    sample. A fully-distributed k-means|| would only change WHO computes
+    the same few-KB model."""
+    return kmeans_numpy(training_sample(corpus, vec_col, id_col), n_centroids)
 
 
-def kmeans_numpy(x, n_centroids: int, iters: int = 10, seed: int = config.SEED):
-    """Deterministic spherical-k-means core shared by train_centroids and
-    the SQL-oracle generator (both must produce bit-identical centroids)."""
+def kmeans_numpy(x, n_centroids: int):
+    """The IVF centroid recipe: deterministic spherical k-means of a
+    training sample (rows unit-normalized, cosine assignment)."""
     import numpy as np  # noqa: PLC0415
 
     x = x / np.linalg.norm(x, axis=1, keepdims=True)
-    rng = np.random.RandomState(seed + 2)
+    rng = np.random.RandomState(config.SEED + 2)
     cents = x[rng.choice(len(x), size=n_centroids, replace=False)].copy()
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         assign = (x @ cents.T).argmax(axis=1)
         for c in range(n_centroids):
             members = x[assign == c]
@@ -675,44 +693,30 @@ WHERE round(list_cosine_similarity(x.v, y.v), 6) >= {threshold}
 
 
 def ivf_oracle_sql(
-    parquet_path: str,
-    n_centroids: int = 16,
+    centroids,
     n_probe: int = 4,
     k: int = 5,
     max_query_id: int = 10,
-    table: str = "embeddings",
-    sample_cap: int = 4096,
-    seed: int = config.SEED,
 ) -> str:
-    """DuckDB SQL recomputing ivf_topk EXACTLY: the k-means centroids are
-    retrained here (pyarrow read, same sorted sample + kmeans_numpy as
-    train_centroids — bit-identical model) and folded into the SQL as
+    """DuckDB SQL recomputing ivf_topk EXACTLY over the `embeddings`
+    table: the SQL replays the given centroid model, folded in as
     literals; list assignment, probe selection, and re-rank mirror the
     Spark expressions including tie-breaks (argmax ties → highest centroid
     index; probe order (dot desc, index desc)) and the round-9 dot
     stabilization. A green driver row therefore verifies the whole IVF
     operator — assignment, n_probe pruning, exact re-rank — not just its
     output shape."""
-    import pandas as pd  # noqa: PLC0415
-    import numpy as np  # noqa: PLC0415
-
-    pdf = (
-        pd.read_parquet(parquet_path, columns=["vec_id", "embedding"])
-        .sort_values("vec_id")
-        .head(sample_cap)
-    )
-    x = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-    cents = kmeans_numpy(x, n_centroids, seed=seed)
+    n_centroids = len(centroids)
     ds_terms = ", ".join(
         "round(list_dot_product(CAST(embedding AS DOUBLE[]), ["
         + ", ".join(repr(float(v)) for v in c)
         + "]), 9)"
-        for c in cents
+        for c in centroids
     )
     idxs = ", ".join(str(i) for i in range(n_centroids))
     return f"""
 WITH dots AS (
-  SELECT vec_id, embedding, [{ds_terms}] AS ds FROM {table}
+  SELECT vec_id, embedding, [{ds_terms}] AS ds FROM embeddings
 ), assigned AS (
   SELECT vec_id, embedding,
          {n_centroids} - list_position(list_reverse(ds), list_max(ds)) AS list_id
@@ -745,18 +749,16 @@ WHERE rk <= {k}
 # --------------------------------------------------------------------------
 
 
-def kmeans_l2_numpy(x, ksub: int, iters: int = 10, seed: int = config.SEED):
+def kmeans_l2_numpy(x, ksub: int, seed: int):
     """Deterministic plain-L2 k-means (PQ codebooks quantize raw
     subvectors, so EUCLIDEAN centroids — unlike the spherical
-    kmeans_numpy used for IVF's cosine coarse quantizer). Shared by
-    train_pq_codebooks and the SQL-oracle generator: both retrain the
-    bit-identical model from the same sorted sample."""
+    kmeans_numpy used for IVF's cosine coarse quantizer)."""
     import numpy as np  # noqa: PLC0415
 
     x = x.astype("float64")
     rng = np.random.RandomState(seed + 3)
     cents = x[rng.choice(len(x), size=ksub, replace=False)].copy()
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         d = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
         assign = d.argmin(axis=1)
         for c in range(ksub):
@@ -766,20 +768,19 @@ def kmeans_l2_numpy(x, ksub: int, iters: int = 10, seed: int = config.SEED):
     return cents
 
 
-def train_pq_codebooks(
-    corpus: DataFrame,
-    dim: int,
-    m: int = 8,
-    ksub: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_cap: int = 4096,
-    iters: int = 10,
-    seed: int = config.SEED,
-):
-    """One L2 codebook (ksub × dim/m) per subspace, trained on the same
-    bounded SORTED sample discipline as train_centroids — deterministic
-    for any reader, so the SQL oracle retrains the identical model.
+def _subspace_codebooks(x, m: int, ksub: int):
+    """One L2 codebook (ksub × dim/m) per subspace j of x, seeded
+    config.SEED + j."""
+    assert x.shape[1] % m == 0, "dim must divide evenly into m subspaces"
+    dsub = x.shape[1] // m
+    return [
+        kmeans_l2_numpy(x[:, j * dsub : (j + 1) * dsub], ksub, config.SEED + j)
+        for j in range(m)
+    ]
+
+
+def pq_codebooks_numpy(x, m: int, ksub: int):
+    """The PQ codebook recipe over a training sample x (n × dim).
 
     Vectors are L2-NORMALIZED before splitting into subspaces (and the
     encode/query path normalizes identically): on unit vectors
@@ -789,17 +790,24 @@ def train_pq_codebooks(
     collapsed 0.8 → 0.17 on the test corpus)."""
     import numpy as np  # noqa: PLC0415
 
-    assert dim % m == 0, "dim must divide evenly into m subspaces"
-    pdf = (
-        corpus.select(id_col, vec_col).orderBy(id_col).limit(sample_cap).toPandas()
+    return _subspace_codebooks(
+        x / np.linalg.norm(x, axis=1, keepdims=True), m, ksub
     )
-    x = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-    x = x / np.linalg.norm(x, axis=1, keepdims=True)
-    dsub = dim // m
-    return [
-        kmeans_l2_numpy(x[:, j * dsub : (j + 1) * dsub], ksub, iters, seed + j)
-        for j in range(m)
-    ]
+
+
+def train_pq_codebooks(
+    corpus: DataFrame,
+    dim: int,
+    m: int = 8,
+    ksub: int = 16,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+):
+    """pq_codebooks_numpy over the corpus's training sample; `dim` is the
+    vector width, checked against the sample."""
+    x = training_sample(corpus, vec_col, id_col)
+    assert x.shape[1] == dim, (x.shape, dim)
+    return pq_codebooks_numpy(x, m, ksub)
 
 
 def _sub_l2_scored(vec: Column, norm: Column, cb, j: int) -> Column:
@@ -879,7 +887,7 @@ def pq_topk(
     bigger. Distance-table entries are rounded to 9dp and summed in
     fixed subspace order (total rounded to 6dp) so the SQL oracle
     replays ranks exactly. Vectors are unit-normalized first (see
-    train_pq_codebooks — makes ADC-L2 rank like cosine; the norm is
+    pq_codebooks_numpy — makes ADC-L2 rank like cosine; the norm is
     materialized as its own column so the 64-element transform does not
     re-evaluate it per element). Approximate by construction: recall vs
     brute force is MEASURED in tests, never assumed."""
@@ -951,41 +959,22 @@ def _pq_dlist_sql(books, dsub: int, src: str, nsrc: str, j: int) -> str:
 
 
 def pq_oracle_sql(
-    parquet_path: str,
-    dim: int,
-    m: int = 8,
-    ksub: int = 16,
+    codebooks,
     k: int = 5,
     max_query_id: int = 10,
-    table: str = "embeddings",
-    sample_cap: int = 4096,
-    seed: int = config.SEED,
 ) -> str:
-    """DuckDB SQL recomputing pq_topk EXACTLY: codebooks retrained here
-    (pyarrow read, same sorted sample + kmeans_l2_numpy — bit-identical),
-    encode/distance-table/ADC folded into generated SQL with the same
-    rounding (entries 9dp, totals 6dp), the same summation order (fixed
-    dim order inside a term, fixed subspace order in the total), and the
-    same tie-breaks (code ties → smallest index via list_position-of-min;
-    ranks by adc asc, vec_id asc)."""
+    """DuckDB SQL recomputing pq_topk EXACTLY over the `embeddings`
+    table: the SQL replays the given codebooks — encode, distance tables
+    and ADC with the same rounding (entries 9dp, totals 6dp), the same
+    summation order (fixed dim order inside a term, fixed subspace order
+    in the total), and the same tie-breaks (code ties → smallest index
+    via list_position-of-min; ranks by adc asc, vec_id asc)."""
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
 
-    pdf = (
-        pd.read_parquet(parquet_path, columns=["vec_id", "embedding"])
-        .sort_values("vec_id")
-        .head(sample_cap)
-    )
-    x = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-    x = x / np.linalg.norm(x, axis=1, keepdims=True)  # = train_pq_codebooks
-    dsub = dim // m
-    books = [
-        kmeans_l2_numpy(x[:, j * dsub : (j + 1) * dsub], ksub, 10, seed + j)
-        for j in range(m)
-    ]
+    m, _, dsub = np.shape(codebooks)
 
     def dlist(src: str, nsrc: str, j: int) -> str:
-        return _pq_dlist_sql(books, dsub, src, nsrc, j)
+        return _pq_dlist_sql(codebooks, dsub, src, nsrc, j)
 
     ds_cols = ",\n         ".join(
         f"{dlist('v', 'n', j)} AS ds_{j}" for j in range(m)
@@ -1003,7 +992,7 @@ WITH e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
          sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
                                CAST(embedding AS DOUBLE[]))) AS n
-  FROM {table}
+  FROM embeddings
 ), ds AS (
   SELECT vec_id, {ds_cols} FROM e
 ), enc AS (
@@ -1113,48 +1102,29 @@ def ivfpq_topk(
 
 
 def ivfpq_oracle_sql(
-    parquet_path: str,
-    dim: int,
-    m: int = 8,
-    ksub: int = 16,
+    centroids,
+    codebooks,
     k: int = 5,
-    n_centroids: int = 16,
     n_probe: int = 4,
     max_query_id: int = 10,
-    table: str = "embeddings",
-    sample_cap: int = 4096,
-    seed: int = config.SEED,
 ) -> str:
-    """DuckDB SQL recomputing ivfpq_topk EXACTLY: both models retrained
-    here (spherical k-means for the coarse stage, normalized plain-L2
-    per-subspace k-means for PQ — the same shared numpy cores), coarse
-    assignment/probing replayed with the ivf_oracle_sql formulas and the
+    """DuckDB SQL recomputing ivfpq_topk EXACTLY over the `embeddings`
+    table: the SQL replays the given coarse centroids and PQ codebooks,
+    coarse assignment/probing with the ivf_oracle_sql formulas and the
     fine ADC with the pq_oracle_sql formulas."""
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
 
-    pdf = (
-        pd.read_parquet(parquet_path, columns=["vec_id", "embedding"])
-        .sort_values("vec_id")
-        .head(sample_cap)
-    )
-    x = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-    cents = kmeans_numpy(x, n_centroids, seed=seed)
-    xn = x / np.linalg.norm(x, axis=1, keepdims=True)
-    dsub = dim // m
-    books = [
-        kmeans_l2_numpy(xn[:, j * dsub : (j + 1) * dsub], ksub, 10, seed + j)
-        for j in range(m)
-    ]
+    n_centroids = len(centroids)
+    m, _, dsub = np.shape(codebooks)
     ivf_ds = ", ".join(
         "round(list_dot_product(v, ["
         + ", ".join(repr(float(vv)) for vv in c)
         + "]), 9)"
-        for c in cents
+        for c in centroids
     )
     idxs = ", ".join(str(i) for i in range(n_centroids))
     ds_cols = ",\n         ".join(
-        f"{_pq_dlist_sql(books, dsub, 'v', 'n', j)} AS ds_{j}"
+        f"{_pq_dlist_sql(codebooks, dsub, 'v', 'n', j)} AS ds_{j}"
         for j in range(m)
     )
     code_cols = ", ".join(
@@ -1162,7 +1132,7 @@ def ivfpq_oracle_sql(
         for j in range(m)
     )
     qt_cols = ",\n         ".join(
-        f"{_pq_dlist_sql(books, dsub, 'qv', 'qn', j)} AS t_{j}"
+        f"{_pq_dlist_sql(codebooks, dsub, 'qv', 'qn', j)} AS t_{j}"
         for j in range(m)
     )
     adc = " + ".join(f"qt.t_{j}[enc.c_{j} + 1]" for j in range(m))
@@ -1171,7 +1141,7 @@ WITH e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
          sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
                                CAST(embedding AS DOUBLE[]))) AS n
-  FROM {table}
+  FROM embeddings
 ), dots AS (
   SELECT vec_id, v, n, [{ivf_ds}] AS ds FROM e
 ), assigned AS (
@@ -1212,6 +1182,21 @@ FROM ranked WHERE rk <= {k}
 # --------------------------------------------------------------------------
 
 
+def residual_codebooks_numpy(x, centroids, m: int, ksub: int):
+    """The residual PQ codebook recipe over a training sample x: PQ
+    codebooks of the COARSE RESIDUALS u − c_assigned (u the unit vector,
+    c its coarse_assign_numpy centroid), pooled across lists — the
+    classical shared-codebook IVFADC recipe. The quantizer then only has
+    to cover the residual ball around each centroid instead of the whole
+    sphere, which is why residual PQ beats plain PQ at the same bit
+    budget."""
+    import numpy as np  # noqa: PLC0415
+
+    u = x / np.linalg.norm(x, axis=1, keepdims=True)
+    r = u - np.asarray(centroids)[coarse_assign_numpy(x, centroids)]
+    return _subspace_codebooks(r, m, ksub)
+
+
 def train_residual_codebooks(
     corpus: DataFrame,
     centroids,
@@ -1220,31 +1205,12 @@ def train_residual_codebooks(
     ksub: int = 16,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    sample_cap: int = 4096,
-    iters: int = 10,
-    seed: int = config.SEED,
 ):
-    """PQ codebooks trained on COARSE RESIDUALS (u − c_assigned, pooled
-    across lists — the classical shared-codebook IVFADC recipe): the
-    quantizer then only has to cover the residual ball around each
-    centroid instead of the whole sphere, which is why residual PQ beats
-    plain PQ at the same bit budget. Deterministic: same sorted-sample
-    discipline as train_pq_codebooks."""
-    import numpy as np  # noqa: PLC0415
-
-    assert dim % m == 0
-    pdf = (
-        corpus.select(id_col, vec_col).orderBy(id_col).limit(sample_cap).toPandas()
-    )
-    x = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-    u = x / np.linalg.norm(x, axis=1, keepdims=True)
-    assign = coarse_assign_numpy(x, centroids)
-    r = u - np.asarray(centroids)[assign]
-    dsub = dim // m
-    return [
-        kmeans_l2_numpy(r[:, j * dsub : (j + 1) * dsub], ksub, iters, seed + j)
-        for j in range(m)
-    ]
+    """residual_codebooks_numpy over the corpus's training sample; `dim`
+    is the vector width, checked against the sample."""
+    x = training_sample(corpus, vec_col, id_col)
+    assert x.shape[1] == dim, (x.shape, dim)
+    return residual_codebooks_numpy(x, centroids, m, ksub)
 
 
 def coarse_assign_numpy(x, centroids):
@@ -1256,9 +1222,7 @@ def coarse_assign_numpy(x, centroids):
     argmax breaks ties toward the lowest index, which would train a tied
     vector's residual against a centroid the encoder never assigns it
     to; argmax over the reversed columns flips the tie rule to match).
-    The SINGLE copy of this rule — train_residual_codebooks, the
-    residual SQL-oracle generator, and the entry-contract model twin all
-    call here, so the three cannot drift apart."""
+    The SINGLE copy of this rule, used by residual_codebooks_numpy."""
     import numpy as np  # noqa: PLC0415
 
     dots = np.round(np.asarray(x, dtype="float64") @ np.asarray(centroids).T, 9)
@@ -1478,24 +1442,17 @@ def ivfpq_topk_residual(
 
 
 def ivfpq_residual_oracle_sql(
-    parquet_path: str,
-    dim: int,
-    m: int = 8,
-    ksub: int = 16,
+    centroids,
+    residual_books,
     k: int = 5,
-    n_centroids: int = 16,
     n_probe: int = 4,
     max_query_id: int = 10,
-    table: str = "embeddings",
-    sample_cap: int = 4096,
-    seed: int = config.SEED,
 ) -> str:
-    """DuckDB SQL recomputing ivfpq_topk_residual EXACTLY: retrains the
-    coarse centroids and the RESIDUAL codebooks here (same numpy cores,
-    same sorted sample, same runtime-mirrored assignment tie rule), then
-    replays coarse assignment/probing with the ivf formulas and the fine
-    ADC against the per-list SHIFTED codebooks (c' = cent_l_sub +
-    book_c, exactly _shifted_books' float64 sums).
+    """DuckDB SQL recomputing ivfpq_topk_residual EXACTLY over the
+    `embeddings` table: the SQL replays the given coarse centroids and
+    RESIDUAL codebooks, coarse assignment/probing with the ivf formulas
+    and the fine ADC against the per-list SHIFTED codebooks (c' =
+    cent_l_sub + book_c, exactly _shifted_books' float64 sums).
 
     Unlike pq/ivfpq's unrolled per-term SQL, the shifted model is
     n_centroids x larger (one codebook variant per list), so the
@@ -1505,31 +1462,12 @@ def ivfpq_residual_oracle_sql(
     already relies on list_dot_product/aggregate fold parity), keeping
     the SQL ~x00 KB instead of ~MBs of expanded products."""
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
 
-    pdf = (
-        pd.read_parquet(parquet_path, columns=["vec_id", "embedding"])
-        .sort_values("vec_id")
-        .head(sample_cap)
-    )
-    x = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-    cents = kmeans_numpy(x, n_centroids, seed=seed)
-    u = x / np.linalg.norm(x, axis=1, keepdims=True)
-    # the SAME training code path as the Spark side: shared coarse rule
-    # (raw dots, 9dp, ties -> highest) and shared per-subspace k-means —
-    # no re-implemented copy that could drift
-    assign = coarse_assign_numpy(x, cents)
-    r = u - cents[assign]
-    dsub = dim // m
-    books = [
-        kmeans_l2_numpy(r[:, j * dsub : (j + 1) * dsub], ksub, 10, seed + j)
-        for j in range(m)
-    ]
-
-    fold_c2 = _fold_c2
+    n_centroids = len(centroids)
+    m, _, dsub = np.shape(residual_books)
     b_lits, c2_lits = [], []
     for j in range(m):
-        shifted_j = _shifted_books(cents, books, j, dsub)
+        shifted_j = _shifted_books(centroids, residual_books, j, dsub)
         b_lits.append(
             "CAST(["
             + ", ".join(
@@ -1544,7 +1482,7 @@ def ivfpq_residual_oracle_sql(
         c2_lits.append(
             "CAST(["
             + ", ".join(
-                "[" + ", ".join(repr(fold_c2(c)) for c in per_list) + "]"
+                "[" + ", ".join(repr(_fold_c2(c)) for c in per_list) + "]"
                 for per_list in shifted_j
             )
             + "] AS DOUBLE[][])"
@@ -1565,7 +1503,7 @@ def ivfpq_residual_oracle_sql(
         "round(list_dot_product(v, ["
         + ", ".join(repr(float(vv)) for vv in c)
         + "]), 9)"
-        for c in cents
+        for c in centroids
     )
     idxs = ", ".join(str(i) for i in range(n_centroids))
     ds_cols = ",\n         ".join(
@@ -1586,7 +1524,7 @@ WITH blit AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
          sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
                                CAST(embedding AS DOUBLE[]))) AS n
-  FROM {table}
+  FROM embeddings
 ), dots AS (
   SELECT vec_id, v, n, [{ivf_ds}] AS ds FROM e
 ), assigned AS (
@@ -1756,50 +1694,36 @@ def semantic_dedup(
 
 
 def semantic_dedup_oracle_sql(
-    parquet_path: str,
-    dim: int,
-    n_clusters: int = 16,
+    centroids,
     threshold: float = 0.95,
     max_cluster: int | None = None,
     n_planted: int = 0,
-    table: str = "embeddings",
-    sample_cap: int = 4096,
-    seed: int = config.SEED,
 ) -> str:
-    """DuckDB SQL recomputing semantic_dedup EXACTLY: centroids retrained
-    from the same sorted sample via the shared kmeans_numpy core, cluster
-    assignment replaying the coarse-assign rule (round-9 dots, ties ->
-    highest index via list_reverse/list_position), centroid cosine and
-    pair cosines both rounded to 6 like the other embedding oracles, the
-    (ccos ASC, id ASC) earlier-item EXISTS, and the max_cluster HAVING
-    exclusion. n_planted > 0 adds the same scaled near-dup rows
-    (vec_id + 100000, x * 1.001) the query side plants."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    pdf = (
-        pd.read_parquet(parquet_path, columns=["vec_id", "embedding"])
-        .sort_values("vec_id")
-        .head(sample_cap)
-    )
-    xs = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-    cents = kmeans_numpy(xs, n_clusters, seed=seed)
+    """DuckDB SQL recomputing semantic_dedup EXACTLY over the `embeddings`
+    table: the SQL replays the given centroid model — cluster assignment
+    by the coarse-assign rule (round-9 dots, ties -> highest index via
+    list_reverse/list_position), centroid cosine and pair cosines both
+    rounded to 6 like the other embedding oracles, the (ccos ASC, id ASC)
+    earlier-item EXISTS, and the max_cluster HAVING exclusion.
+    n_planted > 0 adds the same scaled near-dup rows (vec_id + 100000,
+    x * 1.001) the query side plants."""
+    n_clusters = len(centroids)
     ds_terms = ", ".join(
         "round(list_dot_product(v, ["
         + ", ".join(repr(float(v)) for v in c)
         + "]), 9)"
-        for c in cents
+        for c in centroids
     )
     cent_rows = ",\n    ".join(
         f"({i}, [" + ", ".join(repr(float(v)) for v in c) + "])"
-        for i, c in enumerate(cents)
+        for i, c in enumerate(centroids)
     )
     planted = (
         f"""
   UNION ALL
   SELECT vec_id + 100000 AS vec_id,
          list_transform(CAST(embedding AS DOUBLE[]), x -> x * 1.001) AS v
-  FROM {table} WHERE vec_id < {n_planted}"""
+  FROM embeddings WHERE vec_id < {n_planted}"""
         if n_planted
         else ""
     )
@@ -1816,7 +1740,7 @@ def semantic_dedup_oracle_sql(
     )
     return f"""
 WITH base AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {table}{planted}
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings{planted}
 ), cents(idx, cv) AS (
   VALUES
     {cent_rows}

@@ -24,8 +24,8 @@ STATE_DDL = "seq bigint, cnt bigint, total double"
 
 
 def _seq_batch(pdf, key0: int, seq: int, cnt: int, total: float):
-    """Vectorized core shared by both stateful APIs: one sorted micro-batch
-    chunk → (output frame, new seq, new cnt, new total). arange/cumsum
+    """Vectorized per-group core of seq_numbered_stream: one sorted
+    micro-batch chunk → (output frame, new seq, new cnt, new total). arange/cumsum
     offset by the carried state — no per-row Python (iterrows on a 10^5
     -event micro-batch is interpreter-speed; this is Arrow-speed). cumsum
     accumulates sequentially, so running_value and the carried total are
@@ -82,78 +82,3 @@ def seq_numbered_stream(events: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-# --------------------------------------------------------------------------
-# the same operator on Spark 4's transformWithStateInPandas API
-# --------------------------------------------------------------------------
-
-
-def have_tws() -> bool:
-    """transformWithStateInPandas needs protobuf for its state-server
-    protocol; this image does not ship google.protobuf (and installs are
-    not possible here), so the TWS form is availability-gated exactly
-    like the media codec stubs."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401, PLC0415
-
-        return True
-    except ImportError:
-        return False
-
-
-def seq_numbered_stream_tws(events: DataFrame) -> DataFrame:
-    """Identical semantics to seq_numbered_stream, on the modern
-    arbitrary-state API (transformWithStateInPandas): state is a typed
-    ValueState handle instead of a packed tuple, timers replace the
-    timeout conf, and the processor is an object with an explicit
-    lifecycle — the shape new stateful operators should take on Spark 4.
-    Output equality with the applyInPandasWithState form is asserted in
-    tests when the runtime supports it (see have_tws)."""
-    if not have_tws():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires protobuf, absent in this "
-            "image — use seq_numbered_stream (applyInPandasWithState)"
-        )
-    from pyspark.sql.streaming.stateful_processor import (  # noqa: PLC0415
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (  # noqa: PLC0415
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    state_schema = StructType(
-        [
-            StructField("seq", LongType()),
-            StructField("cnt", LongType()),
-            StructField("total", DoubleType()),
-        ]
-    )
-
-    class SeqProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("seq_state", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                seq, cnt, total = self._state.get()
-            else:
-                seq, cnt, total = 0, 0, 0.0
-            for pdf in rows:
-                out, seq, cnt, total = _seq_batch(pdf, key[0], seq, cnt, total)
-                if out is not None:
-                    yield out
-            self._state.update((seq, cnt, total))
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SeqProcessor(),
-        outputStructType=OUTPUT_DDL,
-        outputMode="append",
-        timeMode="None",
-    )

@@ -7,38 +7,13 @@ shows up in the pytest summary (run with -ra), and the moment the image
 ever gains the dependency the same test upgrades itself to a REAL
 exercise of the gated code path — no code change needed to notice.
 
-Current image status (2026-08): protobuf absent, PIL/cv2 absent,
-iceberg jars absent — all three gates closed.
+Current image status (2026-08): PIL/cv2 absent, iceberg jars absent —
+both gates closed.
 """
 
 from __future__ import annotations
 
 import pytest
-
-
-def test_gate_tws_protobuf(spark):
-    """transformWithStateInPandas needs google.protobuf for its
-    state-server protocol (streaming/stateful.py:have_tws)."""
-    from bb_ocr_spark.streaming.stateful import have_tws
-
-    if not have_tws():
-        # the gated function must refuse loudly, not half-work
-        from bb_ocr_spark.streaming.stateful import seq_numbered_stream_tws
-
-        with pytest.raises(NotImplementedError):
-            seq_numbered_stream_tws(None)
-        pytest.skip(
-            "GATE CLOSED: google.protobuf absent — TWS twin runs on the "
-            "shared vectorized kernel via applyInPandasWithState only"
-        )
-    # gate open: the dependency chain TWS actually needs must import
-    from pyspark.sql.streaming.stateful_processor import (  # noqa: F401
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from google.protobuf import descriptor  # noqa: F401
-    # the full batch-equality test lives in test_stateful_streaming and
-    # runs automatically now that have_tws() is True
 
 
 def test_gate_pixel_codecs(spark):

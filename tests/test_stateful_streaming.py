@@ -40,33 +40,6 @@ def test_seq_numbers_monotone_across_batches(spark, split_events_dir):
         assert all(r["running_count"] == r["seq"] for r in rs)
 
 
-def test_tws_equals_apply_in_pandas_with_state(spark, split_events_dir):
-    # the modern transformWithStateInPandas form must emit exactly the
-    # rows of the applyInPandasWithState form on a multi-batch stream
-    from bb_ocr_spark.streaming.stateful import have_tws, seq_numbered_stream_tws
-
-    if not have_tws():
-        with pytest.raises(NotImplementedError):
-            seq_numbered_stream_tws(read_events_stream(spark, split_events_dir))
-        pytest.skip("transformWithStateInPandas needs protobuf (absent here)")
-
-    stream = seq_numbered_stream_tws(read_events_stream(spark, split_events_dir))
-    run_to_memory(stream, "seq_out_tws", output_mode="append")
-    a = {
-        tuple(r) for r in spark.sql(
-            "SELECT user_id, event_id, seq, running_count, running_value FROM seq_out_tws"
-        ).collect()
-    }
-    stream2 = seq_numbered_stream(read_events_stream(spark, split_events_dir))
-    run_to_memory(stream2, "seq_out_ref", output_mode="append")
-    b = {
-        tuple(r) for r in spark.sql(
-            "SELECT user_id, event_id, seq, running_count, running_value FROM seq_out_ref"
-        ).collect()
-    }
-    assert a == b and a
-
-
 def test_seq_batch_kernel_matches_row_loop_and_is_vectorized():
     # the vectorized kernel must be value-identical to the per-row loop it
     # replaced (bit-identical: cumsum accumulates sequentially) and beat it
@@ -99,7 +72,7 @@ def test_seq_batch_kernel_matches_row_loop_and_is_vectorized():
             # np.round here, matching the kernel: python round() is
             # decimal-correct and differs from IEEE scale-rounding by 0.01
             # at representation boundaries (e.g. totals near x.x95); the
-            # operator's contract is np.round in BOTH stateful forms
+            # operator's contract is np.round
             out.append(
                 (key0, int(row["event_id"]), seq, cnt, float(np.round(total, 2)))
             )

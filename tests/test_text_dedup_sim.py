@@ -1235,6 +1235,60 @@ def test_ivfpq_residual_beats_direct(spark):
     assert sorted(map(tuple, again)) == sorted(map(tuple, res_out))
 
 
+def test_training_readers_agree_when_cap_binds(spark, tmp_path):
+    """The Spark and pyarrow training-sample readers give the same models
+    once the SAMPLE_CAP binds: 5,000 vectors with shuffled ids over three
+    parquet files, so both readers must sort before the cap to agree."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bb_ocr_spark.operators.similarity import (
+        SAMPLE_CAP,
+        kmeans_numpy,
+        pq_codebooks_numpy,
+        residual_codebooks_numpy,
+        train_centroids,
+        train_pq_codebooks,
+        train_residual_codebooks,
+        training_sample_parquet,
+    )
+
+    rng = np.random.RandomState(5)
+    n, dim = 5000, 64
+    assert n > SAMPLE_CAP
+    ids = rng.permutation(n).astype("int64")
+    vecs = rng.randn(n, dim).astype("float32")
+    for i, part in enumerate(np.array_split(np.arange(n), 3)):
+        pq.write_table(
+            pa.table(
+                {
+                    "vec_id": ids[part],
+                    "embedding": pa.array(
+                        list(vecs[part]), type=pa.list_(pa.float32())
+                    ),
+                }
+            ),
+            str(tmp_path / f"part-{i}.parquet"),
+        )
+    x = training_sample_parquet(str(tmp_path))
+    assert x.shape == (SAMPLE_CAP, dim)
+    assert np.array_equal(x, vecs[np.argsort(ids)[:SAMPLE_CAP]])
+
+    corpus = spark.read.parquet(str(tmp_path))
+    cents = train_centroids(corpus, n_centroids=16)
+    want_cents = kmeans_numpy(x, 16)
+    assert np.array_equal(cents, want_cents)
+    assert np.array_equal(
+        train_pq_codebooks(corpus, dim=dim, m=8, ksub=16),
+        pq_codebooks_numpy(x, m=8, ksub=16),
+    )
+    assert np.array_equal(
+        train_residual_codebooks(corpus, cents, dim=dim, m=8, ksub=16),
+        residual_codebooks_numpy(x, want_cents, m=8, ksub=16),
+    )
+
+
 def test_recommend_pq_encoding_crossover(spark):
     """The measured IVFADC crossover rule (BENCH/ANN_RECALL_r05.md):
     tight coarse clusters (mean residual norm^2 < 1) -> residual

@@ -40,9 +40,7 @@ def main(sf_dir: str, k: int = 10, n_queries: int = 50) -> None:
     n_corpus = emb.count()
     queries = emb.filter(F.col("vec_id") < n_queries)
     model_dir = E._ivf_model_dir()
-    cents = E._cents_for(model_dir)
-    books = E._books_for(model_dir)
-    res_books = E._res_books_for(model_dir)
+    cents, books, res_books = E._ann_model(model_dir)
 
     def topk_sets(df):
         rows = df.select("query_id", "vec_id").collect()

@@ -30,9 +30,9 @@ def norm_frame(df) -> list[tuple]:
 
 
 def main(sf_dir: str, only: set[str] | None = None) -> int:
-    # no env pin needed: the IVF centroid model trains on one canonical
-    # dir in BOTH engines (__spark_entry__._ivf_model_dir), so the gate
-    # is green at any sf out of the box
+    # no env pin needed: the ANN models train once on one canonical dir
+    # (__spark_entry__._ann_model) and each query and its oracle take the
+    # same model, so the gate is green at any sf out of the box
 
     import __spark_entry__ as E
 
