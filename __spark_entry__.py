@@ -570,8 +570,7 @@ def _q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bb_ocr_spark.operators.similarity import brute_force_topk
 
     emb = _emb(spark, sf_dir)
-    out = brute_force_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
-    return out.withColumn("rk", F.col("rk").cast("bigint"))
+    return brute_force_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
 
 
 _ORACLE_EMBEDDING_TOPK = """
@@ -702,10 +701,7 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _emb(spark, sf_dir)
     cents = _ann_model(_ivf_model_dir()).centroids
-    return ivf_topk(
-        emb, emb.filter(F.col("vec_id") < 10), dim=64, k=5, n_probe=4,
-        centroids=cents,
-    ).withColumn("rk", F.col("rk").cast("bigint"))
+    return ivf_topk(emb, emb.filter(F.col("vec_id") < 10), cents, k=5, n_probe=4)
 
 
 def _oracle_ivf() -> str:
@@ -744,11 +740,10 @@ def _q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivfpq_topk(
         emb,
         emb.filter(F.col("vec_id") < 10),
-        dim=64,
-        codebooks=model.codebooks,
+        model.centroids,
+        model.codebooks,
         k=5,
         n_probe=4,
-        centroids=model.centroids,
     )
 
 
@@ -773,9 +768,8 @@ def _q_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivfpq_topk_residual(
         emb,
         emb.filter(F.col("vec_id") < 10),
-        dim=64,
-        centroids=model.centroids,
-        residual_books=model.residual_books,
+        model.centroids,
+        model.residual_books,
         k=5,
         n_probe=4,
     )
@@ -1372,7 +1366,7 @@ def _q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_topk(
         emb, emb.filter(F.col("vec_id") < 10), dim=64, k=5, n_planes=10,
         n_probe=3,
-    ).withColumn("rk", F.col("rk").cast("bigint"))
+    )
 
 
 def _oracle_lsh_ann() -> str:
@@ -2390,9 +2384,8 @@ def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", lambda x: x * F.lit(1.001)).alias("embedding"),
     )
     allv = emb.unionByName(dup)
-    cents = _ann_model(_ivf_model_dir()).centroids
     return semantic_dedup(
-        allv, dim=64, n_clusters=16, threshold=0.99, centroids=cents
+        allv, _ann_model(_ivf_model_dir()).centroids, threshold=0.99
     )
 
 

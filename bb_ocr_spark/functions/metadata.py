@@ -50,10 +50,6 @@ def genre_col(ctx: Column) -> Column:
     return F.when(best["cnt"] > 0, best["genre"])
 
 
-def metadata_cols(extracted_spans: Column) -> list[Column]:
-    return metadata_cols_from(extracted_spans, context_text_col(extracted_spans))
-
-
 def metadata_cols_from(extracted_spans: Column, ctx: Column) -> list[Column]:
     first_text = F.filter(extracted_spans, lambda s: s["kind"] == "text")
     title = F.try_element_at(first_text, F.lit(1))["text"]

@@ -19,7 +19,7 @@ string n-grams and is value-exact on the test corpora.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_col
@@ -83,13 +83,6 @@ def decontaminate(
     set — the same resume/anti-join shape as plans/extract_job)."""
     flagged = contaminated_docs(train, eval_df, n, min_hits, id_col, text_col)
     return train.join(flagged.select(id_col), id_col, "left_anti")
-
-
-def contamination_ngram_col(text: Column, n: int = 3) -> Column:
-    """string n-grams (for tests/oracles that need the unhashed form)."""
-    from .dedup import shingles_col
-
-    return shingles_col(text, n)
 
 
 def semantic_contaminated(

@@ -31,10 +31,6 @@ from ..functions.text import fingerprint_md5_col, tokens_col
 MERSENNE31_D = (1 << 31) - 1
 
 
-def normalized_text_col(text: Column) -> Column:
-    return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-
-
 # --------------------------------------------------------------------------
 # exact
 # --------------------------------------------------------------------------

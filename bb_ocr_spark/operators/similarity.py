@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>).
 
-Two tiers:
+Tiers:
 
   brute_force_topk   exact cosine top-k: broadcast the (small) query set
                      against the corpus — one narrow pass over the corpus,
@@ -22,13 +22,24 @@ Two tiers:
   embedding_dup_pairs  near-duplicate pairs via the same LSH bucketing
                      (self-join on bucket), exact-cosine verified.
 
-Dot products use F.zip_with + F.aggregate in DOUBLE (JVM expressions,
-no Python in the scan path).
+  ivf_topk, pq_topk, ivfpq_topk, ivfpq_topk_residual, semantic_dedup
+                     the trained tiers: each takes its model (centroids
+                     from train_centroids, codebooks from
+                     train_pq_codebooks / train_residual_codebooks) as a
+                     required argument and reads every shape from it —
+                     list count, subspace count and subspace width.
+
+Every operator reads the columns (vec_id, embedding). Dot products use
+F.zip_with + F.aggregate in DOUBLE (JVM expressions, no Python in the
+scan path).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import functools
+import operator
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import config
@@ -77,32 +88,42 @@ def cosine_col(a: Column, b: Column) -> Column:
     return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6)
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def _vectors(df: DataFrame, id_name: str, vec_name: str = "_v", norm: bool = False):
+    """(id_name, vec_name[, _n]) from the (vec_id, embedding) columns. _n,
+    the L2 norm, is materialized as its own column so a per-element
+    transform that divides by it does not re-evaluate it per element."""
+    out = df.select(F.col("vec_id").alias(id_name), F.col("embedding").alias(vec_name))
+    return out.withColumn("_n", _norm(F.col(vec_name))) if norm else out
+
+
+def _ranked(scored: DataFrame, order: Column, k: int) -> DataFrame:
+    """Top-k of (query_id, vec_id, score) rows per query: rk is the
+    row_number by `order`, then vec_id, as a long (DuckDB's row_number
+    is BIGINT)."""
+    w = Window.partitionBy("query_id").orderBy(order, "vec_id")
+    return scored.withColumn("rk", F.row_number().over(w).cast("long")).filter(
+        F.col("rk") <= k
+    )
+
+
+def _cosine_ranked(joined: DataFrame, k: int, dedup: bool = False) -> DataFrame:
+    """Exact cosine re-rank of joined (vec_id, c_vec, query_id, q_vec)
+    candidate rows, self-matches dropped; `dedup` drops a candidate met
+    through several probes."""
+    scored = joined.filter(F.col("vec_id") != F.col("query_id")).select(
+        "query_id", "vec_id", cosine_col(F.col("q_vec"), F.col("c_vec")).alias("cosine")
+    )
+    if dedup:
+        scored = scored.dropDuplicates(["query_id", "vec_id"])
+    return _ranked(scored, F.desc("cosine"), k)
+
+
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k neighbors per query (excluding self-matches by id).
     queries is broadcast; corpus is scanned once, narrow."""
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec"))
-    scored = (
-        c.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .withColumn("cosine", cosine_col(F.col("q_vec"), F.col("c_vec")))
-        .select("query_id", "vec_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    c = _vectors(corpus, "vec_id", "c_vec")
+    q = _vectors(queries, "query_id", "q_vec")
+    return _cosine_ranked(c.crossJoin(F.broadcast(q)), k)
 
 
 # --------------------------------------------------------------------------
@@ -164,29 +185,6 @@ def _sig_from_dots(dots: Column, n_planes: int) -> Column:
     )
 
 
-def with_lsh_buckets(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 12,
-    vec_col: str = "embedding",
-    seed: int = config.SEED,
-) -> DataFrame:
-    """Sizing rule: n_planes ≈ log2(corpus_size / target_bucket_size).
-    Expected bucket occupancy is corpus/2^n_planes (uniform-ish for
-    gaussian-like embeddings), and each extra plane both halves the
-    candidate scan AND adds one more sign a true neighbor must match —
-    recall at a fixed probe count falls as planes grow. The defaults here
-    (10-12 planes) are corpus-sized for the sf0.01 test tables (~5k
-    vectors → ~5/bucket); at 10^9 vectors target ~10^3-row buckets with
-    n_planes ≈ log2(10^9/10^3) = 20, and recover the per-plane recall
-    loss with multi-probe (lsh_topk n_probe) or bands
-    (embedding_dup_pairs). Measured, not assumed: see
-    test_lsh_plane_count_sizing (recall + bucket occupancy at 1x vs 4x
-    planes) and test_lsh_multiprobe_recall."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    return df.withColumn("bucket", signature_col(F.col(vec_col), planes))
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -194,28 +192,37 @@ def lsh_topk(
     k: int = 10,
     n_planes: int = 10,
     n_probe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: exact cosine re-rank within probed LSH buckets.
+    `dim` is the vector width (LSH has no trained model to read it from).
 
     Multi-probe: besides its own bucket, each query probes the n_probe-1
     buckets obtained by flipping the signature bit whose hyperplane margin
     |dot| is smallest — the buckets a true neighbor most likely landed in
     when it fell just on the other side of a plane. Probing multiplies only
     the QUERY side (n_probe rows per query before the join); the corpus is
-    bucketed once. Recall vs n_probe is measured in tests, not assumed."""
-    from pyspark.sql import Window
+    bucketed once. Recall vs n_probe is measured in tests, not assumed.
 
+    Sizing rule: n_planes ≈ log2(corpus_size / target_bucket_size).
+    Expected bucket occupancy is corpus/2^n_planes (uniform-ish for
+    gaussian-like embeddings), and each extra plane both halves the
+    candidate scan AND adds one more sign a true neighbor must match —
+    recall at a fixed probe count falls as planes grow. 10 planes is
+    corpus-sized for the sf0.01 test tables (~5k vectors → ~5/bucket); at
+    10^9 vectors target ~10^3-row buckets with n_planes ≈
+    log2(10^9/10^3) = 20, and recover the per-plane recall loss with
+    multi-probe (n_probe) or bands (embedding_dup_pairs). Measured, not
+    assumed: see test_lsh_plane_count_sizing (recall + bucket occupancy
+    at 1x vs 4x planes) and test_lsh_multiprobe_recall."""
     planes = _hyperplanes(dim, n_planes)
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
-    ).withColumn("bucket", signature_col(F.col("c_vec"), planes))
+    c = _vectors(corpus, "vec_id", "c_vec").withColumn(
+        "bucket", signature_col(F.col("c_vec"), planes)
+    )
     # dots materialized as a column: sig + margins both reference it, and
     # expression trees duplicate at construction time (no CSE across HOFs)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    ).withColumn("_dots", _plane_dots_col(F.col("q_vec"), planes))
+    q = _vectors(queries, "query_id", "q_vec").withColumn(
+        "_dots", _plane_dots_col(F.col("q_vec"), planes)
+    )
     sig = _sig_from_dots(F.col("_dots"), n_planes)
     powers = F.lit([1 << p for p in range(n_planes)])
     # planes ordered by |margin| ascending; flip the closest n_probe-1
@@ -241,19 +248,7 @@ def lsh_topk(
         )
         .select("query_id", "q_vec", "bucket")
     )
-    scored = (
-        c.join(q, "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cosine", cosine_col(F.col("q_vec"), F.col("c_vec")))
-        .select("query_id", "vec_id", "cosine")
-        .dropDuplicates(["query_id", "vec_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    return _cosine_ranked(c.join(q, "bucket"), k, dedup=True)
 
 
 def _band_seed(seed: int, band: int) -> int:
@@ -263,29 +258,19 @@ def _band_seed(seed: int, band: int) -> int:
 
 
 def _banded_buckets(
-    df: DataFrame,
-    dim: int,
-    n_planes: int,
-    bands: int,
-    id_col: str,
-    vec_col: str,
-    seed: int,
-    keep_vec: bool,
+    df: DataFrame, dim: int, n_planes: int, bands: int, keep_vec: bool
 ) -> DataFrame:
     """(id[, vec], band, bucket) rows — ONE definition of the banded
     bucketing shared by embedding_dup_pairs and embedding_dup_hot_buckets
     so the hot-bucket report is bit-identical to what the pair generator
     suppresses (two hand-maintained copies would silently drift)."""
-    cols = [F.col(id_col).alias("id")] + (
-        [F.col(vec_col).alias("vec")] if keep_vec else []
-    )
-    base = df.select(*cols + ([] if keep_vec else [F.col(vec_col).alias("_v")]))
-    vec_ref = "vec" if keep_vec else "_v"
+    base = _vectors(df, "id", "vec")
     bucket_structs = [
         F.struct(
             F.lit(band).alias("band"),
             signature_col(
-                F.col(vec_ref), _hyperplanes(dim, n_planes, _band_seed(seed, band))
+                F.col("vec"),
+                _hyperplanes(dim, n_planes, _band_seed(config.SEED, band)),
             ).alias("bucket"),
         )
         for band in range(bands)
@@ -309,9 +294,6 @@ def embedding_dup_pairs(
     n_planes: int = 10,
     bands: int = 1,
     max_bucket: int | None = 1024,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = config.SEED,
 ) -> DataFrame:
     """Near-duplicate (a < b) pairs with cosine >= threshold: candidates via
     LSH bucket self-join (near-identical vectors agree on every hyperplane
@@ -340,7 +322,7 @@ def embedding_dup_pairs(
     The bucketed frame feeds the hot-bucket pre-pass plus both self-join
     sides (no CSE across self-joins) — persisted via cache.track_persist;
     call cache.release_persisted() after the consuming action."""
-    b = _banded_buckets(df, dim, n_planes, bands, id_col, vec_col, seed, keep_vec=True)
+    b = _banded_buckets(df, dim, n_planes, bands, keep_vec=True)
     from ..cache import track_persist  # noqa: PLC0415
 
     b = track_persist(b)
@@ -373,9 +355,6 @@ def embedding_dup_hot_buckets(
     n_planes: int = 10,
     bands: int = 1,
     max_bucket: int | None = 1024,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = config.SEED,
 ) -> DataFrame:
     """The (band, bucket, size, member_ids) rows embedding_dup_pairs
     SUPPRESSES under the same parameters — call this alongside it so
@@ -385,9 +364,7 @@ def embedding_dup_hot_buckets(
     dup-cluster finding. (At extreme cluster sizes the member array is a
     single-reducer payload — select only (band, bucket, size) there and
     semi-join the bucketed frame for members instead.)"""
-    b = _banded_buckets(
-        df, dim, n_planes, bands, id_col, vec_col, seed, keep_vec=False
-    )
+    b = _banded_buckets(df, dim, n_planes, bands, keep_vec=False)
     return (
         b.groupBy("band", "bucket")
         .agg(
@@ -396,14 +373,6 @@ def embedding_dup_hot_buckets(
         )
         .filter(F.col("size") > (max_bucket if max_bucket is not None else 2**62))
     )
-
-
-def _centroids(dim: int, n_centroids: int, seed: int = config.SEED):
-    import numpy as np  # noqa: PLC0415
-
-    rng = np.random.RandomState(seed + 1)
-    c = rng.randn(n_centroids, dim)
-    return c / np.linalg.norm(c, axis=1, keepdims=True)
 
 
 # Every ANN model trains on one sample of its corpus: the first
@@ -415,9 +384,7 @@ SAMPLE_CAP = 4096
 KMEANS_ITERS = 10
 
 
-def training_sample(
-    corpus: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-):
+def training_sample(corpus: DataFrame):
     """The training sample of a corpus frame, float64 (n × dim): a Spark
     `orderBy(id).limit(SAMPLE_CAP)` collected to the driver. The models
     are tiny and training them on a bounded sample is the standard IVF/PQ
@@ -425,8 +392,13 @@ def training_sample(
     collect of a few thousand vectors."""
     import numpy as np  # noqa: PLC0415
 
-    pdf = corpus.select(id_col, vec_col).orderBy(id_col).limit(SAMPLE_CAP).toPandas()
-    return np.stack(pdf[vec_col].to_numpy()).astype("float64")
+    pdf = (
+        corpus.select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(SAMPLE_CAP)
+        .toPandas()
+    )
+    return np.stack(pdf["embedding"].to_numpy()).astype("float64")
 
 
 def training_sample_parquet(path: str):
@@ -444,16 +416,11 @@ def training_sample_parquet(path: str):
     return np.stack(pdf["embedding"].to_numpy()).astype("float64")
 
 
-def train_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-):
+def train_centroids(corpus: DataFrame, n_centroids: int = 16):
     """Spherical k-means centroids (kmeans_numpy) of the corpus's training
     sample. A fully-distributed k-means|| would only change WHO computes
     the same few-KB model."""
-    return kmeans_numpy(training_sample(corpus, vec_col, id_col), n_centroids)
+    return kmeans_numpy(training_sample(corpus), n_centroids)
 
 
 def kmeans_numpy(x, n_centroids: int):
@@ -502,65 +469,66 @@ def _centroid_scores_col(vec: Column, cents) -> Column:
     return F.expr("array(" + ",".join(structs) + ")")
 
 
+def _list_id(vec: Column, centroids) -> Column:
+    """The coarse list of a vector: its nearest centroid by rounded dot,
+    ties to the highest index (array_max over (cos, idx) structs)."""
+    return F.array_max(_centroid_scores_col(vec, centroids))["idx"]
+
+
+def _probed(
+    df: DataFrame, vec: str, centroids, n_probe: int, keep: list[str]
+) -> DataFrame:
+    """The `keep` columns of df, one row per probed list `list_id`: the
+    n_probe nearest lists of `vec`, in (dot desc, index desc) order.
+    explode_outer: a plain explode's inferred size>0 filter re-inlines
+    the centroid-score chain into an extra evaluation per row (the
+    Generate-filter trap); the probe array is never empty (n_probe >= 1).
+    The probe array is its own `_probes` column below the explode: the
+    query side's size estimate counts it, and without it ivf_topk's join
+    broadcasts the other side and adds a window shuffle at sf0.001/0.01
+    (tests/test_plans.py::test_ann_plan_shapes)."""
+    probes = F.slice(
+        F.reverse(F.array_sort(_centroid_scores_col(F.col(vec), centroids))),
+        1,
+        n_probe,
+    )
+    return df.withColumn("_probes", probes).select(
+        *keep,
+        F.explode_outer(F.transform("_probes", lambda p: p["idx"])).alias("list_id"),
+    )
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    dim: int,
+    centroids,
     k: int = 10,
-    n_centroids: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids=None,
 ) -> DataFrame:
     """IVF-style ANN: corpus rows are assigned to their nearest (by dot)
-    of n_centroids unit centroids (inverted lists = hash partitions on
-    list id); each query probes its n_probe nearest lists and exact
-    cosine re-ranks within them. Scan cost drops to ~n_probe/n_centroids
-    of the corpus. Pass `centroids` from train_centroids() (spherical
-    k-means on a corpus sample — the production recipe); default falls
-    back to seeded-random unit vectors (same plan, worse recall).
+    unit centroid (inverted lists = hash partitions on list id); each
+    query probes its n_probe nearest lists and exact cosine re-ranks
+    within them. Scan cost drops to ~n_probe/len(centroids) of the
+    corpus. `centroids` is the trained model (train_centroids: spherical
+    k-means on a corpus sample); the list count is its row count.
 
     Sizing rule: the classical IVF balance point is n_centroids ≈
     sqrt(corpus_size) (list length ≈ centroid count, so assignment cost
-    and probe cost match); n_centroids=16 here is corpus-sized for the
+    and probe cost match); 16 centroids is corpus-sized for the
     ~5k-vector sf0.01 tables. At 10^9 vectors use ~32k centroids and keep
     n_probe at 1-5% of them; the plan shape (broadcast centroid literals,
     hash-partitioned inverted lists, per-list re-rank) is unchanged."""
-    from pyspark.sql import Window
-
-    cents = _centroids(dim, n_centroids) if centroids is None else centroids
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec"))
-    c = c.withColumn(
-        "list_id", F.array_max(_centroid_scores_col(F.col("c_vec"), cents))["idx"]
+    c = _vectors(corpus, "vec_id", "c_vec").withColumn(
+        "list_id", _list_id(F.col("c_vec"), centroids)
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    q = q.withColumn(
-        "probes",
-        F.slice(
-            F.reverse(F.array_sort(_centroid_scores_col(F.col("q_vec"), cents))),
-            1,
-            n_probe,
-        ),
-    ).select(
-        # explode_outer: see lsh_topk — keeps the centroid-score chain out
-        # of the inferred Generate filter (probes is never empty, n_probe>=1)
-        "query_id",
+    q = _probed(
+        _vectors(queries, "query_id", "q_vec"),
         "q_vec",
-        F.explode_outer(F.transform("probes", lambda p: p["idx"])).alias("list_id"),
+        centroids,
+        n_probe,
+        ["query_id", "q_vec"],
     )
-    scored = (
-        c.join(q, "list_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cosine", cosine_col(F.col("q_vec"), F.col("c_vec")))
-        .select("query_id", "vec_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    return _cosine_ranked(c.join(q, "list_id"), k)
 
 
 def lsh_oracle_sql(
@@ -795,26 +763,21 @@ def pq_codebooks_numpy(x, m: int, ksub: int):
     )
 
 
-def train_pq_codebooks(
-    corpus: DataFrame,
-    dim: int,
-    m: int = 8,
-    ksub: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-):
-    """pq_codebooks_numpy over the corpus's training sample; `dim` is the
-    vector width, checked against the sample."""
-    x = training_sample(corpus, vec_col, id_col)
-    assert x.shape[1] == dim, (x.shape, dim)
-    return pq_codebooks_numpy(x, m, ksub)
+def train_pq_codebooks(corpus: DataFrame, m: int = 8, ksub: int = 16):
+    """pq_codebooks_numpy over the corpus's training sample; the vector
+    width is the sample's."""
+    return pq_codebooks_numpy(training_sample(corpus), m, ksub)
 
 
-def _sub_l2_scored(vec: Column, norm: Column, cb, j: int) -> Column:
+def _sub_l2_scored(books: str, c2: str, j: int, dsub: int) -> Column:
     """array<struct<d,idx>> of rounded unit-sphere L2 distances from
-    subspace j of raw `vec` (with precomputed L2 norm column) to every
-    row of codebook cb, via ‖v/n − c‖² = 1 + ‖c‖² − 2⟨v,c⟩/n;
-    array_min picks (d asc, idx asc) — the deterministic assignment.
+    subspace j of the raw vector `_v` (L2 norm `_n`) to every row of a
+    codebook, via ‖v/n − c‖² = 1 + ‖c‖² − 2⟨v,c⟩/n; array_min picks
+    (d asc, idx asc) — the deterministic assignment. `books` (the
+    ksub × dsub codebook) and `c2` (its rows' ‖c‖² folds) are SQL
+    fragments: literal arrays (_literal_books), or
+    element_at(<col>, list_id + 1) picking a per-list codebook that rides
+    in as a column (ivfpq_topk_residual).
 
     HOF form on purpose: an unrolled literal expression tree
     (m·ksub·dsub ≈ 1024 terms) blows past Janino's method-size limit —
@@ -823,62 +786,85 @@ def _sub_l2_scored(vec: Column, norm: Column, cb, j: int) -> Column:
     As transform/aggregate over a literal array-of-arrays the tree is
     ~50 nodes with runtime loops, codegen compiles, and the identical
     arithmetic order (left fold from 0.0) keeps the SQL oracle
-    bit-exact."""
-    dsub = cb.shape[1]
-    # ONE F.expr (same py4j-chatter economics as _centroid_scores_col:
-    # the lambda-builder form cost ~60 ms per call x 16 calls per PQ
-    # query; the SQL string parses JVM-side in microseconds into the
-    # identical transform/aggregate tree — bit-parity verified by
-    # xxhash64 against the old builder on the gate corpus)
-    vec_name = vec._jc.toString()
-    norm_name = norm._jc.toString()
-    cb_lit = (
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{float(v):.17e}" for v in c) + ")"
-            for c in cb
-        )
-        + ")"
-    )
-    c2_lit = "array(" + ",".join(f"{_fold_c2(c):.17e}" for c in cb) + ")"
-    sub = (
-        f"transform(slice({vec_name}, {j * dsub + 1}, {dsub}), "
-        f"x -> CAST(x AS DOUBLE))"
-    )
+    bit-exact. ONE F.expr (same py4j-chatter economics as
+    _centroid_scores_col: the lambda-builder form cost ~60 ms per call x
+    16 calls per PQ query; the SQL string parses JVM-side in
+    microseconds into the identical transform/aggregate tree)."""
+    sub = f"transform(slice(_v, {j * dsub + 1}, {dsub}), x -> CAST(x AS DOUBLE))"
     return F.expr(
-        f"transform({cb_lit}, (c, i) -> struct("
-        f"round(CAST(1.0 AS DOUBLE) + element_at({c2_lit}, CAST(i AS INT) + 1)"
+        f"transform({books}, (c, i) -> struct("
+        f"round(CAST(1.0 AS DOUBLE) + element_at({c2}, CAST(i AS INT) + 1)"
         f" - CAST(2.0 AS DOUBLE) * aggregate(zip_with({sub}, c, "
         f"(x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, v) -> a + v) "
-        f"/ {norm_name}, 9) AS d, CAST(i AS INT) AS idx))"
+        f"/ _n, 9) AS d, CAST(i AS INT) AS idx))"
     )
 
 
-def pq_codes_col(vec: Column, norm: Column, codebooks) -> Column:
-    """array<int> of m codes: per subspace, the index of the nearest
-    codebook row (rounded-9 L2, ties to the smallest index). 64-dim
-    float vectors compress to m bytes — the representation that lets a
-    10^12-vector corpus fit a scan budget."""
+def _literal_books(codebooks) -> list[tuple[str, str]]:
+    """(codebook, ‖c‖² folds) SQL literals per subspace (%.17e parses
+    directly as DOUBLE and round-trips every IEEE double)."""
+
+    def arr(items) -> str:
+        return "array(" + ",".join(items) + ")"
+
+    return [
+        (
+            arr(arr(f"{float(v):.17e}" for v in c) for c in cb),
+            arr(f"{_fold_c2(c):.17e}" for c in cb),
+        )
+        for cb in codebooks
+    ]
+
+
+def _pq_codes(books, dsub: int) -> Column:
+    """array<int> `codes` of m codes: per subspace, the index of the
+    nearest codebook row (rounded-9 L2, ties to the smallest index).
+    64-dim float vectors compress to m bytes — the representation that
+    lets a 10^12-vector corpus fit a scan budget."""
     return F.array(
         *[
-            F.array_min(_sub_l2_scored(vec, norm, cb, j))["idx"]
-            for j, cb in enumerate(codebooks)
+            F.array_min(_sub_l2_scored(b, c2, j, dsub))["idx"]
+            for j, (b, c2) in enumerate(books)
         ]
+    ).alias("codes")
+
+
+def _pq_tables(books, dsub: int) -> list[Column]:
+    """The per-subspace ADC distance tables `_t{j}` of a query."""
+    return [
+        F.transform(_sub_l2_scored(b, c2, j, dsub), lambda s: s["d"]).alias(f"_t{j}")
+        for j, (b, c2) in enumerate(books)
+    ]
+
+
+def _adc_ranked(joined: DataFrame, m: int, k: int) -> DataFrame:
+    """ADC top-k of joined (vec_id, codes, query_id, _t0.._t{m-1}) rows:
+    each code's table entry summed in fixed subspace order, the total
+    rounded to 6dp, ranked by (adc_dist asc, vec_id asc)."""
+    adc = functools.reduce(
+        operator.add,
+        [
+            F.try_element_at(
+                F.col(f"_t{j}"), F.try_element_at(F.col("codes"), F.lit(j + 1)) + 1
+            )
+            for j in range(m)
+        ],
     )
+    scored = joined.filter(F.col("vec_id") != F.col("query_id")).select(
+        "query_id", "vec_id", F.round(adc, 6).alias("adc_dist")
+    )
+    return _ranked(scored, F.asc("adc_dist"), k)
 
 
 def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    codebooks,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, queries: DataFrame, codebooks, k: int = 10
 ) -> DataFrame:
     """PQ-ADC top-k: the corpus is scanned as m-byte codes only
     (asymmetric distance: query subvector → codebook-entry distance
-    table, corpus vector ≈ its code's entry). Returns
-    (query_id, vec_id, adc_dist, rk), rk by (adc_dist asc, vec_id asc).
+    table, corpus vector ≈ its code's entry). `codebooks` is the trained
+    model (train_pq_codebooks); m and the subspace width are its shape.
+    Returns (query_id, vec_id, adc_dist, rk), rk by (adc_dist asc,
+    vec_id asc).
 
     Scale shape: encode once (in production: materialize the codes
     column and never re-read raw vectors), broadcast the tiny query set,
@@ -887,54 +873,19 @@ def pq_topk(
     bigger. Distance-table entries are rounded to 9dp and summed in
     fixed subspace order (total rounded to 6dp) so the SQL oracle
     replays ranks exactly. Vectors are unit-normalized first (see
-    pq_codebooks_numpy — makes ADC-L2 rank like cosine; the norm is
-    materialized as its own column so the 64-element transform does not
-    re-evaluate it per element). Approximate by construction: recall vs
-    brute force is MEASURED in tests, never assumed."""
-
-    def prep(df: DataFrame, out_id: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(out_id), F.col(vec_col).alias("_v")
-        ).withColumn("_n", _norm(F.col("_v")))
-
-    c = prep(corpus, "vec_id").select(
-        "vec_id",
-        pq_codes_col(F.col("_v"), F.col("_n"), codebooks).alias("codes"),
-    )
+    pq_codebooks_numpy — makes ADC-L2 rank like cosine). Approximate by
+    construction: recall vs brute force is MEASURED in tests, never
+    assumed."""
+    books, dsub = _literal_books(codebooks), len(codebooks[0][0])
+    c = _vectors(corpus, "vec_id", norm=True).select("vec_id", _pq_codes(books, dsub))
     # the per-query distance tables are MATERIALIZED as columns on the
     # (tiny, broadcast) query frame BEFORE the join: left inside the
     # post-join projection they would re-evaluate per (corpus × query)
     # output row
-    q = prep(queries, "query_id").select(
-        "query_id",
-        *[
-            F.transform(
-                _sub_l2_scored(F.col("_v"), F.col("_n"), cb, j),
-                lambda s: s["d"],
-            ).alias(f"_t{j}")
-            for j, cb in enumerate(codebooks)
-        ],
+    q = _vectors(queries, "query_id", norm=True).select(
+        "query_id", *_pq_tables(books, dsub)
     )
-    adc = None
-    for j in range(len(codebooks)):
-        term = F.try_element_at(
-            F.col(f"_t{j}"), F.try_element_at(F.col("codes"), F.lit(j + 1)) + 1
-        )
-        adc = term if adc is None else adc + term
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("adc_dist", F.round(adc, 6))
-        .select("query_id", "vec_id", "adc_dist")
-    )
-    from pyspark.sql import Window  # noqa: PLC0415
-
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "adc_dist", "rk")
-    )
+    return _adc_ranked(c.crossJoin(F.broadcast(q)), len(books), k)
 
 
 def _pq_dist_term_sql(src: str, nsrc: str, j: int, cent, dsub: int) -> str:
@@ -1019,14 +970,10 @@ FROM ranked WHERE rk <= {k}
 def ivfpq_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    dim: int,
+    centroids,
     codebooks,
     k: int = 10,
-    n_centroids: int = 16,
     n_probe: int = 4,
-    centroids=None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The full FAISS-style two-stage ANN: IVF coarse quantizer prunes
     the scan to n_probe inverted lists, PQ-ADC scores the survivors as
@@ -1034,8 +981,9 @@ def ivfpq_topk(
     assignment/probing is ivf_topk's (rounded dots, ties → highest
     centroid index, probe order (dot desc, index desc)), the fine
     distance is pq_topk's (unit-sphere ADC, 9dp tables, fixed summation
-    order). Returns (query_id, vec_id, adc_dist, rk), rk by
-    (adc_dist asc, vec_id asc).
+    order). Both models are required; every shape comes from them.
+    Returns (query_id, vec_id, adc_dist, rk), rk by (adc_dist asc,
+    vec_id asc).
 
     Scale shape: corpus rows carry ONLY (list_id, m bytes of codes) into
     the probe join — at 10^12 vectors that is the difference between a
@@ -1043,62 +991,18 @@ def ivfpq_topk(
     side (probes × distance tables) is broadcast. PQ here quantizes the
     unit vector directly (IVF-Flat-PQ); the classical residual encoding
     is a refinement that changes WHAT the codebooks see, not the plan."""
-    cents = _centroids(dim, n_centroids) if centroids is None else centroids
-    prep_c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")
-    ).withColumn("_n", _norm(F.col("_v")))
-    c = prep_c.select(
+    books, dsub = _literal_books(codebooks), len(codebooks[0][0])
+    c = _vectors(corpus, "vec_id", norm=True).select(
         "vec_id",
-        F.array_max(_centroid_scores_col(F.col("_v"), cents))["idx"].alias(
-            "list_id"
-        ),
-        pq_codes_col(F.col("_v"), F.col("_n"), codebooks).alias("codes"),
+        _list_id(F.col("_v"), centroids).alias("list_id"),
+        _pq_codes(books, dsub),
     )
-    prep_q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_v")
-    ).withColumn("_n", _norm(F.col("_v")))
-    with_tabs = prep_q.select(
-        "query_id",
-        F.slice(
-            F.reverse(F.array_sort(_centroid_scores_col(F.col("_v"), cents))),
-            1,
-            n_probe,
-        ).alias("_probes"),
-        *[
-            F.transform(
-                _sub_l2_scored(F.col("_v"), F.col("_n"), cb, j),
-                lambda s: s["d"],
-            ).alias(f"_t{j}")
-            for j, cb in enumerate(codebooks)
-        ],
+    tables = _vectors(queries, "query_id", norm=True).select(
+        "query_id", "_v", *_pq_tables(books, dsub)
     )
-    q = with_tabs.select(
-        "query_id",
-        F.explode_outer(
-            F.transform(F.col("_probes"), lambda p: p["idx"])
-        ).alias("list_id"),
-        *[f"_t{j}" for j in range(len(codebooks))],
-    )
-    adc = None
-    for j in range(len(codebooks)):
-        term = F.try_element_at(
-            F.col(f"_t{j}"), F.try_element_at(F.col("codes"), F.lit(j + 1)) + 1
-        )
-        adc = term if adc is None else adc + term
-    scored = (
-        c.join(F.broadcast(q), "list_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("adc_dist", F.round(adc, 6))
-        .select("query_id", "vec_id", "adc_dist")
-    )
-    from pyspark.sql import Window  # noqa: PLC0415
-
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "adc_dist", "rk")
-    )
+    t_cols = [f"_t{j}" for j in range(len(books))]
+    q = _probed(tables, "_v", centroids, n_probe, ["query_id", *t_cols])
+    return _adc_ranked(c.join(F.broadcast(q), "list_id"), len(books), k)
 
 
 def ivfpq_oracle_sql(
@@ -1198,24 +1102,15 @@ def residual_codebooks_numpy(x, centroids, m: int, ksub: int):
 
 
 def train_residual_codebooks(
-    corpus: DataFrame,
-    centroids,
-    dim: int,
-    m: int = 8,
-    ksub: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    corpus: DataFrame, centroids, m: int = 8, ksub: int = 16
 ):
-    """residual_codebooks_numpy over the corpus's training sample; `dim`
-    is the vector width, checked against the sample."""
-    x = training_sample(corpus, vec_col, id_col)
-    assert x.shape[1] == dim, (x.shape, dim)
-    return residual_codebooks_numpy(x, centroids, m, ksub)
+    """residual_codebooks_numpy over the corpus's training sample; the
+    vector width is the sample's."""
+    return residual_codebooks_numpy(training_sample(corpus), centroids, m, ksub)
 
 
 def coarse_assign_numpy(x, centroids):
-    """The numpy twin of the RUNTIME coarse rule (_centroid_scores_col +
-    array_max): dots of the RAW vectors (not normalized — rounding raw
+    """The numpy twin of the RUNTIME coarse rule (_list_id): dots of the RAW vectors (not normalized — rounding raw
     vs normalized dots resolves near-9dp-boundary cases differently for
     non-unit vectors, so the mirror must round exactly what the encoder
     rounds) to 9 decimals, ties -> HIGHEST centroid index (numpy's plain
@@ -1256,7 +1151,7 @@ def _shifted_books(centroids, codebooks, j: int, dsub: int):
     ]
 
 
-def _shifted_books_frame(spark, centroids, residual_books, dim: int):
+def _shifted_books_frame(spark, centroids, residual_books):
     """The per-list shifted codebooks + their ||c'||^2 folds as a 1-ROW
     broadcastable DataFrame (columns _rb_j: array<array<array<double>>>,
     _rc2_j: array<array<double>> per subspace). Shipping the model as
@@ -1266,8 +1161,7 @@ def _shifted_books_frame(spark, centroids, residual_books, dim: int):
     RE-WALKS on every chained transformation — a cross-joined 1-row
     frame is one attribute reference. Same doubles either way
     (createDataFrame stores python floats as exact DoubleType)."""
-    m = len(residual_books)
-    dsub = dim // m
+    m, dsub = len(residual_books), len(residual_books[0][0])
     row, fields = [], []
     for j in range(m):
         shifted_j = _shifted_books(centroids, residual_books, j, dsub)
@@ -1280,165 +1174,52 @@ def _shifted_books_frame(spark, centroids, residual_books, dim: int):
     return spark.createDataFrame([tuple(row)], ", ".join(fields))
 
 
-def _sub_l2_scored_by_list(
-    vec: Column,
-    norm: Column,
-    list_col: Column,
-    books_col: Column,
-    c2_col: Column,
-    j: int,
-    dsub: int,
-) -> Column:
-    """array<struct<d,idx>> of rounded shifted-centroid distances for
-    subspace j, with the codebook variant selected by the row's coarse
-    list id at runtime (codebooks ride in as the cross-joined 1-row
-    frame's columns — see _shifted_books_frame; same left-fold
-    arithmetic as _sub_l2_scored, same one-F.expr construction
-    economics)."""
-    vec_name = vec._jc.toString()
-    norm_name = norm._jc.toString()
-    list_name = list_col._jc.toString()
-    books_name = books_col._jc.toString()
-    c2_name = c2_col._jc.toString()
-    sub = (
-        f"transform(slice({vec_name}, {j * dsub + 1}, {dsub}), "
-        f"x -> CAST(x AS DOUBLE))"
-    )
-    my_books = f"element_at({books_name}, CAST({list_name} AS INT) + 1)"
-    my_c2 = f"element_at({c2_name}, CAST({list_name} AS INT) + 1)"
-    return F.expr(
-        f"transform({my_books}, (c, i) -> struct("
-        f"round(CAST(1.0 AS DOUBLE) + element_at({my_c2}, CAST(i AS INT) + 1)"
-        f" - CAST(2.0 AS DOUBLE) * aggregate(zip_with({sub}, c, "
-        f"(x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, v) -> a + v) "
-        f"/ {norm_name}, 9) AS d, CAST(i AS INT) AS idx))"
-    )
-
-
 def ivfpq_topk_residual(
     corpus: DataFrame,
     queries: DataFrame,
-    dim: int,
     centroids,
     residual_books,
     k: int = 10,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Residual-encoding IVF-PQ (classical IVFADC): corpus vectors are
     PQ-encoded as residuals from their coarse centroid, and ADC scores
     ‖u_q − (cent_l + book_codes)‖² — a strictly finer quantization than
     ivfpq_topk's direct encoding at the same bit budget (the codebooks
-    only cover the residual ball around each centroid). Same plan shape:
-    the corpus side carries (list_id, m bytes); the query side's
-    distance tables are per probed list, computed on the tiny broadcast
-    frame. Recall gain vs direct encoding is MEASURED in tests."""
-    m = len(residual_books)
-    dsub = dim // m
-    blit = _shifted_books_frame(
-        corpus.sparkSession, centroids, residual_books, dim
+    only cover the residual ball around each centroid). Both models are
+    required (residual_books from train_residual_codebooks over the same
+    centroids); every shape comes from them. Same plan shape: the corpus
+    side carries (list_id, m bytes); the query side's distance tables
+    are per probed list, computed on the tiny broadcast frame. Recall
+    gain vs direct encoding is MEASURED in tests."""
+    m, dsub = len(residual_books), len(residual_books[0][0])
+    blit = F.broadcast(
+        _shifted_books_frame(corpus.sparkSession, centroids, residual_books)
     )
-    prep_c = (
-        corpus.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")
+    # the codebook variant of the row's coarse list, picked at runtime
+    books = [
+        (
+            f"element_at(_rb_{j}, CAST(list_id AS INT) + 1)",
+            f"element_at(_rc2_{j}, CAST(list_id AS INT) + 1)",
         )
-        .withColumn("_n", _norm(F.col("_v")))
-        .crossJoin(F.broadcast(blit))
-    )
-    with_list = prep_c.withColumn(
-        "list_id",
-        F.array_max(_centroid_scores_col(F.col("_v"), centroids))["idx"],
-    )
-    c = with_list.select(
-        "vec_id",
-        "list_id",
-        F.array(
-            *[
-                F.array_min(
-                    _sub_l2_scored_by_list(
-                        F.col("_v"),
-                        F.col("_n"),
-                        F.col("list_id"),
-                        F.col(f"_rb_{j}"),
-                        F.col(f"_rc2_{j}"),
-                        j,
-                        dsub,
-                    )
-                )["idx"]
-                for j in range(m)
-            ]
-        ).alias("codes"),
-    )
-    prep_q = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("_v")
-        )
-        .withColumn("_n", _norm(F.col("_v")))
-        .crossJoin(F.broadcast(blit))
-    )
-    probed = prep_q.select(
-        "query_id",
-        "_v",
-        "_n",
-        *[f"_rb_{j}" for j in range(m)],
-        *[f"_rc2_{j}" for j in range(m)],
-        F.explode_outer(
-            F.transform(
-                F.slice(
-                    F.reverse(
-                        F.array_sort(
-                            _centroid_scores_col(F.col("_v"), centroids)
-                        )
-                    ),
-                    1,
-                    n_probe,
-                ),
-                lambda p: p["idx"],
-            )
-        ).alias("list_id"),
+        for j in range(m)
+    ]
+    c = (
+        _vectors(corpus, "vec_id", norm=True)
+        .crossJoin(blit)
+        .withColumn("list_id", _list_id(F.col("_v"), centroids))
+        .select("vec_id", "list_id", _pq_codes(books, dsub))
     )
     # distance tables per (query, probed list) — computed on the tiny
     # broadcast frame BEFORE the corpus join (the pq_topk lesson)
-    q = probed.select(
-        "query_id",
-        "list_id",
-        *[
-            F.transform(
-                _sub_l2_scored_by_list(
-                    F.col("_v"),
-                    F.col("_n"),
-                    F.col("list_id"),
-                    F.col(f"_rb_{j}"),
-                    F.col(f"_rc2_{j}"),
-                    j,
-                    dsub,
-                ),
-                lambda s: s["d"],
-            ).alias(f"_t{j}")
-            for j in range(m)
-        ],
-    )
-    adc = None
-    for j in range(m):
-        term = F.try_element_at(
-            F.col(f"_t{j}"), F.try_element_at(F.col("codes"), F.lit(j + 1)) + 1
-        )
-        adc = term if adc is None else adc + term
-    scored = (
-        c.join(F.broadcast(q), "list_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("adc_dist", F.round(adc, 6))
-        .select("query_id", "vec_id", "adc_dist")
-    )
-    from pyspark.sql import Window  # noqa: PLC0415
-
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "adc_dist", "rk")
-    )
+    q = _probed(
+        _vectors(queries, "query_id", norm=True).crossJoin(blit),
+        "_v",
+        centroids,
+        n_probe,
+        ["query_id", "_v", "_n", *blit.columns],
+    ).select("query_id", "list_id", *_pq_tables(books, dsub))
+    return _adc_ranked(c.join(F.broadcast(q), "list_id"), m, k)
 
 
 def ivfpq_residual_oracle_sql(
@@ -1560,11 +1341,7 @@ FROM ranked WHERE rk <= {k}
 """
 
 
-def recommend_pq_encoding(
-    corpus: DataFrame,
-    centroids,
-    vec_col: str = "embedding",
-) -> dict:
+def recommend_pq_encoding(corpus: DataFrame, centroids) -> dict:
     """The direct-vs-residual selection rule measured in
     BENCH/ANN_RECALL_r05.md, as a one-scan aggregate: residual encoding
     (ivfpq_topk_residual) quantizes the ball of coarse residuals, so it
@@ -1575,8 +1352,7 @@ def recommend_pq_encoding(
     scan, a scalar avg; no collect of vectors."""
     scores = _centroid_scores_col(F.col("_v"), centroids)
     row = (
-        corpus.select(F.col(vec_col).alias("_v"))
-        .withColumn("_n", _norm(F.col("_v")))
+        _vectors(corpus, "vec_id", norm=True)
         .select(
             (
                 F.lit(2.0)
@@ -1595,13 +1371,9 @@ def recommend_pq_encoding(
 
 def semantic_dedup(
     corpus: DataFrame,
-    dim: int,
-    n_clusters: int = 16,
+    centroids,
     threshold: float = 0.95,
     max_cluster: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids=None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) semantic near-dup
     pruning: cluster embeddings with spherical k-means, then inside each
@@ -1616,35 +1388,32 @@ def semantic_dedup(
 
     Returns ALL corpus rows: (vec_id, cluster, ccos, is_dup) where ccos =
     round(cosine(vec, centroid[cluster]), 6); filter `~is_dup` for the
-    pruned corpus. Cluster assignment reuses the shared IVF coarse-assign
-    rule (raw dots rounded to 9dp, ties -> highest index) so one centroid
-    model serves both this operator and the ANN tiers.
+    pruned corpus. `centroids` is the trained model (train_centroids);
+    the cluster count is its row count. Cluster assignment reuses the
+    shared IVF coarse-assign rule (raw dots rounded to 9dp, ties ->
+    highest index) so one centroid model serves both this operator and
+    the ANN tiers.
 
     Scale shape: the only full-data shuffles are the cluster-keyed
     self-join and the dup-id distinct; both move (id, cluster, small)
     rows, with vectors carried only into the pair filter. Per-cluster
     pairing is O(c^2): SemDeDup's own recipe keeps c bounded by scaling
-    n_clusters with the corpus (they use ~50k clusters at 10^8 docs, c ~
+    the cluster count with the corpus (they use ~50k clusters at 10^8 docs, c ~
     2k). For skewed clusterings, max_cluster excludes clusters above the
     cap from pairing entirely (their rows come back is_dup=false — a
     deliberate, observable false-negative, the same philosophy as
     embedding_dup_pairs' bucket cap: a cluster that big IS the finding;
-    re-cluster it with a larger n_clusters rather than emitting c^2/2
+    re-cluster it with more centroids rather than emitting c^2/2
     pairs). None disables the cap.
 
     The assigned frame feeds both self-join sides and the final join —
     persisted via cache.track_persist (release with release_persisted)."""
     from ..cache import track_persist  # noqa: PLC0415
 
-    cents = _centroids(dim, n_clusters) if centroids is None else centroids
-    a = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
-    )
-    top = F.array_max(_centroid_scores_col(F.col("vec"), cents))
-    cent_lookup = _lit_doubles([list(map(float, c)) for c in cents])
+    cent_lookup = _lit_doubles([list(map(float, c)) for c in centroids])
     a = (
-        a.withColumn("_t", top)
-        .withColumn("cluster", F.col("_t")["idx"].cast("bigint"))
+        _vectors(corpus, "vec_id", "vec")
+        .withColumn("cluster", _list_id(F.col("vec"), centroids).cast("bigint"))
         .withColumn(
             "ccos",
             F.round(
@@ -1655,7 +1424,6 @@ def semantic_dedup(
                 6,
             ),
         )
-        .select("vec_id", "vec", "cluster", "ccos")
     )
     a = track_persist(a)
     eligible = a

@@ -1,34 +1,20 @@
-"""Parquet table loaders for the driver-provided test data.
+"""Source tables: the names of the test-data tables, the raw-corpus JSON
+Lines reader and the Iceberg probe.
 
-In production these would be Iceberg catalog tables (`spark.read.table`);
-the sandbox has plain parquet, so the loaders go through `spark.read
-.parquet` — Catalyst still gets filter pushdown + column pruning. The
-Iceberg write path is stubbed behind an import-try (iceberg jars are not in
-this image).
+In production the tables would be Iceberg catalog tables
+(`spark.read.table`); the test data is plain parquet, read with
+`spark.read.parquet` — Catalyst still gets filter pushdown + column
+pruning. The Iceberg binding is gated by have_iceberg (iceberg jars are
+not in this image).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 TPCH_TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TPCH_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TPCH_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def have_iceberg(spark: SparkSession) -> bool:

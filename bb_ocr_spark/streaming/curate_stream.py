@@ -49,9 +49,10 @@ def run_curate_stream(
 
     stream = read_raw_documents_stream(spark, input_path)
 
+    # an epoch over a zero-row delivery commits a 0-doc run, like
+    # run_extract_stream: no separate isEmpty() job ahead of the results
+    # write, which scans and scrubs the same rows again
     def commit(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         run_incremental_curation(
             spark,
             batch_df,

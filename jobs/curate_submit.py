@@ -135,11 +135,9 @@ def main() -> None:
 
         from bb_ocr_spark.cache import release_persisted
         from bb_ocr_spark.operators.packing import assign_shards
-        from bb_ocr_spark.plans.snapshots import write_run
+        from bb_ocr_spark.plans.snapshots import run_dir, write_run
 
-        committed = spark.read.parquet(
-            os.path.join(args.state, "results", f"run_id={args.run_id}")
-        )
+        committed = spark.read.parquet(run_dir(args.state, args.run_id))
         # deterministic given the committed run results, so a complete
         # shard dir is kept on replay
         write_run(

@@ -139,3 +139,39 @@ def test_new_query_plan_quality(spark):
         plan = plan_of(qs[name](spark, sf))
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
+
+
+# Exchange (including BroadcastExchange), BroadcastExchange and Generate
+# nodes in each embedding query's executedPlan() at sf0.001, as planned
+# before the ANN operators moved onto shared stage helpers.
+ANN_PLAN_SHAPES = {
+    "embedding_topk": (4, 1, 0),
+    "ivf_topk": (3, 1, 1),
+    "pq_topk": (4, 1, 0),
+    "ivfpq_topk": (4, 1, 1),
+    "ivfpq_residual_topk": (6, 3, 1),
+    "lsh_ann": (3, 1, 1),
+    "dup_pairs": (14, 3, 4),
+    "semantic_dedup": (9, 1, 0),
+}
+
+
+def test_ann_plan_shapes(spark):
+    """The 8 embedding queries keep their shuffle, broadcast and explode
+    counts: a refactor of the ANN operators that changes a size estimate
+    can flip a broadcast side and add a window shuffle."""
+    import __spark_entry__ as E
+    from bb_ocr_spark.cache import release_persisted
+
+    sf = "/root/testdata/sf0.001"
+    qs = {**E.queries(), **E.extra_queries()}
+    got = {}
+    for name in ANN_PLAN_SHAPES:
+        p = plan_of(qs[name](spark, sf))
+        got[name] = (
+            p.count("Exchange"),
+            p.count("BroadcastExchange"),
+            p.count("Generate"),
+        )
+    release_persisted()
+    assert got == ANN_PLAN_SHAPES

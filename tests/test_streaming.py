@@ -477,6 +477,35 @@ def test_stream_empty_epoch_commits_zero_docs(spark, tmp_path):
     assert_lineage_matches_manifest(spark, out, s2["run_ids"][-1])
 
 
+def test_curate_stream_empty_epoch_commits_zero_docs(spark, tmp_path):
+    # an epoch over a zero-row delivery commits a 0-doc curation run
+    import os
+
+    from bb_ocr_spark.plans.snapshots import current_snapshot
+    from bb_ocr_spark.streaming.curate_stream import (
+        RAW_DOCS_SCHEMA_DDL,
+        run_curate_stream,
+    )
+
+    inbox = str(tmp_path / "inbox")
+    state = str(tmp_path / "state")
+    ck = str(tmp_path / "ck")
+    os.makedirs(inbox)
+    spark.createDataFrame(
+        [(i, " ".join(f"w{i}_{j} the of and to" for j in range(12))) for i in range(6)],
+        RAW_DOCS_SCHEMA_DDL,
+    ).coalesce(1).write.parquet(os.path.join(inbox, "d1"))
+    run_curate_stream(spark, inbox + "/*", state, ck)
+    s1 = current_snapshot(state)
+    spark.createDataFrame([], RAW_DOCS_SCHEMA_DDL).coalesce(1).write.parquet(
+        os.path.join(inbox, "d2")
+    )
+    run_curate_stream(spark, inbox + "/*", state, ck)
+    s2 = current_snapshot(state)
+    assert s2["snapshot_id"] == s1["snapshot_id"] + 1
+    assert s2["n_docs_total"] == s1["n_docs_total"] == 6
+
+
 def test_snapshot_reader_ignores_stale_pointer_and_sorts_numerically(tmp_path):
     import json
     import os

@@ -241,7 +241,7 @@ def test_ivf_topk(spark, sf_dir):
     import pandas as pd
     from pyspark.sql import functions as F2
 
-    from bb_ocr_spark.operators.similarity import ivf_topk
+    from bb_ocr_spark.operators.similarity import ivf_topk, train_centroids
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     # planted neighbors (as in the LSH test): perturbed copies must be
@@ -254,7 +254,10 @@ def test_ivf_topk(spark, sf_dir):
             "label": src["label"],
         }
     )
-    out = ivf_topk(emb, spark.createDataFrame(planted), dim=64, k=3, n_probe=2)
+    out = ivf_topk(
+        emb, spark.createDataFrame(planted), train_centroids(emb, 16), k=3,
+        n_probe=2,
+    )
     top1 = {r["query_id"]: r["vec_id"] for r in out.collect() if r["rk"] == 1}
     found = sum(1 for qid, vid in top1.items() if vid == qid - 500_000)
     assert found / len(src) >= 0.95, f"IVF found {found}/{len(src)}"
@@ -571,7 +574,7 @@ def test_lsh_plane_count_sizing(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from bb_ocr_spark.operators.similarity import with_lsh_buckets
+    from bb_ocr_spark.operators.similarity import _hyperplanes, signature_col
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     src = emb.filter(F.col("vec_id") < 40).toPandas()
@@ -596,7 +599,12 @@ def test_lsh_plane_count_sizing(spark, sf_dir):
         return sum(1 for q, v in top1.items() if v == q - 500_000) / len(src)
 
     def mean_bucket(n_planes):
-        b = with_lsh_buckets(emb, dim=64, n_planes=n_planes)
+        # lsh_topk's corpus-side bucket code
+        b = emb.select(
+            signature_col(F.col("embedding"), _hyperplanes(64, n_planes)).alias(
+                "bucket"
+            )
+        )
         return (
             b.groupBy("bucket").count().agg(F.avg("count")).collect()[0][0]
         )
@@ -922,7 +930,7 @@ def test_pq_adc_recall_and_determinism(spark):
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = spark.createDataFrame(qrows, "vec_id long, embedding array<double>")
 
-    books = train_pq_codebooks(corpus, dim=dim, m=8, ksub=16)
+    books = train_pq_codebooks(corpus, m=8, ksub=16)
     out = pq_topk(corpus, queries, books, k=3).collect()
     got = {}
     for r in out:
@@ -1060,11 +1068,8 @@ def test_ivfpq_planted_recall(spark):
     queries = spark.createDataFrame(qrows, "vec_id long, embedding array<double>")
 
     cents = train_centroids(corpus, n_centroids=16)
-    books = train_pq_codebooks(corpus, dim=dim, m=8, ksub=16)
-    out = ivfpq_topk(
-        corpus, queries, dim=dim, codebooks=books, k=3, n_probe=4,
-        centroids=cents,
-    ).collect()
+    books = train_pq_codebooks(corpus, m=8, ksub=16)
+    out = ivfpq_topk(corpus, queries, cents, books, k=3, n_probe=4).collect()
     got = {}
     for r in out:
         got.setdefault(r["query_id"], set()).add(r["vec_id"])
@@ -1074,8 +1079,7 @@ def test_ivfpq_planted_recall(spark):
     assert recall >= 0.8, recall
 
     again = ivfpq_topk(
-        corpus.repartition(13), queries, dim=dim, codebooks=books, k=3,
-        n_probe=4, centroids=cents,
+        corpus.repartition(13), queries, cents, books, k=3, n_probe=4
     ).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, out))
 
@@ -1159,7 +1163,7 @@ def test_pq_code_budget_sizing(spark):
     planted = {i: {1000 + 3 * i, 1001 + 3 * i, 1002 + 3 * i} for i in range(n_q)}
 
     def recall(m):
-        books = train_pq_codebooks(corpus, dim=dim, m=m, ksub=16)
+        books = train_pq_codebooks(corpus, m=m, ksub=16)
         got = {}
         for r in pq_topk(corpus, queries, books, k=3).collect():
             got.setdefault(r["query_id"], set()).add(r["vec_id"])
@@ -1204,8 +1208,8 @@ def test_ivfpq_residual_beats_direct(spark):
     planted = {i: {1000 + 3 * i, 1001 + 3 * i, 1002 + 3 * i} for i in range(n_q)}
 
     cents = train_centroids(corpus, n_centroids=16)
-    direct_books = train_pq_codebooks(corpus, dim=dim, m=8, ksub=16)
-    res_books = train_residual_codebooks(corpus, cents, dim=dim, m=8, ksub=16)
+    direct_books = train_pq_codebooks(corpus, m=8, ksub=16)
+    res_books = train_residual_codebooks(corpus, cents, m=8, ksub=16)
 
     def recall(out):
         got = {}
@@ -1215,22 +1219,17 @@ def test_ivfpq_residual_beats_direct(spark):
         return hits / (3 * n_q)
 
     r_direct = recall(
-        ivfpq_topk(
-            corpus, queries, dim=dim, codebooks=direct_books, k=3,
-            n_probe=4, centroids=cents,
-        ).collect()
+        ivfpq_topk(corpus, queries, cents, direct_books, k=3, n_probe=4).collect()
     )
     res_out = ivfpq_topk_residual(
-        corpus, queries, dim=dim, centroids=cents,
-        residual_books=res_books, k=3, n_probe=4,
+        corpus, queries, cents, res_books, k=3, n_probe=4
     ).collect()
     r_res = recall(res_out)
     assert r_res >= r_direct, (r_direct, r_res)
     assert r_res >= 0.6, (r_direct, r_res)
 
     again = ivfpq_topk_residual(
-        corpus.repartition(11), queries, dim=dim, centroids=cents,
-        residual_books=res_books, k=3, n_probe=4,
+        corpus.repartition(11), queries, cents, res_books, k=3, n_probe=4
     ).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, res_out))
 
@@ -1280,11 +1279,11 @@ def test_training_readers_agree_when_cap_binds(spark, tmp_path):
     want_cents = kmeans_numpy(x, 16)
     assert np.array_equal(cents, want_cents)
     assert np.array_equal(
-        train_pq_codebooks(corpus, dim=dim, m=8, ksub=16),
+        train_pq_codebooks(corpus, m=8, ksub=16),
         pq_codebooks_numpy(x, m=8, ksub=16),
     )
     assert np.array_equal(
-        train_residual_codebooks(corpus, cents, dim=dim, m=8, ksub=16),
+        train_residual_codebooks(corpus, cents, m=8, ksub=16),
         residual_codebooks_numpy(x, want_cents, m=8, ksub=16),
     )
 
@@ -1347,9 +1346,7 @@ def test_semantic_dedup_keeper_and_cap(spark):
     cents = np.stack([base / np.linalg.norm(base), -base / np.linalg.norm(base)])
     out = {
         r["vec_id"]: r
-        for r in semantic_dedup(
-            df, dim=8, n_clusters=2, threshold=0.99, centroids=cents
-        ).collect()
+        for r in semantic_dedup(df, cents, threshold=0.99).collect()
     }
     release_persisted()
     assert not out[0]["is_dup"]          # keeper: lowest id of the tied trio
@@ -1361,8 +1358,7 @@ def test_semantic_dedup_keeper_and_cap(spark):
     capped = {
         r["vec_id"]: r
         for r in semantic_dedup(
-            df, dim=8, n_clusters=2, threshold=0.99, centroids=cents,
-            max_cluster=2,
+            df, cents, threshold=0.99, max_cluster=2
         ).collect()
     }
     release_persisted()

@@ -56,16 +56,14 @@ def main(sf_dir: str, k: int = 10, n_queries: int = 50) -> None:
             emb, queries, dim=64, k=k, n_planes=10, n_probe=2
         ),
         "ivf (16 lists, probe 4)": lambda: ivf_topk(
-            emb, queries, dim=64, k=k, n_probe=4, centroids=cents
+            emb, queries, cents, k=k, n_probe=4
         ),
         "pq (m=8, ksub=16)": lambda: pq_topk(emb, queries, books, k=k),
         "ivfpq (direct)": lambda: ivfpq_topk(
-            emb, queries, dim=64, codebooks=books, k=k, n_probe=4,
-            centroids=cents,
+            emb, queries, cents, books, k=k, n_probe=4
         ),
         "ivfpq (residual/IVFADC)": lambda: ivfpq_topk_residual(
-            emb, queries, dim=64, centroids=cents, residual_books=res_books,
-            k=k, n_probe=4,
+            emb, queries, cents, res_books, k=k, n_probe=4
         ),
     }
     print(
@@ -154,24 +152,22 @@ def structured_report(spark, k: int = 3, mode: str = "twins") -> None:
     planted = {i: {10_000 + 3 * i + j for j in range(3)} for i in range(n_q)}
 
     cents = train_centroids(corpus, n_centroids=16)
-    books = train_pq_codebooks(corpus, dim=dim, m=8, ksub=16)
-    res_books = train_residual_codebooks(corpus, cents, dim=dim, m=8, ksub=16)
+    books = train_pq_codebooks(corpus, m=8, ksub=16)
+    res_books = train_residual_codebooks(corpus, cents, m=8, ksub=16)
 
     tiers = {
         "lsh (10 planes, probe 2)": lambda: lsh_topk(
             corpus, queries, dim=dim, k=k, n_planes=10, n_probe=2
         ),
         "ivf (16 lists, probe 4)": lambda: ivf_topk(
-            corpus, queries, dim=dim, k=k, n_probe=4, centroids=cents
+            corpus, queries, cents, k=k, n_probe=4
         ),
         "pq (m=8, ksub=16)": lambda: pq_topk(corpus, queries, books, k=k),
         "ivfpq (direct)": lambda: ivfpq_topk(
-            corpus, queries, dim=dim, codebooks=books, k=k, n_probe=4,
-            centroids=cents,
+            corpus, queries, cents, books, k=k, n_probe=4
         ),
         "ivfpq (residual/IVFADC)": lambda: ivfpq_topk_residual(
-            corpus, queries, dim=dim, centroids=cents,
-            residual_books=res_books, k=k, n_probe=4,
+            corpus, queries, cents, res_books, k=k, n_probe=4
         ),
     }
     print(

@@ -154,7 +154,7 @@ def main() -> None:
     )
 
     def pq_stage():
-        books = train_pq_codebooks(emb, dim=64, m=8, ksub=16)
+        books = train_pq_codebooks(emb, m=8, ksub=16)
         queries = emb.filter(F.col("vec_id") < 20)  # tile-0 vectors
         out = pq_topk(emb, queries, books, k=4).collect()
         got = {}

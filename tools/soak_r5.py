@@ -246,10 +246,8 @@ def main() -> None:
         cents = train_centroids(corpus, n_centroids=16)
         rec = recommend_pq_encoding(corpus, cents)
         assert rec["encoding"] == "residual", rec
-        books = train_pq_codebooks(corpus, dim=dim, m=8, ksub=16)
-        res_books = train_residual_codebooks(
-            corpus, cents, dim=dim, m=8, ksub=16
-        )
+        books = train_pq_codebooks(corpus, m=8, ksub=16)
+        res_books = train_residual_codebooks(corpus, cents, m=8, ksub=16)
 
         def recall(out):
             got = {}
@@ -259,15 +257,11 @@ def main() -> None:
             return hits / (3 * n_q)
 
         r_direct = recall(
-            ivfpq_topk(
-                corpus, queries, dim=dim, codebooks=books, k=3, n_probe=4,
-                centroids=cents,
-            ).collect()
+            ivfpq_topk(corpus, queries, cents, books, k=3, n_probe=4).collect()
         )
         r_res = recall(
             ivfpq_topk_residual(
-                corpus, queries, dim=dim, centroids=cents,
-                residual_books=res_books, k=3, n_probe=4,
+                corpus, queries, cents, res_books, k=3, n_probe=4
             ).collect()
         )
         assert r_res >= r_direct, (r_direct, r_res)
