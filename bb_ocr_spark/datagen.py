@@ -227,12 +227,6 @@ def generate_html_df(spark, n_docs: int, partitions: int | None = None):
 # Spark-side distributed generation (the 10^12-row path)
 # --------------------------------------------------------------------------
 
-SPANS_SCHEMA_DDL = (
-    "doc_id string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-)
-
-
 def generate_df(spark, n_docs: int, partitions: int | None = None):
     """documents_interleaved as a DataFrame, generated distributed.
 
@@ -240,6 +234,9 @@ def generate_df(spark, n_docs: int, partitions: int | None = None):
     docs from the pure per-doc kernel — no driver bottleneck, no shuffle.
     """
     import pandas as pd  # noqa: PLC0415 — imported in executor too
+
+    # the oracle path imports this module without pyspark
+    from .operators.extract import SPANS_SCHEMA_DDL  # noqa: PLC0415
 
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism, 4)

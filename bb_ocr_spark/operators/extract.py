@@ -28,6 +28,12 @@ from pyspark.sql import functions as F
 
 from .. import config
 
+# one row per document with its full span array: the input of the
+# extraction, the streaming source and the reading-order stage
+SPANS_SCHEMA_DDL = (
+    "doc_id string, "
+    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+)
 OUT_SCHEMA_DDL = (
     "doc_id string, spans array<struct<kind:string,text:string,media_ref:string>>"
 )

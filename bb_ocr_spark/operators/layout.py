@@ -25,11 +25,7 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
-REGION_DDL = "array<struct<x0:double,y0:double,x1:double,y1:double,text:string>>"
-ORDERED_SPANS_DDL = (
-    "doc_id string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-)
+from .extract import SPANS_SCHEMA_DDL
 
 
 def _widest_gap(intervals: list[tuple[float, float]]) -> tuple[float, float]:
@@ -109,5 +105,5 @@ def order_regions(
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "spans": spans_out})
 
     return df.select("doc_id", regions_col).mapInPandas(
-        run, schema=ORDERED_SPANS_DDL
+        run, schema=SPANS_SCHEMA_DDL
     )

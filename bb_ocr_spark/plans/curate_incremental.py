@@ -66,28 +66,27 @@ def accumulated_fingerprints(spark: SparkSession, state_dir: str) -> DataFrame |
     return spark.read.schema("fp string").parquet(*dirs)
 
 
-def append_bucketed_fingerprints(
-    df: DataFrame, table: str, buckets: int = 16
-) -> None:
-    """Append (fp, run_id) rows to the hash-bucketed state table — the
-    one-time shuffle that makes every later anti-join read the state
-    side exchange-free."""
+def append_bucketed(df: DataFrame, table: str, key: str, buckets: int) -> None:
+    """Append rows to a state table hash-bucketed and sorted on `key` —
+    the one-time shuffle that makes every later delivery's join read the
+    state side Exchange-free."""
     (
         df.write.mode("append")
-        .bucketBy(buckets, "fp")
-        .sortBy("fp")
+        .bucketBy(buckets, key)
+        .sortBy(key)
         .format("parquet")
         .saveAsTable(table)
     )
 
 
-def committed_bucketed_fingerprints(
-    spark: SparkSession, state_dir: str, table: str
+def committed_rows(
+    spark: SparkSession, state_dir: str, table: str, *cols
 ) -> DataFrame | None:
-    """fp state restricted to COMMITTED run_ids (a replayed uncommitted
-    run may have appended rows that do not count yet). The run_id filter
-    does not disturb the scan's bucket layout, so the anti-join's state
-    side stays Exchange-free."""
+    """`cols` of a state table's rows whose run_id is COMMITTED (a
+    replayed uncommitted run may have appended rows that do not count
+    yet); None while the table or the snapshot chain does not exist. The
+    run_id filter does not disturb the scan's bucket layout, so the
+    state side of a join stays Exchange-free."""
     if not spark.catalog.tableExists(table):
         return None
     cur = current_snapshot(state_dir)
@@ -96,41 +95,7 @@ def committed_bucketed_fingerprints(
     return (
         spark.table(table)
         .filter(F.col("run_id").isin(cur["run_ids"]))
-        .select("fp")
-    )
-
-
-def append_bucketed_grams(
-    df: DataFrame, table: str, buckets: int = 16
-) -> None:
-    """Append (g, run_id) k-gram hash rows to the substring-dedup state
-    table, hash-bucketed on the gram key — same one-time-shuffle
-    discipline as the fingerprint state, so every later delivery's
-    inventory semi-join reads the state side Exchange-free."""
-    (
-        df.write.mode("append")
-        .bucketBy(buckets, "g")
-        .sortBy("g")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def committed_bucketed_grams(
-    spark: SparkSession, state_dir: str, table: str
-) -> DataFrame | None:
-    """Gram state restricted to COMMITTED run_ids (replayed uncommitted
-    runs may have appended rows that do not count yet); the filter does
-    not disturb the bucket layout."""
-    if not spark.catalog.tableExists(table):
-        return None
-    cur = current_snapshot(state_dir)
-    if cur is None:
-        return None
-    return (
-        spark.table(table)
-        .filter(F.col("run_id").isin(cur["run_ids"]))
-        .select("g")
+        .select(*cols)
     )
 
 
@@ -215,9 +180,7 @@ def run_incremental_curation(
     ).filter(F.col("id") == F.col("_wid")).select("id", "text", "fp")
     # cross-run dedup: drop fingerprints already committed by prior runs
     if bucketed_fp_table is not None:
-        seen = committed_bucketed_fingerprints(
-            spark, state_dir, bucketed_fp_table
-        )
+        seen = committed_rows(spark, state_dir, bucketed_fp_table, "fp")
     else:
         seen = accumulated_fingerprints(spark, state_dir)
     if seen is not None:
@@ -251,7 +214,7 @@ def run_incremental_curation(
             substring_dedup_incremental,
         )
 
-        seen_g = committed_bucketed_grams(spark, state_dir, substr_state_table)
+        seen_g = committed_rows(spark, state_dir, substr_state_table, "g")
         # batch_uniq feeds the dedup AND the rejoin of its non-text cols
         batch_uniq = track_persist(batch_uniq)
         deduped, batch_gram_occ = substring_dedup_incremental(
@@ -300,9 +263,10 @@ def run_incremental_curation(
     if bucketed_fp_table is not None:
         # append BEFORE the snapshot commit: the moment run_id becomes
         # committed, its fps must already be in the state table
-        append_bucketed_fingerprints(
+        append_bucketed(
             committed.select("fp").withColumn("run_id", F.lit(run_id)),
             bucketed_fp_table,
+            "fp",
             fp_buckets,
         )
     if minhash_state_table is not None:
@@ -316,12 +280,13 @@ def run_incremental_curation(
         )
     if substr_state_table is not None:
         # distinct original-text grams of the docs actually committed
-        append_bucketed_grams(
+        append_bucketed(
             batch_gram_occ.join(committed.select("id"), "id", "left_semi")
             .select("g")
             .distinct()
             .withColumn("run_id", F.lit(run_id)),
             substr_state_table,
+            "g",
             fp_buckets,
         )
     n, ck = (totals.get[k] or 0 for k in ("n", "ck"))  # xor is NULL if empty
@@ -357,11 +322,10 @@ def compact_bucketed_fingerprints(
     for leftover in (tmp, old):
         if spark.catalog.tableExists(leftover):
             spark.sql(f"DROP TABLE {leftover}")
-    cur = current_snapshot(state_dir)
-    if cur is None or not spark.catalog.tableExists(table):
+    committed = committed_rows(spark, state_dir, table, "*")
+    if committed is None:
         return {"compacted": False}
     files_before = len(spark.table(table).inputFiles())
-    committed = spark.table(table).filter(F.col("run_id").isin(cur["run_ids"]))
     # repartition into the bucket layout first so each bucket is written
     # by one task → one file per bucket (bucketBy assigns rows to buckets
     # by its own hash regardless, so correctness never depends on this)
@@ -420,22 +384,14 @@ def append_minhash_state(
     hash-bucketed state tables ({table}_buckets on `bucket`, {table}_sigs
     on `id`) — the one-time shuffles that keep every later delivery's
     candidate join and signature fetch Exchange-free on the state side."""
-    (
-        _band_bucket_rows(sigs)
-        .withColumn("run_id", F.lit(run_id))
-        .write.mode("append")
-        .bucketBy(buckets, "bucket")
-        .sortBy("bucket")
-        .format("parquet")
-        .saveAsTable(f"{table}_buckets")
+    append_bucketed(
+        _band_bucket_rows(sigs).withColumn("run_id", F.lit(run_id)),
+        f"{table}_buckets",
+        "bucket",
+        buckets,
     )
-    (
-        sigs.withColumn("run_id", F.lit(run_id))
-        .write.mode("append")
-        .bucketBy(buckets, "id")
-        .sortBy("id")
-        .format("parquet")
-        .saveAsTable(f"{table}_sigs")
+    append_bucketed(
+        sigs.withColumn("run_id", F.lit(run_id)), f"{table}_sigs", "id", buckets
     )
 
 
@@ -462,17 +418,18 @@ def near_dup_drops(
     re-verification would need prior TEXT retained in state; signatures
     are 64 longs/doc forever, text is not). max_bucket drops degenerate
     state buckets before pairing (same cap rule as minhash_lsh_pairs)."""
-    if not spark.catalog.tableExists(f"{table}_buckets"):
-        return None
-    cur = current_snapshot(state_dir)
-    if cur is None:
-        return None
-    committed = F.col("run_id").isin(cur["run_ids"])
-    old_buckets = (
-        spark.table(f"{table}_buckets")
-        .filter(committed)
-        .select(F.col("id").alias("old_id"), "bucket")
+    old_buckets = committed_rows(
+        spark, state_dir, f"{table}_buckets", F.col("id").alias("old_id"), "bucket"
     )
+    old_sigs = committed_rows(
+        spark,
+        state_dir,
+        f"{table}_sigs",
+        F.col("id").alias("old_id"),
+        F.col("sig").alias("old_sig"),
+    )
+    if old_buckets is None or old_sigs is None:
+        return None
     hot = (
         old_buckets.groupBy("bucket")
         .agg(F.count("*").alias("sz"))
@@ -485,11 +442,6 @@ def near_dup_drops(
         .join(old_buckets, "bucket")
         .select("id", "old_id")
         .distinct()
-    )
-    old_sigs = (
-        spark.table(f"{table}_sigs")
-        .filter(committed)
-        .select(F.col("id").alias("old_id"), F.col("sig").alias("old_sig"))
     )
     est = F.size(
         F.filter(

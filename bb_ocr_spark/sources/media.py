@@ -1,8 +1,8 @@
 """Multimodal media columns: opaque binary payloads + typed metadata.
 
 The Spark-side plumbing is REAL and tested — schema, Arrow batch shapes,
-partition sizing, UDF signatures; the pixel/sample decoding itself is
-STUBBED (this container ships no image/audio libraries): `decode_image`
+partition sizing, UDF signatures; the pixel decoding itself is
+STUBBED (the package depends on no image library): `decode_image`
 raises NotImplementedError unless a PIL-class decoder is importable, and
 tests use the deterministic fake codec below, which round-trips a header +
 payload through real bytes.
@@ -206,214 +206,3 @@ def resize_stub(media: DataFrame, max_side: int) -> DataFrame:
     return media.withColumn("resize_ratio", F.round(ratio, 6)).withColumn(
         "target_width", F.floor(F.col("width") * ratio).cast("int")
     ).withColumn("target_height", F.floor(F.col("height") * ratio).cast("int"))
-
-
-def frame_sample_plan(n_frames: int, every_n: int) -> list[int]:
-    """Deterministic frame-sampling indices for video payloads (stub for the
-    decode; the selection logic is the real part)."""
-    return list(range(0, n_frames, max(every_n, 1)))
-
-
-# --------------------------------------------------------------------------
-# video: container parse + frame sampling (1 row -> N sampled frames)
-# --------------------------------------------------------------------------
-
-_VMAGIC = b"FAKEVID1"
-_AMAGIC = b"FAKEAUD1"
-
-
-def fake_encode_video(media_ref: str, width: int, height: int, n_frames: int) -> bytes:
-    """Deterministic video container: magic + dims + frame count + raw
-    frames (one w*h byte-plane per frame, seeded on (ref, frame idx)) —
-    the stand-in for an mp4; the container FORMAT handling is the real
-    plumbing under test."""
-    import numpy as np  # noqa: PLC0415
-    import zlib  # noqa: PLC0415
-
-    head = (
-        _VMAGIC
-        + width.to_bytes(4, "big")
-        + height.to_bytes(4, "big")
-        + n_frames.to_bytes(4, "big")
-    )
-    frames = []
-    for i in range(n_frames):
-        seed = zlib.crc32(f"{media_ref}#{i}".encode()) % (2**31)
-        rng = np.random.RandomState(seed)
-        frames.append(
-            rng.randint(0, 256, size=width * height, dtype=np.int64)
-            .astype("uint8")
-            .tobytes()
-        )
-    return head + b"".join(frames)
-
-
-def fake_decode_video(content: bytes):
-    """bytes → (w, h, n_frames, frame_getter(i) -> np.uint8[h,w])."""
-    import numpy as np  # noqa: PLC0415
-
-    if content[:8] != _VMAGIC:
-        raise ValueError("not a FAKEVID1 payload")
-    w = int.from_bytes(content[8:12], "big")
-    h = int.from_bytes(content[12:16], "big")
-    n = int.from_bytes(content[16:20], "big")
-    plane = w * h
-
-    def frame(i: int):
-        off = 20 + i * plane
-        return np.frombuffer(content[off : off + plane], dtype=np.uint8).reshape(h, w)
-
-    return w, h, n, frame
-
-
-FRAME_SCHEMA_DDL = (
-    "media_ref string, frame_idx int, width int, height int, "
-    "frame_mean double, content binary, error string"
-)
-
-
-def sample_video_frames(
-    media: DataFrame, every_n: int = 8, on_error: str = "keep"
-) -> DataFrame:
-    """Video payloads → one row per SAMPLED frame (frame_sample_plan
-    indices): the UDTF-shaped 1→N stage a video training pipeline needs
-    before per-frame encode/caption. Only sampled frames are materialized
-    — the container is sliced per index, never fully expanded — so output
-    bytes are payload/every_n. Error-as-column fault isolation as in
-    extract_image_features."""
-    import pandas as pd  # noqa: PLC0415
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                try:
-                    # frame slicing stays INSIDE the guard: a truncated
-                    # container passes the header parse but fails the
-                    # per-frame reshape — that too must isolate as an
-                    # error row, never kill the task
-                    w, h, n, frame = fake_decode_video(bytes(content))
-                    sampled = [
-                        (i, frame(i)) for i in frame_sample_plan(n, every_n)
-                    ]
-                except Exception as e:
-                    if on_error == "fail":
-                        raise
-                    rows.append((ref, None, None, None, None, None, str(e)))
-                    continue
-                for i, arr in sampled:
-                    rows.append(
-                        (
-                            ref,
-                            i,
-                            w,
-                            h,
-                            round(float(arr.mean()), 6),
-                            arr.tobytes(),
-                            None,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_ref", "frame_idx", "width", "height",
-                    "frame_mean", "content", "error",
-                ],
-            )
-
-    return media.select("media_ref", "content").mapInPandas(
-        run, schema=FRAME_SCHEMA_DDL
-    )
-
-
-# --------------------------------------------------------------------------
-# audio: PCM windows → features (vectorized numpy per Arrow batch)
-# --------------------------------------------------------------------------
-
-
-def fake_encode_audio(media_ref: str, n_samples: int, sample_rate: int = 16000) -> bytes:
-    """Deterministic audio container: magic + rate + count + int16 PCM
-    (seeded sine + noise per ref) — the stand-in for a wav/flac."""
-    import numpy as np  # noqa: PLC0415
-    import zlib  # noqa: PLC0415
-
-    seed = zlib.crc32(media_ref.encode()) % (2**31)
-    rng = np.random.RandomState(seed)
-    t = np.arange(n_samples, dtype="float64")
-    freq = 100.0 + (seed % 400)
-    wave = 0.5 * np.sin(2 * np.pi * freq * t / sample_rate) + 0.1 * rng.randn(n_samples)
-    pcm = np.clip(wave * 32767, -32768, 32767).astype("<i2")
-    head = (
-        _AMAGIC + sample_rate.to_bytes(4, "big") + n_samples.to_bytes(4, "big")
-    )
-    return head + pcm.tobytes()
-
-
-def fake_decode_audio(content: bytes):
-    """bytes → (sample_rate, np.int16 samples)."""
-    import numpy as np  # noqa: PLC0415
-
-    if content[:8] != _AMAGIC:
-        raise ValueError("not a FAKEAUD1 payload")
-    rate = int.from_bytes(content[8:12], "big")
-    n = int.from_bytes(content[12:16], "big")
-    return rate, np.frombuffer(content[16 : 16 + 2 * n], dtype="<i2")
-
-
-AUDIO_WINDOW_SCHEMA_DDL = (
-    "media_ref string, win_idx int, start_sec double, rms double, "
-    "zero_crossings int, error string"
-)
-
-
-def audio_window_features(
-    media: DataFrame, window: int = 1024, on_error: str = "keep"
-) -> DataFrame:
-    """Audio payloads → one row per fixed-size PCM window with RMS and
-    zero-crossing count (the VAD/segmentation primitives an audio
-    training pipeline runs before ASR). The window math is REAL
-    vectorized numpy — a (n_windows × window) reshape, one pass — only
-    the codec is the deterministic fake; a real decoder slots into
-    fake_decode_audio's seam."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                try:
-                    rate, pcm = fake_decode_audio(bytes(content))
-                except Exception as e:
-                    if on_error == "fail":
-                        raise
-                    rows.append((ref, None, None, None, None, str(e)))
-                    continue
-                n_win = len(pcm) // window
-                if n_win == 0:
-                    continue
-                x = pcm[: n_win * window].astype("float64").reshape(n_win, window)
-                rms = np.sqrt((x * x).mean(axis=1))
-                zc = (np.diff(np.signbit(x), axis=1) != 0).sum(axis=1)
-                for i in range(n_win):
-                    rows.append(
-                        (
-                            ref,
-                            i,
-                            round(i * window / rate, 6),
-                            round(float(rms[i]), 6),
-                            int(zc[i]),
-                            None,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_ref", "win_idx", "start_sec", "rms",
-                    "zero_crossings", "error",
-                ],
-            )
-
-    return media.select("media_ref", "content").mapInPandas(
-        run, schema=AUDIO_WINDOW_SCHEMA_DDL
-    )

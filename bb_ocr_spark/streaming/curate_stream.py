@@ -20,14 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 RAW_DOCS_SCHEMA_DDL = "doc_id long, text string"
 
 
-def read_raw_documents_stream(
-    spark: SparkSession, path: str, schema: str = RAW_DOCS_SCHEMA_DDL
-) -> DataFrame:
-    """Explicit schema, never inference — the same 100 TB rule as
-    sources.tables.load_documents_jsonl."""
-    return spark.readStream.schema(schema).parquet(path)
-
-
 def run_curate_stream(
     spark: SparkSession,
     input_path: str,
@@ -47,7 +39,9 @@ def run_curate_stream(
         run_incremental_curation,
     )
 
-    stream = read_raw_documents_stream(spark, input_path)
+    # explicit schema, never inference — the same 100 TB rule as
+    # sources.tables.load_documents_jsonl
+    stream = spark.readStream.schema(RAW_DOCS_SCHEMA_DDL).parquet(input_path)
 
     # an epoch over a zero-row delivery commits a 0-doc run, like
     # run_extract_stream: no separate isEmpty() job ahead of the results

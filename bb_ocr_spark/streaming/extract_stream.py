@@ -16,17 +16,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.extract import checksum_spans_col, extract_inline
+from ..operators.extract import SPANS_SCHEMA_DDL, checksum_spans_col, extract_inline
 from ..plans.extract_job import commit_run
-
-DOCS_SCHEMA_DDL = (
-    "doc_id string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-)
 
 
 def read_documents_stream(spark: SparkSession, path: str) -> DataFrame:
-    return spark.readStream.schema(DOCS_SCHEMA_DDL).parquet(path)
+    return spark.readStream.schema(SPANS_SCHEMA_DDL).parquet(path)
 
 
 def extract_stream(docs: DataFrame) -> DataFrame:

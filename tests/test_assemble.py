@@ -13,7 +13,11 @@ from bb_ocr_spark.operators.assemble import (
     filter_spans,
     with_span_counts,
 )
-from bb_ocr_spark.operators.extract import extract_inline
+from bb_ocr_spark.operators.extract import (
+    SPANS_SCHEMA_DDL,
+    checksum_spans_col,
+    extract_inline,
+)
 
 N_DOCS = 60  # includes mega-doc i=7
 
@@ -39,7 +43,7 @@ def test_salted_assembly_matches_oracle(spark):
     docs[KEEP_RULE_DOC[0]] = KEEP_RULE_DOC[1]
     extra = spark.createDataFrame(
         [(KEEP_RULE_DOC[0], [tuple(s.values()) for s in KEEP_RULE_DOC[1]])],
-        datagen.SPANS_SCHEMA_DDL,
+        SPANS_SCHEMA_DDL,
     )
     df = datagen.generate_df(spark, N_DOCS, partitions=6).unionByName(extra)
     exploded = filter_spans(explode_spans(df))
@@ -54,6 +58,20 @@ def test_salted_assembly_matches_oracle(spark):
             assert did not in got or got[did] == []
             continue
         assert _seq(got[did]) == want, f"salted assembly mismatch for {did}"
+    # the docs assembly loses are exactly the docs with no kept span
+    assert set(inline) - set(got) == {d for d, sp in inline.items() if not sp}
+    assert any(not sp for sp in inline.values())  # datagen's boilerplate-only doc
+
+    # both plans agree on the order-sensitive checksum xor and span count
+    def totals(extracted):
+        return tuple(
+            extracted.select(
+                F.bit_xor(checksum_spans_col(F.col("spans"))),
+                F.sum(F.size("spans")),
+            ).first()
+        )
+
+    assert totals(out) == totals(extract_inline(df))
 
 
 def test_mega_doc_salting_engaged(spark):

@@ -209,7 +209,7 @@ def test_incremental_curation_bucketed_state_no_exchange(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from bb_ocr_spark.plans.curate_incremental import (
-        committed_bucketed_fingerprints,
+        committed_rows,
         run_incremental_curation,
     )
 
@@ -243,7 +243,7 @@ def test_incremental_curation_bucketed_state_no_exchange(spark, tmp_path):
     # bucketed scan (broadcast disabled so the SMJ path is exercised)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        state_df = committed_bucketed_fingerprints(spark, state, table)
+        state_df = committed_rows(spark, state, table, "fp")
         probe = spark.createDataFrame(
             [("x",)], "fp string"
         ).repartition(16, "fp")
@@ -270,7 +270,7 @@ def test_bucketed_fp_state_compaction(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from bb_ocr_spark.plans.curate_incremental import (
-        committed_bucketed_fingerprints,
+        committed_rows,
         compact_bucketed_fingerprints,
         run_incremental_curation,
     )
@@ -296,14 +296,14 @@ def test_bucketed_fp_state_compaction(spark, tmp_path):
 
     before = {
         r["fp"]
-        for r in committed_bucketed_fingerprints(spark, state, table).collect()
+        for r in committed_rows(spark, state, table, "fp").collect()
     }
     assert len(before) == 40
     res = compact_bucketed_fingerprints(spark, state, table)
     assert res["compacted"] and res["rows"] == 40
     assert res["files_after"] < res["files_before"]
 
-    after_df = committed_bucketed_fingerprints(spark, state, table)
+    after_df = committed_rows(spark, state, table, "fp")
     assert {r["fp"] for r in after_df.collect()} == before
 
     # an 11th delivery still dedups correctly against the compacted state
@@ -318,7 +318,7 @@ def test_bucketed_fp_state_compaction(spark, tmp_path):
     # plan evidence unchanged: bucketed scan, no Exchange above it
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        state_df = committed_bucketed_fingerprints(spark, state, table)
+        state_df = committed_rows(spark, state, table, "fp")
         probe = spark.createDataFrame([("x",)], "fp string").repartition(16, "fp")
         plan = (
             probe.join(state_df, "fp", "left_anti")
@@ -367,21 +367,35 @@ def test_incremental_curation_near_dup_state(spark, tmp_path):
     """Cross-delivery NEAR-dup dedup: lightly-edited resubmissions (exact
     fingerprints can't catch them) die against the accumulated MinHash
     state; the candidate join reads the state side bucketed and
-    Exchange-free; survivors' signatures extend the state."""
+    Exchange-free; survivors' signatures extend the state. The exact-fp
+    and substring tiers run alongside, and after the fp state compacts a
+    delivery still meets all three."""
+    import os
     import shutil
 
     from pyspark.sql import functions as F
 
     from bb_ocr_spark.plans.curate_incremental import (
         _band_bucket_rows,
+        compact_bucketed_fingerprints,
         run_incremental_curation,
     )
 
     table = "mh_state_test"
+    fp_table, gram_table = "fp_state_tri_test", "gram_state_tri_test"
+    tiers = {
+        "minhash_state_table": table,
+        "bucketed_fp_table": fp_table,
+        "substr_state_table": gram_table,
+        "substr_k": 8,
+    }
+    state_tables = (f"{table}_buckets", f"{table}_sigs", fp_table, gram_table)
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in (f"{table}_buckets", f"{table}_sigs"):
+    for t in state_tables:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
+    for suffix in ("__compacting", "__precompact"):
+        shutil.rmtree(f"{warehouse}/{fp_table}{suffix}", ignore_errors=True)
     state = str(tmp_path / "state")
 
     def text(tag):
@@ -390,9 +404,7 @@ def test_incremental_curation_near_dup_state(spark, tmp_path):
     b1 = spark.createDataFrame(
         [(i, text(f"a{i}")) for i in range(6)], "doc_id long, text string"
     )
-    r1 = run_incremental_curation(
-        spark, b1, state, "run-1", minhash_state_table=table
-    )
+    r1 = run_incremental_curation(spark, b1, state, "run-1", **tiers)
     assert r1["n_new"] == 6
 
     # delivery 2: 2 genuinely new + 2 light edits of delivery-1 docs
@@ -403,21 +415,38 @@ def test_incremental_curation_near_dup_state(spark, tmp_path):
     ]
     rows2 = [(100 + i, text(f"b{i}")) for i in range(2)] + edited
     b2 = spark.createDataFrame(rows2, "doc_id long, text string")
-    r2 = run_incremental_curation(
-        spark, b2, state, "run-2", minhash_state_table=table
-    )
+    r2 = run_incremental_curation(spark, b2, state, "run-2", **tiers)
     assert r2["n_new"] == 2, r2
     assert r2["manifest"]["n_docs_total"] == 8
 
     # replay of a committed run is a no-op
-    r2b = run_incremental_curation(
-        spark, b2, state, "run-2", minhash_state_table=table
-    )
+    r2b = run_incremental_curation(spark, b2, state, "run-2", **tiers)
     assert r2b["replayed"] and r2b["manifest"]["n_docs_total"] == 8
 
     # only survivors' signatures entered the state (6 + 2 docs × 16 bands)
     assert spark.table(f"{table}_sigs").count() == 8
     assert spark.table(f"{table}_buckets").count() == 8 * 16
+
+    # after the fp state compacts, delivery 3's exact copy and light edit
+    # of delivery-1 docs die, and a 10-token run copied from a third is
+    # cut out of an otherwise new doc
+    c = compact_bucketed_fingerprints(spark, state, fp_table)
+    assert c["compacted"] and c["rows"] == 8
+    copied = " ".join(text("a2").split()[:10])
+    b3 = spark.createDataFrame(
+        [
+            (300, text("a0")),
+            (301, text("a3").replace("wa3_11", "edited")),
+            (302, f"{copied} {text('c0')}"),
+        ],
+        "doc_id long, text string",
+    )
+    r3 = run_incremental_curation(spark, b3, state, "run-3", **tiers)
+    assert r3["n_new"] == 1
+    stored = spark.read.parquet(os.path.join(state, "results", "run_id=run-3"))
+    assert [tuple(r) for r in stored.select("id", "text").collect()] == [
+        (302, text("c0"))
+    ]
 
     # plan evidence: the candidate join reads the bucket state bucketed,
     # no Exchange above the scan (probe side pays the only exchange)
@@ -436,7 +465,7 @@ def test_incremental_curation_near_dup_state(spark, tmp_path):
         assert plan.count("Exchange") <= 1, plan[:800]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    for t in (f"{table}_buckets", f"{table}_sigs"):
+    for t in state_tables:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -485,7 +514,7 @@ def test_incremental_substring_state_excises_cross_delivery_banner(
     from pyspark.sql import functions as F
 
     from bb_ocr_spark.plans.curate_incremental import (
-        committed_bucketed_grams,
+        committed_rows,
         run_incremental_curation,
     )
 
@@ -573,7 +602,7 @@ def test_incremental_substring_state_excises_cross_delivery_banner(
     # Exchange-free (broadcast disabled to exercise the SMJ path)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        gstate = committed_bucketed_grams(spark, state, table)
+        gstate = committed_rows(spark, state, table, "g")
         probe = spark.createDataFrame([(1,)], "g long").repartition(16, "g")
         plan = (
             probe.join(gstate, "g", "left_semi")

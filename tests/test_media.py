@@ -12,7 +12,6 @@ from bb_ocr_spark.sources.media import (
     extract_image_features,
     fake_decode,
     fake_encode,
-    frame_sample_plan,
     generate_media_df,
     have_real_decoder,
     resize_stub,
@@ -71,83 +70,3 @@ def test_media_pipeline(spark, tmp_path):
     small = meta_stage.filter(F.col("resize_ratio") < 1.0).collect()
     for r in small:
         assert max(r["target_width"], r["target_height"]) <= 32
-
-
-def test_frame_sample_plan():
-    assert frame_sample_plan(10, 3) == [0, 3, 6, 9]
-    assert frame_sample_plan(2, 0) == [0, 1]
-
-
-def test_video_frame_sampling(spark):
-    import numpy as np
-    import pandas as pd
-
-    from bb_ocr_spark.sources.media import (
-        fake_decode_video,
-        fake_encode_video,
-        sample_video_frames,
-    )
-
-    vids = pd.DataFrame(
-        {
-            "media_ref": ["v0", "v1", "bad"],
-            "content": [
-                fake_encode_video("v0", 8, 6, 20),
-                fake_encode_video("v1", 4, 4, 3),
-                b"not a video",
-            ],
-        }
-    )
-    df = spark.createDataFrame(vids)
-    out = sample_video_frames(df, every_n=8).collect()
-    by_ref = {}
-    for r in out:
-        by_ref.setdefault(r["media_ref"], []).append(r)
-    # 20 frames sampled every 8 -> indices 0, 8, 16
-    assert sorted(r["frame_idx"] for r in by_ref["v0"]) == [0, 8, 16]
-    # sampled frame bytes equal the container's frame plane exactly
-    _, _, _, frame = fake_decode_video(fake_encode_video("v0", 8, 6, 20))
-    got8 = next(r for r in by_ref["v0"] if r["frame_idx"] == 8)
-    assert bytes(got8["content"]) == frame(8).tobytes()
-    assert got8["frame_mean"] == round(float(frame(8).mean()), 6)
-    assert [r["frame_idx"] for r in by_ref["v1"]] == [0]
-    # error-as-column: the corrupt payload yields one row with the error
-    assert len(by_ref["bad"]) == 1 and by_ref["bad"][0]["error"]
-    assert by_ref["bad"][0]["frame_idx"] is None
-
-
-def test_audio_window_features(spark):
-    import numpy as np
-    import pandas as pd
-
-    from bb_ocr_spark.sources.media import (
-        audio_window_features,
-        fake_decode_audio,
-        fake_encode_audio,
-    )
-
-    auds = pd.DataFrame(
-        {
-            "media_ref": ["a0", "short", "bad"],
-            "content": [
-                fake_encode_audio("a0", 4096),
-                fake_encode_audio("short", 100),  # < one window -> no rows
-                b"junk",
-            ],
-        }
-    )
-    df = spark.createDataFrame(auds)
-    out = audio_window_features(df, window=1024).collect()
-    rows = [r for r in out if r["media_ref"] == "a0"]
-    assert [r["win_idx"] for r in sorted(rows, key=lambda r: r["win_idx"])] == [0, 1, 2, 3]
-    # numpy reference for window 1
-    rate, pcm = fake_decode_audio(fake_encode_audio("a0", 4096))
-    x = pcm[1024:2048].astype("float64")
-    want_rms = round(float(np.sqrt((x * x).mean())), 6)
-    want_zc = int((np.diff(np.signbit(x)) != 0).sum())
-    r1 = next(r for r in rows if r["win_idx"] == 1)
-    assert r1["rms"] == want_rms and r1["zero_crossings"] == want_zc
-    assert r1["start_sec"] == round(1024 / rate, 6)
-    assert not any(r["media_ref"] == "short" for r in out)
-    bad = [r for r in out if r["media_ref"] == "bad"]
-    assert len(bad) == 1 and bad[0]["error"]

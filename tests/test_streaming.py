@@ -457,8 +457,9 @@ def test_stream_empty_epoch_commits_zero_docs(spark, tmp_path):
     # an epoch over a zero-row file commits a 0-doc run whose lineage
     # reconciles with its manifest, like a batch no-op rerun
     from bb_ocr_spark import datagen
+    from bb_ocr_spark.operators.extract import SPANS_SCHEMA_DDL
     from bb_ocr_spark.plans.snapshots import current_snapshot
-    from bb_ocr_spark.streaming.extract_stream import DOCS_SCHEMA_DDL, run_extract_stream
+    from bb_ocr_spark.streaming.extract_stream import run_extract_stream
     from lineage_checks import assert_lineage_matches_manifest
 
     docs_dir = str(tmp_path / "docs")
@@ -467,7 +468,7 @@ def test_stream_empty_epoch_commits_zero_docs(spark, tmp_path):
     datagen.generate_df(spark, 20, partitions=2).write.parquet(docs_dir)
     run_extract_stream(spark, docs_dir, out, ckpt)
     s1 = current_snapshot(out)
-    spark.createDataFrame([], DOCS_SCHEMA_DDL).coalesce(1).write.mode("append").parquet(
+    spark.createDataFrame([], SPANS_SCHEMA_DDL).coalesce(1).write.mode("append").parquet(
         docs_dir
     )
     run_extract_stream(spark, docs_dir, out, ckpt)

@@ -649,6 +649,8 @@ def test_substring_dedup_planted_banner(spark):
     # the banner survives ONLY in the globally-first doc
     assert banner in out[0]["text_dedup"]
     assert out[0]["n_dup_tokens"] == 0
+    # every later copy loses exactly the banner: 60 of its 67 tokens
+    assert all(out[d]["n_dup_tokens"] == 60 for d in range(1, 1000))
     for d in (1, 17, 999):
         r = out[d]
         assert banner not in r["text_dedup"]
@@ -759,7 +761,10 @@ def test_materialize_shards_roundtrip(spark):
     )
     asg = assign_shards_atomic(w, budget=100, key_col="doc_id", chunk=4)
     shards = materialize_shards(asg, df).collect()
+    n_tokens = w.agg(F.sum("n_tokens")).first()[0]
     release_persisted()
+    assert sum(s["n_tokens"] for s in shards) == n_tokens
+    assert sum(s["n_docs"] for s in shards) == len(docs)
 
     want = dict(docs)
     got = {}
@@ -944,6 +949,22 @@ def test_pq_adc_recall_and_determinism(spark):
     again = pq_topk(corpus.repartition(13), queries, books, k=3).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, out))
 
+    # scaled twins: unit normalization encodes c*q as q, so each query's
+    # 4 scaled copies hold its best ADC distance and fill the top-4
+    twins = spark.createDataFrame(
+        [
+            (100_000 * t + i, [float(v) * (1 + 0.0001 * t) for v in base])
+            for i, base in enumerate(qs)
+            for t in range(1, 5)
+        ]
+        + rows[3 * n_q :],
+        "vec_id long, embedding array<double>",
+    )
+    top4 = {}
+    for r in pq_topk(twins, queries, books, k=4).collect():
+        top4.setdefault(r["query_id"], set()).add(r["vec_id"])
+    assert top4 == {i: {100_000 * t + i for t in range(1, 5)} for i in range(n_q)}
+
 
 def test_chunk_documents_coverage_and_overlap(spark):
     """Every token is covered; consecutive chunks share exactly
@@ -976,6 +997,11 @@ def test_chunk_documents_coverage_and_overlap(spark):
     for i, r in sorted(c1.items()):
         assert r["text_chunk"].split(" ") == toks1[i * step : i * step + 10]
 
+    # each chunk after a doc's first re-counts `overlap` tokens
+    n_chunks = sum(len(c) for c in chunks.values())
+    assert sum(r["n_tokens"] for c in chunks.values() for r in c.values()) == (
+        50 + 10 + 3 + 0 + 3 * (n_chunks - len(rows))
+    )
     assert len(chunks[2]) == 1 and chunks[2][0]["n_tokens"] == 10
     assert len(chunks[3]) == 1 and chunks[3][0]["text_chunk"] == "a b c"
     assert len(chunks[4]) == 1 and chunks[4][0]["n_tokens"] == 0
@@ -1179,12 +1205,15 @@ def test_ivfpq_residual_beats_direct(spark):
     """Residual encoding (classical IVFADC) must not lose recall vs
     direct encoding at the same bit budget on noisy planted twins —
     the codebooks only cover the residual ball, so quantization error
-    shrinks. Deterministic across partitioning."""
+    shrinks — both on isotropic data and on tight coarse clusters, where
+    recommend_pq_encoding picks residual. Deterministic across
+    partitioning."""
     import numpy as np
 
     from bb_ocr_spark.operators.similarity import (
         ivfpq_topk,
         ivfpq_topk_residual,
+        recommend_pq_encoding,
         train_centroids,
         train_pq_codebooks,
         train_residual_codebooks,
@@ -1192,24 +1221,26 @@ def test_ivfpq_residual_beats_direct(spark):
 
     rng = np.random.RandomState(31)
     n_q, dim = 15, 64
-    qs = rng.randn(n_q, dim)
-    rows, qrows = [], []
-    vid = 1000
-    for i, base in enumerate(qs):
-        qrows.append((i, [float(v) for v in base]))
-        for _ in range(3):
-            rows.append((vid, [float(v) for v in base + 0.4 * rng.randn(dim)]))
-            vid += 1
-    for _ in range(400):
-        rows.append((vid, [float(v) for v in rng.randn(dim)]))
-        vid += 1
-    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = spark.createDataFrame(qrows, "vec_id long, embedding array<double>")
     planted = {i: {1000 + 3 * i, 1001 + 3 * i, 1002 + 3 * i} for i in range(n_q)}
 
-    cents = train_centroids(corpus, n_centroids=16)
-    direct_books = train_pq_codebooks(corpus, m=8, ksub=16)
-    res_books = train_residual_codebooks(corpus, cents, m=8, ksub=16)
+    def frames(qs, twin_noise, distractor):
+        rows, qrows = [], []
+        vid = 1000
+        for i, base in enumerate(qs):
+            qrows.append((i, [float(v) for v in base]))
+            for _ in range(3):
+                rows.append(
+                    (vid, [float(v) for v in base + twin_noise * rng.randn(dim)])
+                )
+                vid += 1
+        for _ in range(400):
+            rows.append((vid, [float(v) for v in distractor()]))
+            vid += 1
+        schema = "vec_id long, embedding array<double>"
+        return (
+            spark.createDataFrame(rows, schema),
+            spark.createDataFrame(qrows, schema),
+        )
 
     def recall(out):
         got = {}
@@ -1218,13 +1249,20 @@ def test_ivfpq_residual_beats_direct(spark):
         hits = sum(len(planted[q] & got.get(q, set())) for q in planted)
         return hits / (3 * n_q)
 
-    r_direct = recall(
-        ivfpq_topk(corpus, queries, cents, direct_books, k=3, n_probe=4).collect()
-    )
-    res_out = ivfpq_topk_residual(
-        corpus, queries, cents, res_books, k=3, n_probe=4
-    ).collect()
-    r_res = recall(res_out)
+    def both_recalls(corpus, queries):
+        cents = train_centroids(corpus, n_centroids=16)
+        direct_books = train_pq_codebooks(corpus, m=8, ksub=16)
+        res_books = train_residual_codebooks(corpus, cents, m=8, ksub=16)
+        r_direct = recall(
+            ivfpq_topk(corpus, queries, cents, direct_books, k=3, n_probe=4).collect()
+        )
+        res_out = ivfpq_topk_residual(
+            corpus, queries, cents, res_books, k=3, n_probe=4
+        ).collect()
+        return r_direct, recall(res_out), res_out, cents, res_books
+
+    corpus, queries = frames(rng.randn(n_q, dim), 0.4, lambda: rng.randn(dim))
+    r_direct, r_res, res_out, cents, res_books = both_recalls(corpus, queries)
     assert r_res >= r_direct, (r_direct, r_res)
     assert r_res >= 0.6, (r_direct, r_res)
 
@@ -1232,6 +1270,17 @@ def test_ivfpq_residual_beats_direct(spark):
         corpus.repartition(11), queries, cents, res_books, k=3, n_probe=4
     ).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, res_out))
+
+    centers = rng.randn(16, dim)
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    corpus, queries = frames(
+        centers[rng.randint(16, size=n_q)] + 0.15 * rng.randn(n_q, dim),
+        0.1,
+        lambda: centers[rng.randint(16)] + 0.15 * rng.randn(dim),
+    )
+    r_direct, r_res, _, cents, _ = both_recalls(corpus, queries)
+    assert recommend_pq_encoding(corpus, cents)["encoding"] == "residual"
+    assert r_res >= r_direct, (r_direct, r_res)
 
 
 def test_training_readers_agree_when_cap_binds(spark, tmp_path):
@@ -1516,6 +1565,14 @@ def test_bpe_merges_greedy_and_tiebreak(spark):
     out2 = [tuple(r) for r in learn_bpe_merges(df2, num_merges=1).collect()]
     assert out2 == [(1, "a", "d", 1)]
 
+    # a pair stamped 3x into each of 5 docs is rank 1 at its exact count
+    df3 = spark.createDataFrame(
+        [(d, f"u{d} x y v{d} x y w{d} x y") for d in range(5)] + [(9, "x z")],
+        "doc_id long, text string",
+    )
+    out3 = [tuple(r) for r in learn_bpe_merges(df3, num_merges=1).collect()]
+    assert out3 == [(1, "x", "y", 15)]
+
 
 def test_c4_clean_rules(spark):
     """Line rules: terminal punctuation + >=5 words + no 'javascript';
@@ -1651,6 +1708,8 @@ def test_quality_classifier_reference(spark):
     assert out[1]["mean_score"] == round(s1 / 3e6, 6)
     s2 = weight(bucket("c", 4096, "qc"))
     assert out[2]["n_features"] == 1 and out[2]["score_sum_micro"] == s2
+    # the two docs score with opposite signs: keep follows the sign
+    assert s1 < 0 < s2 and out[2]["qc_keep"]
     assert out[3]["n_features"] == 0 and not out[3]["qc_keep"]
 
 
@@ -1685,6 +1744,8 @@ def test_bpe_encode_fuzz_python_reference(spark):
            for r in bpe_encode(df, merges_df).collect()}
     for d, text in rows:
         assert out[d] == py_encode(text), (d, text, merges)
+        # merging only joins symbols: every character is kept, in order
+        assert "".join(out[d]) == "".join(text.lower().split())
 
 
 def test_bigram_surprisal_fuzz_python_reference(spark):
@@ -1695,7 +1756,7 @@ def test_bigram_surprisal_fuzz_python_reference(spark):
     from collections import Counter
 
     from bb_ocr_spark.cache import release_persisted
-    from bb_ocr_spark.operators.search import bigram_surprisal
+    from bb_ocr_spark.operators.search import bigram_surprisal, unigram_surprisal
 
     rng = random.Random("bifuzz:3")
     vocab = [f"w{i}" for i in range(9)]
@@ -1703,8 +1764,11 @@ def test_bigram_surprisal_fuzz_python_reference(spark):
         (d, " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 15))))
         for d in range(80)
     ]
+    # a doc of once-seen tokens: every one of its transitions is memorized
+    rows.append((80, " ".join(f"g{j}" for j in range(20))))
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {r["doc_id"]: r for r in bigram_surprisal(df).collect()}
+    uni = {r["doc_id"]: r for r in unigram_surprisal(df).collect()}
     release_persisted()
 
     cu: Counter = Counter()
@@ -1726,6 +1790,15 @@ def test_bigram_surprisal_fuzz_python_reference(spark):
             s += round(-math.log(p) * 1e6)
         assert out[d]["n_tokens"] == len(t), d
         assert out[d]["surprisal_micronats"] == s, (d, text)
+        # vs the unigram pass: the same tokens, and the mixture's
+        # (1 - lam) unigram share bounds each later token's surprisal by
+        # the unigram one + ln 4 (+ one micro-nat of rounding per token)
+        u = uni[d]
+        assert u["n_tokens"] == len(t), d
+        assert s <= u["surprisal_micronats"] + max(len(t) - 1, 0) * round(
+            math.log(4) * 1e6
+        ) + len(t), d
+    assert out[80]["mean_surprisal_nats"] < uni[80]["mean_surprisal_nats"] / 2
 
 
 def test_quality_classifier_sparse_weights(spark):
@@ -1865,6 +1938,10 @@ def test_perplexity_buckets_frozen_lm(spark):
         out[d]["mean_surprisal_nats"] != self_out[d]["mean_surprisal_nats"]
         for d in out
     )
+    # all-unique-token docs hold the maximal surprisal of the self-trained
+    # model too
+    for i in range(4):
+        assert self_out[100 + i]["ppl_bucket"] == "tail", self_out[100 + i]
 
 
 def test_minhash_pin_gate_scale_adaptive(spark, monkeypatch, tmp_path):
