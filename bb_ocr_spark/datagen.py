@@ -7,7 +7,7 @@ Per FIXTURES.md §1: spans are written in PERMUTED order (the engine must
 restore offset order); text spans embed ISBN/year/publisher/price patterns
 (deterministic targets for the heuristic extractor, reference analog
 hueristics/book_extractor.py:11-29); boilerplate spans carry nav/footer
-template text; a ~0.1% skew tail of mega-docs exercises salted assembly;
+template text; a ~0.1% skew tail of mega-docs exercises exploded assembly;
 edge docs: zero-text, only-boilerplate, duplicate-text, unicode.
 
 The per-doc kernel `gen_doc(i)` is plain Python seeded on (SEED, i) only,

@@ -505,8 +505,6 @@ def paragraph_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     sep: str = "\n",
-    salt_threshold: int = config.BIG_DOC_SPAN_THRESHOLD,
-    salt_buckets: int = config.ASSEMBLY_SALT_BUCKETS,
 ) -> DataFrame:
     """Corpus-wide paragraph dedup: each exact paragraph (normalized:
     trimmed, ws-squeezed) survives only at its FIRST occurrence — min
@@ -516,37 +514,23 @@ def paragraph_dedup(
 
     Scale shape: explode → aggregate winners on the 8-byte paragraph HASH
     (text never shuffles for the winner pass) → hash-join back → rebuild
-    per doc. The rebuild is the same single salted two-phase as
-    assemble.assemble_spans: a mega-doc with 10^6 paragraphs would make
-    one collect_list reducer the straggler/OOM, so docs over
-    salt_threshold paragraphs aggregate per (id, pos % salt_buckets),
-    every other doc per (id, 0), and phase 2 flattens and sorts per id.
-    One aggregation instead of a small/big union means the split,
-    explode, normalize and winners join run once, not once per branch;
-    small docs' sub-arrays cross the second shuffle in exchange. The salt
-    decision is row-local: n_paras is folded into each row at explode
-    time from the materialized split array (a separate size() projection
-    would be collapsed past the Generate and every exploded row would
-    carry the whole array — the O(n²) Generate-carry trap).
+    per doc. The rebuild is the same one aggregation as
+    assemble.assemble_spans: one groupBy(id) collects the kept
+    (pos, para) structs and sorts them once per doc, next to the kept and
+    dropped counts. A mega-doc's rows still go to one reducer; the
+    map-side partial collect_list spreads the row-level work, and a salted
+    second phase would only add a shuffle of every kept paragraph.
 
     Returns (id, text_dedup, n_kept, n_dropped)."""
-    base = df.select(
-        F.col(id_col).alias("id"), F.split(F.col(text_col), sep).alias("_arr")
-    )
-    with_n = F.transform(
-        "_arr",
-        lambda p, i: F.struct(
-            i.cast("int").alias("pos"),
-            p.alias("para"),
-            F.size("_arr").alias("n_paras"),
-        ),
-    )
     paras = (
-        # inline_outer: a plain inline's inferred filter re-embeds the
-        # struct-building transform per row (Generate-filter trap); the
-        # null row an outer generate emits for a null text is dropped by
-        # the para != '' filter below
-        base.select("id", F.inline_outer(with_n))
+        df.select(
+            F.col(id_col).alias("id"), F.split(F.col(text_col), sep).alias("_arr")
+        )
+        # posexplode_outer: a plain posexplode's inferred filter re-embeds
+        # the split per row (Generate-filter trap); the null row an outer
+        # generate emits for a null text is dropped by the para != ''
+        # filter below
+        .select("id", F.posexplode_outer("_arr").alias("pos", "para"))
         .withColumn("para", F.regexp_replace(F.trim("para"), r"\s+", " "))
         .filter(F.col("para") != "")
         .withColumn("fp", F.xxhash64("para"))
@@ -554,23 +538,19 @@ def paragraph_dedup(
     winners = paras.groupBy("fp").agg(
         F.min(F.struct("id", "pos")).alias("w")
     )
-    kept = paras.join(winners, "fp").withColumn(
-        "keep", (F.col("id") == F.col("w.id")) & (F.col("pos") == F.col("w.pos"))
-    )
-    kept_struct = F.when(F.col("keep"), F.struct("pos", "para"))
-    salt = F.when(
-        F.col("n_paras") > salt_threshold, F.pmod("pos", F.lit(salt_buckets))
-    ).otherwise(0)
-    phase1 = kept.groupBy("id", salt.alias("salt")).agg(
-        F.collect_list(kept_struct).alias("part"),
-        F.sum(F.col("keep").cast("long")).alias("k1"),
-        F.sum((~F.col("keep")).cast("long")).alias("d1"),
-    )
-    rebuilt = phase1.groupBy("id").agg(
-        # ONE global per-doc sort — order correctness under salting
-        F.array_sort(F.flatten(F.collect_list("part"))).alias("ps"),
-        F.sum("k1").alias("n_kept"),
-        F.sum("d1").alias("n_dropped"),
+    keep = (F.col("id") == F.col("w.id")) & (F.col("pos") == F.col("w.pos"))
+    rebuilt = (
+        paras.join(winners, "fp")
+        .withColumn("keep", keep)
+        .groupBy("id")
+        .agg(
+            # collect_list skips the NULL a dropped paragraph yields
+            F.sort_array(
+                F.collect_list(F.when(F.col("keep"), F.struct("pos", "para")))
+            ).alias("ps"),
+            F.sum(F.col("keep").cast("long")).alias("n_kept"),
+            F.sum((~F.col("keep")).cast("long")).alias("n_dropped"),
+        )
     )
     return rebuilt.select(
         "id",

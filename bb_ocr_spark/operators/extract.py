@@ -9,7 +9,7 @@ and every expression is JVM-side (whole-stage codegen), no Python in the
 hot path at all.
 
 Mega-doc skew costs nothing here: a 10^5-span doc is one wide row processed
-vectorized; there is no hot reduce key. (The salted two-phase path for
+vectorized; there is no hot reduce key. (The one-aggregation path for
 inputs that arrive as EXPLODED span rows lives in operators/assemble.py.)
 
 Reference parity: boilerplate strip = block classifier analog

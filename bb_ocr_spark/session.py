@@ -8,9 +8,28 @@ comparability).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+
+
+def default_cores() -> int:
+    """`SPARK_GRAFT_CPUS` when it is a positive integer; unset, empty or 0
+    means the machine's CPU count. Any other value logs a WARNING and falls
+    back to the CPU count instead of failing the session start."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
+    try:
+        cores = int(raw or "0")
+    except ValueError:
+        cores = -1
+    if cores < 0:
+        _log.warning(
+            "SPARK_GRAFT_CPUS=%r is not a core count; using os.cpu_count()", raw
+        )
+    return cores if cores > 0 else (os.cpu_count() or 8)
 
 
 def get_spark(
@@ -20,7 +39,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (

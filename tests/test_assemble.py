@@ -1,6 +1,7 @@
-"""Exploded-path assembly: salted two-phase result == inline result ==
-oracle, including the mega-doc (salting actually engages) — and salting
-preserves GLOBAL per-doc offset order (SURVEY §7 hard part)."""
+"""Exploded-path assembly: the one-aggregation result == inline result ==
+oracle, including the datagen mega-doc — one global per-doc sort keeps the
+offset order whatever order the partial buffers merge in (SURVEY §7 hard
+part)."""
 
 from __future__ import annotations
 
@@ -11,7 +12,6 @@ from bb_ocr_spark.operators.assemble import (
     assemble_spans,
     explode_spans,
     filter_spans,
-    with_span_counts,
 )
 from bb_ocr_spark.operators.extract import (
     SPANS_SCHEMA_DDL,
@@ -38,7 +38,7 @@ def _seq(spans):
     return [(s["kind"], s["text"], s["media_ref"]) for s in spans]
 
 
-def test_salted_assembly_matches_oracle(spark):
+def test_assembly_matches_oracle(spark):
     docs = dict(datagen.gen_doc(i) for i in range(N_DOCS))
     docs[KEEP_RULE_DOC[0]] = KEEP_RULE_DOC[1]
     extra = spark.createDataFrame(
@@ -46,9 +46,10 @@ def test_salted_assembly_matches_oracle(spark):
         SPANS_SCHEMA_DDL,
     )
     df = datagen.generate_df(spark, N_DOCS, partitions=6).unionByName(extra)
-    exploded = filter_spans(explode_spans(df))
-    # tiny threshold/buckets so salting engages on many docs, not just mega
-    out = assemble_spans(exploded, salt_threshold=8, salt_buckets=4)
+    # scatter the span rows so every doc's spans reach its reducer from
+    # several map tasks, out of offset order
+    exploded = filter_spans(explode_spans(df)).repartition(4)
+    out = assemble_spans(exploded)
     got = {r["doc_id"]: r["spans"] for r in out.collect()}
     inline = {r["doc_id"]: r["spans"] for r in extract_inline(df).collect()}
     for did, spans in docs.items():
@@ -57,7 +58,7 @@ def test_salted_assembly_matches_oracle(spark):
         if not want:  # groupBy drops docs with zero kept spans
             assert did not in got or got[did] == []
             continue
-        assert _seq(got[did]) == want, f"salted assembly mismatch for {did}"
+        assert _seq(got[did]) == want, f"assembly mismatch for {did}"
     # the docs assembly loses are exactly the docs with no kept span
     assert set(inline) - set(got) == {d for d, sp in inline.items() if not sp}
     assert any(not sp for sp in inline.values())  # datagen's boilerplate-only doc
@@ -80,45 +81,7 @@ def test_mega_doc_salting_engaged(spark):
     mega = exploded.filter(exploded.doc_id == datagen.doc_id_of(7))
     n = mega.count()
     assert n >= 2000
-    out = assemble_spans(filter_spans(exploded))  # default threshold 512
+    out = assemble_spans(filter_spans(exploded))
     row = out.filter(out.doc_id == datagen.doc_id_of(7)).collect()[0]
     want = oracle.extract_doc(datagen.gen_doc(7)[1])
     assert _seq(row["spans"]) == want
-
-
-def test_null_span_counts_are_assembled(spark):
-    # a producer that lost n_spans on some rows (every third offset, and
-    # every row of doc 1) must still get those spans assembled: NULL
-    # fails both `<= threshold` and `> threshold`, so it must not decide
-    # whether a row is kept
-    df = datagen.generate_df(spark, 8, partitions=2)
-    lossy = explode_spans(df).withColumn(
-        "n_spans",
-        F.when(
-            (F.col("offset") % 3 != 0) & (F.col("doc_id") != datagen.doc_id_of(1)),
-            F.col("n_spans"),
-        ),
-    )
-    assert lossy.filter(F.col("n_spans").isNull()).count() > 0
-    kept = filter_spans(lossy)
-    got = {r["doc_id"]: r["spans"] for r in assemble_spans(kept).collect()}
-    for i in range(8):
-        did, spans = datagen.gen_doc(i)
-        want = oracle.extract_doc(spans)
-        if want:
-            assert _seq(got[did]) == want, f"NULL n_spans rows lost for {did}"
-    # every doc salted: NULL rows share salt 0 with nothing else changed
-    salted = assemble_spans(kept, salt_threshold=0)
-    assert {r["doc_id"]: r["spans"] for r in salted.collect()} == got
-
-
-def test_with_span_counts(spark):
-    df = datagen.generate_df(spark, 10, partitions=2)
-    bare = explode_spans(df).drop("n_spans")
-    counted = with_span_counts(bare)
-    sizes = {
-        r["doc_id"]: r["n_spans"]
-        for r in counted.select("doc_id", "n_spans").distinct().collect()
-    }
-    for i in range(10):
-        assert sizes[datagen.doc_id_of(i)] == len(datagen.gen_doc(i)[1])

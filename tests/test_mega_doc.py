@@ -1,12 +1,10 @@
 """FIXTURES.md §1 skew tail at full size: a 10^5-span doc must extract and
-assemble correctly (and without OOM) on both the inline and the salted
-exploded paths."""
+assemble correctly (and without OOM) on both the inline and the exploded
+paths, with the exploded rows contiguous or scattered over partitions."""
 
 from __future__ import annotations
 
 import random
-
-from pyspark.sql import functions as F
 
 from bb_ocr_spark import oracle
 from bb_ocr_spark.operators.assemble import assemble_spans, explode_spans, filter_spans
@@ -41,39 +39,45 @@ def _mega_doc():
     return spans
 
 
+def _mega_df(spark, spans):
+    rows = [("mega", [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans])]
+    return spark.createDataFrame(
+        rows, "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    )
+
+
+def _seq(spans):
+    return [(s["kind"], s["text"], s["media_ref"]) for s in spans]
+
+
 def test_mega_doc_both_paths(spark):
     spans = _mega_doc()
     golden = oracle.extract_doc(spans)
     assert len(golden) > 50_000
-
-    rows = [("mega", [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans])]
-    df = spark.createDataFrame(
-        rows, "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-    )
+    df = _mega_df(spark, spans)
 
     inline = extract_inline(df).collect()[0]["spans"]
-    assert [(s["kind"], s["text"], s["media_ref"]) for s in inline] == golden
+    assert _seq(inline) == golden
 
-    salted = assemble_spans(
-        filter_spans(explode_spans(df)), salt_threshold=512, salt_buckets=16
-    ).collect()[0]["spans"]
-    assert [(s["kind"], s["text"], s["media_ref"]) for s in salted] == golden
+    assembled = assemble_spans(filter_spans(explode_spans(df))).collect()[0]["spans"]
+    assert _seq(assembled) == golden
 
-    # salting must actually engage: phase-1 groups > 1
-    exploded = filter_spans(explode_spans(df))
-    n_groups = (
-        exploded.withColumn("salt", F.pmod(F.col("offset"), F.lit(16)))
-        .select("doc_id", "salt")
-        .distinct()
-        .count()
-    )
-    assert n_groups == 16
+
+def test_mega_doc_scattered_rows_assemble(spark):
+    # the doc's span rows spread over 16 partitions: its reducer merges 16
+    # partial collect_list buffers, and only the one global sort restores
+    # offset order
+    spans = _mega_doc()
+    exploded = explode_spans(_mega_df(spark, spans)).repartition(16)
+    assert exploded.rdd.getNumPartitions() == 16
+    assembled = assemble_spans(filter_spans(exploded)).collect()[0]["spans"]
+    assert _seq(assembled) == oracle.extract_doc(spans)
 
 
 def test_mega_doc_paragraph_dedup_salted(spark):
-    # a 10^5-paragraph doc must rebuild through the salted two-phase path
-    # (its rows exceed salt_threshold) with exact first-occurrence
-    # semantics; a small doc sharing paragraphs takes the single salt-0 bucket
+    # a 10^5-paragraph doc must rebuild through the one per-doc aggregation
+    # with exact first-occurrence semantics, next to a small doc sharing
+    # one of its paragraphs
     n = 100_000
     mega_paras = [f"para {i} tok{i % 977}" for i in range(n)]
     # plant within-doc repeats: every 1000th paragraph duplicates para 0
@@ -85,12 +89,7 @@ def test_mega_doc_paragraph_dedup_salted(spark):
 
     from bb_ocr_spark.operators.dedup import paragraph_dedup
 
-    out = {
-        r["id"]: r
-        for r in paragraph_dedup(
-            df, salt_threshold=512, salt_buckets=16
-        ).collect()
-    }
+    out = {r["id"]: r for r in paragraph_dedup(df).collect()}
     mega = out["a_mega"]
     dup_count = (n - 1000) // 1000  # planted repeats of para 0
     assert mega["n_dropped"] == dup_count

@@ -56,9 +56,11 @@ def test_dim_join_is_broadcast(spark, sf_dir):
 
 
 def test_exploded_assembly_scans_once(spark):
-    """Every doc takes one salted two-phase aggregation: the input is
-    exploded (and run through the keep kernel) once, with no small/big
-    branch union re-scanning it."""
+    """Every doc takes one aggregation: the input is exploded (and run
+    through the keep kernel) once, with no small/big branch union
+    re-scanning it, and the span rows cross one shuffle on doc_id."""
+    import re
+
     from bb_ocr_spark.operators.assemble import (
         assemble_spans,
         explode_spans,
@@ -66,9 +68,16 @@ def test_exploded_assembly_scans_once(spark):
     )
 
     df = datagen.generate_df(spark, 8, partitions=2)
-    p = plan_of(assemble_spans(filter_spans(explode_spans(df))))
+    qe = assemble_spans(filter_spans(explode_spans(df)))._jdf.queryExecution()
+    p = qe.executedPlan().toString()
     assert p.count("Generate") == 1, p
     assert "Union" not in p, p
+    assert p.count("Exchange hashpartitioning") == 1, p
+    # the codegen'd sort_array, not array_sort's interpreted lambda comparator
+    assert "array_sort" not in qe.optimizedPlan().toString()
+    # the Generate keeps only doc_id from its child: a spans-derived column
+    # kept beside it would ride on every exploded row (O(n²) per doc)
+    assert re.search(r"Generate inline\(spans#\d+\), \[doc_id#\d+\],", p), p
 
 
 def test_anti_join_resume_shape(spark, tmp_path):

@@ -41,8 +41,8 @@ def job():
     out = extract_inline(df).withColumn("ck", checksum_spans_col(F.col("spans")))
     return out.selectExpr("bit_xor(ck) as x", "count(*) as n").collect()[0]
 def job_shuffle():
-    # exploded-span reassembly: a REAL shuffle on doc_id with the salted
-    # skew-tail path — evidences that shuffle scaling also holds
+    # exploded-span reassembly: a REAL shuffle on doc_id, mega-doc tail
+    # included — evidences that shuffle scaling also holds
     out = assemble_spans(filter_spans(explode_spans(df))).withColumn(
         "ck", checksum_spans_col(F.col("spans")))
     return out.selectExpr("bit_xor(ck) as x", "count(*) as n").collect()[0]
@@ -144,7 +144,7 @@ def main() -> None:
             f"**Scaling efficiency = (T_{n_small} / T_{n_small * 4}) / 4 = "
             f"{eff:.3f}** (target >= 0.8). Output checksums identical at "
             f"both levels.\n\n"
-            f"Shuffle path (exploded-span salted reassembly, a real "
+            f"Shuffle path (exploded-span reassembly, a real "
             f"doc_id shuffle): local[{n_small}] {small['sec_shuffle']}s vs "
             f"local[{n_small * 4}] {big['sec_shuffle']}s -> efficiency "
             f"**{eff_sh:.3f}**; checksums identical.\n"
